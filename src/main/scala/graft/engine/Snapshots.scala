@@ -63,12 +63,16 @@ object MergeClause {
   * version is derived by listing `_snapshots/` (one listing of a directory
   * holding one small file per commit — never a data-file listing).
   *
-  * Scale shape: reads are `spark.read.parquet(files…)` on the manifest's
-  * explicit file list — no directory listing of the data tree at all, which
-  * at lake scale (millions of objects) is the difference between plan-time
-  * milliseconds and minutes. Compaction commits a rewritten file set as a
-  * NEW version: pinned readers keep their files (vacuum is the explicit,
-  * separate destruction step), and the head flips atomically.
+  * Scale shape: reads scan a [[ManifestFileIndex]] over the manifest's
+  * explicit file list and the file sizes its shards recorded — planning
+  * makes no file-system call at all: no directory listing of the data
+  * tree, no per-file status request, no listing job however many files the
+  * version holds (only files from shards that recorded no size are
+  * stat-ed). At lake scale (millions of objects, one object-store request
+  * each) that is the difference between plan-time milliseconds and
+  * minutes. Compaction commits a rewritten file set as a NEW version:
+  * pinned readers keep their files (vacuum is the explicit, separate
+  * destruction step), and the head flips atomically.
   */
 object Snapshots {
 
@@ -738,24 +742,9 @@ object Snapshots {
       s"commit tags may not start with the reserved '$OptimizeTag' prefix " +
         "(internal marker for row-preserving layout rewrites)")
     val spark = df.sparkSession
-    // column-mapping translation for appends onto an evolved table: the
-    // batch arrives with LOGICAL names, files store PHYSICAL ones. An
-    // overwrite starts a fresh schema (physical = logical) — its files
-    // don't coexist with prior generations. Physical names are
-    // rename-stable, so the head read here cannot go stale against the
-    // optimistic publish loop below (concurrent commits only ADD columns).
-    val (toPhys, assigned) =
-      if (!append) (Map.empty[String, String], Map.empty[String, String])
-      else {
-        val headV0 = headVersion(spark, root)
-        if (headV0 == 0) (Map.empty[String, String], Map.empty[String, String])
-        else {
-          val m0 = manifestMeta(spark, root, headV0)
-          val ps = parseSchemaStr(m0.schema)
-          val fresh = freshPhysicals(ps, m0.retired, df.schema)
-          (ps.map(logicalToPhysical).getOrElse(Map.empty) ++ fresh, fresh)
-        }
-      }
+    val base = appendBase(spark, root, append)
+    val AppendMapping(toPhys, assigned, inhStatsP, inhBloomsP) =
+      appendMapping(base, df.schema)
     // hash-clustered layout (see [[Clustering]]): validate the spec against
     // the head BEFORE the write job — an append may only cluster onto a
     // head already clustered by the same (physical column, bucket count),
@@ -774,41 +763,18 @@ object Snapshots {
       }
       Clustering(cs.map(c => toPhys.getOrElse(c, c)), n, sorted = clusterSorted)
     }
-    if (append && clusterSpec.isDefined) {
-      val headV0 = headVersion(spark, root)
-      if (headV0 > 0) {
-        val hc = manifestMeta(spark, root, headV0).clustering
-        // ConcurrentCommitException (not a bare require): the mismatch is
-        // indistinguishable from a racing spec-dropping commit, and the
-        // publish loop's re-validation throws exactly this type for the
-        // same condition — callers (SnapshotSink) get ONE failure shape
-        // to convert into an actionable terminal error
-        if (hc != clusterSpec) throw new ConcurrentCommitException(
-          s"requirement failed: clustered append onto $root requires the " +
-            s"head to carry the same clustering spec; head has " +
-            s"${hc.getOrElse("none")}, batch wants ${clusterSpec.get} — " +
-            "overwrite (append=false) to re-cluster")
-      }
-    }
-    // an APPEND maintains the head's declared index even when the caller
-    // passes no statsCols — the same inheritance the streaming sink has
-    // always had ([[appendFiles]]); without it one append after a
-    // [[reindexStats]] (or any indexed ingest driven by a stats-less
-    // writer) leaves a stat-less file that declines every metadata
-    // answer table-wide. Declared names are PHYSICAL and ride into
-    // writeBatch as its pre-mapped `statsPhysExtra` — never back through
-    // the logical→physical mapping (a renamed-away-then-re-added logical
-    // name would collide and redirect them). Only columns the batch
-    // actually carries are collected (schema evolution may omit some —
-    // their files simply record no entry, conservative).
-    val (inhStatsP, inhBloomsP) = {
-      val hv = if (append) headVersion(spark, root) else 0L
-      val none = (Seq.empty[String], Seq.empty[String])
-      if (hv == 0L) none
-      else manifestMeta(spark, root, hv).indexed.fold(none) { case (ds, db) =>
-        val batchPhys = df.columns.map(c => toPhys.getOrElse(c, c)).toSet
-        (ds.filter(batchPhys), db.filter(batchPhys))
-      }
+    if (clusterSpec.isDefined) base.foreach { m0 =>
+      val hc = m0.clustering
+      // ConcurrentCommitException (not a bare require): the mismatch is
+      // indistinguishable from a racing spec-dropping commit, and the
+      // publish loop's re-validation throws exactly this type for the
+      // same condition — callers (SnapshotSink) get ONE failure shape
+      // to convert into an actionable terminal error
+      if (hc != clusterSpec) throw new ConcurrentCommitException(
+        s"requirement failed: clustered append onto $root requires the " +
+          s"head to carry the same clustering spec; head has " +
+          s"${hc.getOrElse("none")}, batch wants ${clusterSpec.get} — " +
+          "overwrite (append=false) to re-cluster")
     }
     val (written, newStats, newRows, newBlooms) =
       writeBatch(df, root, statsCols, toPhys, bloomCols, clusterSpec,
@@ -874,27 +840,8 @@ object Snapshots {
     val spark = batches.head.sparkSession
     // logical→physical mapping + inherited index declarations exactly as
     // [[commit]], computed ONCE from the head all batches land on
-    val (toPhys, assigned) =
-      if (!append) (Map.empty[String, String], Map.empty[String, String])
-      else {
-        val headV0 = headVersion(spark, root)
-        if (headV0 == 0) (Map.empty[String, String], Map.empty[String, String])
-        else {
-          val m0 = manifestMeta(spark, root, headV0)
-          val ps = parseSchemaStr(m0.schema)
-          val fresh = freshPhysicals(ps, m0.retired, schema0)
-          (ps.map(logicalToPhysical).getOrElse(Map.empty) ++ fresh, fresh)
-        }
-      }
-    val (inhStatsP, inhBloomsP) = {
-      val hv = if (append) headVersion(spark, root) else 0L
-      val none = (Seq.empty[String], Seq.empty[String])
-      if (hv == 0L) none
-      else manifestMeta(spark, root, hv).indexed.fold(none) { case (ds, db) =>
-        val batchPhys = schema0.fieldNames.map(c => toPhys.getOrElse(c, c)).toSet
-        (ds.filter(batchPhys), db.filter(batchPhys))
-      }
-    }
+    val AppendMapping(toPhys, assigned, inhStatsP, inhBloomsP) =
+      appendMapping(appendBase(spark, root, append), schema0)
     // concurrent staging: a small pool is plenty — the point is to back-fill
     // the scheduler during each job's tail and overlap the driver-side
     // footer/shard work, not to saturate the cluster with N full jobs
@@ -929,6 +876,54 @@ object Snapshots {
       (parentRefs ++ refs, mergedSchemaJson(parent.map(_.schema), schema0, assigned))
     }
   }
+
+  /** The head commit record an append lands on, read ONCE before the write
+    * (None for an overwrite or an empty table). Everything decided before
+    * the write — column mapping, clustering check, inherited index — comes
+    * from this one read; the publish loop re-reads and re-validates the
+    * head regardless. */
+  private def appendBase(spark: SparkSession, root: String,
+      append: Boolean): Option[ManifestMeta] =
+    if (!append) None
+    else {
+      val v = headVersion(spark, root)
+      if (v == 0L) None else Some(manifestMeta(spark, root, v))
+    }
+
+  /** [[appendMapping]]'s result for one batch: the logical→physical names
+    * it stores under, the physical names freshly assigned to columns it
+    * introduces, and the PHYSICAL (stats, bloom) columns it inherits from
+    * the head's index declaration. */
+  private final case class AppendMapping(toPhys: Map[String, String],
+      assigned: Map[String, String], inhStatsP: Seq[String], inhBloomsP: Seq[String])
+
+  /** Column-mapping translation for appends onto an evolved table: the
+    * batch arrives with LOGICAL names, files store PHYSICAL ones. An
+    * overwrite (`base = None`) starts a fresh schema (physical = logical) —
+    * its files don't coexist with prior generations. Physical names are
+    * rename-stable, so the pre-write head read cannot go stale against the
+    * optimistic publish loop (concurrent commits only ADD columns).
+    *
+    * An APPEND also maintains the head's declared index even when the
+    * caller passes no statsCols — the same inheritance the streaming sink
+    * has always had ([[appendFiles]]); without it one append after a
+    * [[reindexStats]] (or any indexed ingest driven by a stats-less writer)
+    * leaves a stat-less file that declines every metadata answer
+    * table-wide. Declared names are PHYSICAL and ride into writeBatch as
+    * its pre-mapped `statsPhysExtra` — never back through the
+    * logical→physical mapping (a renamed-away-then-re-added logical name
+    * would collide and redirect them). Only columns the batch actually
+    * carries are collected (schema evolution may omit some — their files
+    * simply record no entry, conservative). */
+  private def appendMapping(base: Option[ManifestMeta], batch: StructType): AppendMapping =
+    base.fold(AppendMapping(Map.empty, Map.empty, Seq.empty, Seq.empty)) { m0 =>
+      val ps = parseSchemaStr(m0.schema)
+      val fresh = freshPhysicals(ps, m0.retired, batch)
+      val toPhys = ps.map(logicalToPhysical).getOrElse(Map.empty) ++ fresh
+      val batchPhys = batch.fieldNames.map(c => toPhys.getOrElse(c, c)).toSet
+      val (ds, db) = m0.indexed.getOrElse((Seq.empty[String], Seq.empty[String]))
+      AppendMapping(toPhys, fresh, ds.filter(batchPhys), db.filter(batchPhys))
+    }
 
   /** Key types [[commit]]'s `clusterBy` accepts: exactly those whose
     * murmur3 bucket mapping the DSv2 `graft.bucket` catalog function
@@ -981,7 +976,7 @@ object Snapshots {
   /** NON-ADDITIVE schema evolution, part 3: WIDEN a column's type as a
     * METADATA-ONLY commit — int→long, float→double, decimal growth. No
     * file is rewritten; the recorded schema simply asks for the wider
-    * type and BOTH readers (the native `spark.read.schema` path and the
+    * type and BOTH readers (the native [[ManifestFileIndex]] scan and the
     * DSv2 vectorized reader, which requests the widened Catalyst type
     * against the file's physical column) widen narrow-generation files
     * at decode time via Spark 4's parquet widening updaters. Later
@@ -1731,7 +1726,9 @@ object Snapshots {
     * `one` the driver's own Hadoop conf; the fanout path rebuilds ONE conf
     * per partition from shipped entries — `new Configuration(true)`
     * re-parses the XML resource files, which measured as a visible slice
-    * of commit wall time when paid per file. */
+    * of commit wall time when paid per file. For the same reason `one`
+    * opens its reader with `HadoopReadOptions.builder(conf)`: a bare
+    * `ParquetFileReader.open(in)` builds a fresh Configuration per footer. */
   private def minedFooters[T: scala.reflect.ClassTag](
       spark: SparkSession,
       files: Seq[String],
@@ -1809,7 +1806,8 @@ object Snapshots {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromPath(new Path(u), conf)
         val r =
-          try org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try org.apache.parquet.hadoop.ParquetFileReader.open(in,
+            org.apache.parquet.HadoopReadOptions.builder(conf).build())
           catch { case scala.util.control.NonFatal(_) => throw new FooterMiss }
         try {
           val footer = r.getFooter
@@ -1942,13 +1940,15 @@ object Snapshots {
   private def parseSchema(m: Manifest): Option[StructType] = parseSchemaStr(m.schema)
 
   /** Scan exactly `files`, planned against the manifest's recorded schema
-    * when present (no footer sampling; pre-schema files fill missing
-    * columns with nulls), with the manifest's DELETION VECTORS applied —
+    * and file sizes when present (no footer sampling, and no file status
+    * request for a file whose size the manifest records under a unique
+    * basename; pre-schema files fill missing columns with nulls), with the
+    * manifest's DELETION VECTORS applied —
     * every read path funnels here, so a merge-on-read delete is invisible
     * to all downstream consumers (merge/mergeInto/delete survivors,
     * readRange/readWhere/readForKeys, compaction, countWhere's boundary
     * scans) by construction. */
-  private def readFiles(spark: SparkSession, m: Manifest, files: Seq[String]): DataFrame =
+  private[graft] def readFiles(spark: SparkSession, m: Manifest, files: Seq[String]): DataFrame =
     readFilesDvs(spark, m, files, m.dvs)
 
   /** DV-side anti-join cardinality under which the deleted-positions
@@ -2045,7 +2045,10 @@ object Snapshots {
     }
   }
 
-  /** The physical scan. `withMeta = true` appends the two hidden DV-join
+  /** The physical scan: a [[ManifestFileIndex]] relation for manifests
+    * that record a schema, a path-based parquet read (which lists and
+    * samples footers) only for schema-less legacy ones. `withMeta = true`
+    * appends the two hidden DV-join
     * columns — file basename and `_metadata.row_index`, the stable
     * within-file row position parquet scans expose — BEFORE any
     * column-mapping select (the `_metadata` struct is only reachable on
@@ -2070,9 +2073,12 @@ object Snapshots {
         // LOGICAL: a renamed column reads from every file generation (files
         // lacking the physical column fill nulls — additive evolution), a
         // dropped column is simply not requested, and with no mapping this
-        // is the plain schema read
+        // is the plain schema read. The relation is sized from the
+        // manifest's recorded bytes: planning touches no data file.
+        val bytes = recordedSizes(m)
+        def scan(schema: StructType) = ManifestFileIndex.scan(spark, files, bytes, schema)
         val l2p = logicalToPhysical(s)
-        if (l2p.isEmpty) addMeta(spark.read.schema(s).parquet(files: _*))
+        if (l2p.isEmpty) addMeta(scan(s))
         else {
           val phys = StructType(s.fields.map(f => f.copy(name = physicalOf(f))))
           // strip the mapping key from the surfaced schema: the logical
@@ -2082,11 +2088,26 @@ object Snapshots {
             org.apache.spark.sql.functions.col(physicalOf(f)).as(f.name,
               new org.apache.spark.sql.types.MetadataBuilder()
                 .withMetadata(f.metadata).remove(PhysicalKey).build()))
-          spark.read.schema(phys).parquet(files: _*)
+          scan(phys)
             .select(logicalCols ++ (if (withMeta) metaCols else Seq.empty): _*)
         }
       case None if files.isEmpty => spark.emptyDataFrame
       case None => addMeta(spark.read.parquet(files: _*))
+    }
+  }
+
+  /** The sizes `m`'s shards recorded, keyed by full path. Entries are keyed
+    * by BASENAME, so a size is trusted only for a file `m` lists whose
+    * basename occurs once in `m.files` and whose entries agree on one size
+    * (two namesakes — possible after `convertInPlace` of a foreign layout —
+    * could otherwise swap sizes). Any other file, including one `m` does not
+    * list (a delta's removed files), is stat-ed by the index. */
+  private def recordedSizes(m: Manifest): Map[Path, Long] = {
+    val sizes = m.rows.groupBy(_.file).collect {
+      case (n, rs) if rs.map(_.bytes).distinct.size == 1 => n -> rs.head.bytes
+    }
+    m.files.distinct.groupBy(u => new Path(u).getName).collect {
+      case (n, Seq(u)) if sizes.contains(n) => new Path(u) -> sizes(n)
     }
   }
 
@@ -2110,7 +2131,8 @@ object Snapshots {
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(new Path(uri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
       val n = try r.getRecordCount finally r.close()
       Some(FileRows(new Path(uri).getName, n, in.getLength))
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -4317,7 +4339,8 @@ object Snapshots {
   }
 
   /** Read snapshot `version` (default: head). The returned plan scans
-    * exactly the manifest's file list — no data-directory listing. */
+    * exactly the manifest's file list, sized from the manifest — building
+    * and planning it makes no data-file request and starts no Spark job. */
   def read(spark: SparkSession, root: String, version: Long = -1L): DataFrame = {
     val v = if (version >= 0) version else headVersion(spark, root)
     require(v > 0, s"no snapshot committed at $root yet")

@@ -64,15 +64,25 @@ object Warehouse {
     else dist
   }
 
-  /** CREATE TABLE IF NOT EXISTS from the frame's schema (DDL path). */
+  /** The warehouse type names Spark's SQL parser rejects, spelled as it
+    * accepts them. */
+  private val SparkTypeNames = Map("DOUBLE PRECISION" -> "DOUBLE", "VARBYTE" -> "BINARY")
+
+  /** CREATE TABLE IF NOT EXISTS from the frame's schema (DDL path). Columns
+    * whose warehouse type Spark cannot parse (`DOUBLE PRECISION`, `VARBYTE`)
+    * are declared with Spark's name for it; the caller's `columnTypes` win. */
   def createTable(
       spark: SparkSession,
       df: DataFrame,
       table: String,
       columnTypes: Map[String, String] = Map.empty,
       columnConstraints: Map[String, String] = Map.empty,
-      includeDateInsert: Boolean = false): Unit =
-    spark.sql(SchemaMap.createTableDdl(df, table, columnTypes, columnConstraints, includeDateInsert))
+      includeDateInsert: Boolean = false): Unit = {
+    val parsable = df.schema.fields.flatMap(f =>
+      SparkTypeNames.get(SchemaMap.toSqlType(f.dataType)).map(f.name -> _)).toMap
+    spark.sql(SchemaMap.createTableDdl(df, table, parsable ++ columnTypes, columnConstraints,
+      includeDateInsert))
+  }
 
   /** Bulk load (the reference's put_df→COPY pipeline, §3.2): normalize
     * columns, optionally create, apply layout, append. `dateInsert` makes the

@@ -1922,7 +1922,8 @@ private[streaming] object SnapshotVectorized {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(new Path(uri), conf)
       val footer = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+          org.apache.parquet.HadoopReadOptions.builder(conf).build())
         try r.getFooter.getFileMetaData.getSchema finally r.close()
       }
       graft.engine.RowGroupFilters.build(rgFilters, footer).foreach { pred =>

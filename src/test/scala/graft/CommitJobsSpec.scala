@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Incremental, Scd, Snapshots}
@@ -31,28 +29,6 @@ class CommitJobsSpec extends SparkSpec {
     val old = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try body finally spark.conf.set("spark.sql.adaptive.enabled", old)
-  }
-
-  /** Count Spark jobs started while `body` runs. Listener events post
-    * asynchronously — poll until the count is stable. */
-  private def countJobs(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        val cur = n.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      n.get()
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("plain commit with statsCols runs ONE job (stats come from footers)") {

@@ -24,15 +24,35 @@ trait SparkSpec extends AnyFunSuite {
   val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
 
-  /** Age `root`'s v1 shard back to the PRE-round-17 generation: strip the
-    * `"tsus"` canon marker and convert the `ts` column's recorded stats
-    * from micros to the old rounded-seconds unit — exactly what a shard
-    * written by an older binary looks like. Shards are immutable and
-    * process-cached, so the doctored body lands under a NEW name and the
-    * manifest is re-pointed. ONE definition for every suite that fabricates
-    * legacy shards, so a format change cannot silently leave a spec testing
-    * a malformed relic. */
-  def ageShardToSecondsCanon(root: String, tsCol: String = "ts"): Unit = {
+  /** Count Spark jobs started while `body` runs. Listener events post
+    * asynchronously — poll until the count is stable. */
+  def countJobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var last = -1
+      var stable = 0
+      var waited = 0
+      while (stable < 3 && waited < 10000) {
+        Thread.sleep(100); waited += 100
+        val cur = n.get()
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+      }
+      n.get()
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Rewrite `root`'s v1 shard body through `edit`, as an earlier binary
+    * would have written it. Shards are immutable and process-cached, so the
+    * doctored body lands under a NEW name and the manifest is re-pointed.
+    * ONE definition for every suite that fabricates legacy shards, so a
+    * format change cannot silently leave a spec testing a malformed relic. */
+  def rewriteShard(root: String)(edit: String => String): Unit = {
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snap = new org.apache.hadoop.fs.Path(s"$root/_snapshots")
@@ -47,13 +67,20 @@ trait SparkSpec extends AnyFunSuite {
     val shard = f.listStatus(snap).map(_.getPath)
       .find(_.getName.startsWith("shard-"))
       .getOrElse(fail(s"no shard under $root"))
-    val aged = (""""col":"""" + java.util.regex.Pattern.quote(tsCol) +
-      """","min":([-0-9.eE]+),"max":([-0-9.eE]+)""").r
-      .replaceAllIn(readText(shard).replace(""""tsus":true,""", ""), m =>
-        s""""col":"$tsCol","min":${m.group(1).toDouble / 1e6},"max":${m.group(2).toDouble / 1e6}""")
     val nn = s"shard-${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}.json"
-    writeText(new org.apache.hadoop.fs.Path(snap, nn), aged)
+    writeText(new org.apache.hadoop.fs.Path(snap, nn), edit(readText(shard)))
     val mp = new org.apache.hadoop.fs.Path(snap, "manifest-1.json")
     writeText(mp, readText(mp).replace(shard.getName, nn))
   }
+
+  /** Age `root`'s v1 shard back to the PRE-round-17 generation: strip the
+    * `"tsus"` canon marker and convert the `ts` column's recorded stats
+    * from micros to the old rounded-seconds unit. */
+  def ageShardToSecondsCanon(root: String, tsCol: String = "ts"): Unit =
+    rewriteShard(root) { text =>
+      (""""col":"""" + java.util.regex.Pattern.quote(tsCol) +
+        """","min":([-0-9.eE]+),"max":([-0-9.eE]+)""").r
+        .replaceAllIn(text.replace(""""tsus":true,""", ""), m =>
+          s""""col":"$tsCol","min":${m.group(1).toDouble / 1e6},"max":${m.group(2).toDouble / 1e6}""")
+    }
 }

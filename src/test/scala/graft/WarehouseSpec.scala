@@ -61,6 +61,23 @@ class WarehouseSpec extends SparkSpec {
     spark.sql("DROP TABLE wh_t6")
   }
 
+  test("unbucketed upload and upsert carry double and binary columns") {
+    spark.sql("DROP TABLE IF EXISTS wh_t8")
+    val rows = Seq((1L, 0.5, Array[Byte](1)), (2L, -2.25, Array[Byte](2, 3)))
+      .toDF("k", "price", "raw")
+    Warehouse.upload(spark, rows, "wh_t8")
+    val t = spark.table("wh_t8")
+    assert(t.schema.map(f => f.name -> f.dataType.simpleString) ===
+      Seq("k" -> "bigint", "price" -> "double", "raw" -> "binary"))
+    val updates = Seq((2L, 7.75, Array[Byte](9)), (3L, 1e-3, Array[Byte]()))
+      .toDF("k", "price", "raw")
+    Warehouse.upsert(spark, updates, "wh_t8", Seq("k"))
+    val got = spark.table("wh_t8").as[(Long, Double, Array[Byte])].collect()
+      .map { case (k, p, r) => (k, p, r.toSeq) }.sortBy(_._1).toSeq
+    assert(got === Seq((1L, 0.5, Seq[Byte](1)), (2L, 7.75, Seq[Byte](9)), (3L, 1e-3, Seq[Byte]())))
+    spark.sql("DROP TABLE wh_t8")
+  }
+
   test("upsert works on a database-qualified target from another database") {
     spark.sql("CREATE DATABASE IF NOT EXISTS wh_db")
     spark.sql("DROP TABLE IF EXISTS wh_db.t7")
