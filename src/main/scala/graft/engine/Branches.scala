@@ -66,7 +66,7 @@ object Branches {
     Snapshots.publishMeta(spark, bRoot, tag = s"fork:$base", requireHead = 0L,
       retiredOverride = Some(meta.retired),
       clustering = _ => meta.clustering) { _ =>
-      (Snapshots.shardRefsOf(spark, tableRoot, meta), meta.schema)
+      (meta.shardRefs, meta.schema)
     }
   }
 
@@ -106,7 +106,7 @@ object Branches {
     Snapshots.publishMeta(spark, tableRoot, tag = s"publish:$name",
       requireHead = base, retiredOverride = Some(bMeta.retired),
       clustering = _ => bMeta.clustering) { _ =>
-      (Snapshots.shardRefsOf(spark, bRoot, bMeta), bMeta.schema)
+      (bMeta.shardRefs, bMeta.schema)
     }
   }
 
@@ -161,8 +161,8 @@ object Branches {
 
     val bMeta = Snapshots.manifestMeta(spark, bRoot, bHead)
     val baseMeta = Snapshots.manifestMeta(spark, tableRoot, base) // throws if vacuumed
-    val baseRefs = Snapshots.shardRefsOf(spark, tableRoot, baseMeta).map(_.name).toSet
-    val branchRefs = Snapshots.shardRefsOf(spark, bRoot, bMeta)
+    val baseRefs = baseMeta.shardRefs.map(_.name).toSet
+    val branchRefs = bMeta.shardRefs
     if (!baseRefs.subsetOf(branchRefs.map(_.name).toSet))
       return publishRebaseGeneral(spark, tableRoot, name, base, bHead, bMeta, baseMeta)
     val added = branchRefs.filterNot(r => baseRefs.contains(r.name))
@@ -182,7 +182,7 @@ object Branches {
       val schema = rebasedSchema(tableRoot, name, bMeta.schema, baseMeta.schema, h.schema)
       // a shard main already carries (e.g. a replayed publish of this same
       // branch) must not land twice — refs are carried by name
-      val cur = Snapshots.shardRefsOf(spark, tableRoot, h)
+      val cur = h.shardRefs
       val curNames = cur.map(_.name).toSet
       (cur ++ added.filterNot(a => curNames.contains(a.name)), schema)
     }

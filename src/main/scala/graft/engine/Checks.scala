@@ -212,7 +212,7 @@ object Checks {
       spark: SparkSession, root: String): Option[org.apache.spark.sql.types.StructType] = {
     val v = Snapshots.headVersion(spark, root)
     if (v == 0) None
-    else Snapshots.parseSchemaStr(Snapshots.manifest(spark, root, v).schema)
+    else Some(Snapshots.parseSchemaStr(Snapshots.manifestMeta(spark, root, v).schema))
   }
 
   /** `df` with every rule-referenced column the frame LACKS added as a

@@ -50,11 +50,10 @@ private[graft] object FilterPrune {
   def minable(schema: StructType, f: Filter): Boolean = f match {
     case IsNull(_) | IsNotNull(_) | EqualNullSafe(_, null) => true
     case Not(IsNull(_)) | Not(IsNotNull(_)) => true
-    case _ => overlap(Dummy, schema, f).isDefined
+    case _ => overlap(Snapshots.Manifest(1L, Seq("dummy.parquet"), 0L,
+      stats = Seq(Snapshots.ColStats("dummy.parquet", "*", 0, 0, 0)),
+      schema = schema.json), schema, f).isDefined
   }
-
-  private val Dummy = Snapshots.Manifest(1L, Seq("dummy.parquet"), 0L,
-    stats = Seq(Snapshots.ColStats("dummy.parquet", "*", 0, 0, 0)))
 
   /** Canonical-unit double of a pushed literal for a column of type `dt` —
     * None when the pair isn't index-comparable. */

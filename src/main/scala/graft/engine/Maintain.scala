@@ -89,12 +89,10 @@ object Maintain {
       import org.apache.spark.sql.types._
       val cutoffMs = System.currentTimeMillis() - policy.rowTtlMs
       // the column type comes from the manifest's recorded schema (one
-      // small metadata file), not a full head resolve; legacy schema-less
-      // manifests fall back to the read plan
+      // small metadata file), not a full head resolve
       val headV = Snapshots.headVersion(spark, root)
       val schema = Snapshots
         .parseSchemaStr(Snapshots.manifestMeta(spark, root, headV).schema)
-        .getOrElse(Snapshots.read(spark, root).schema)
       val cutoff = schema(policy.rowTtlCol).dataType match {
         case LongType => lit(cutoffMs)
         case TimestampNTZType => lit(java.time.LocalDateTime.ofEpochSecond(

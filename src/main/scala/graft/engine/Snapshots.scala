@@ -81,10 +81,11 @@ object Snapshots {
     * LIST before the scan is even planned — the complement of row-group
     * stats (which require opening every footer) and the payoff side of
     * z-order/range clustering (tight per-file ranges ⇒ most files prune).
-    * `nulls` is the file's null count for the column (-1 in pre-round-8
-    * shards = unknown): [[countWhere]] may only count a file from metadata
-    * when the conjunct's column provably has NO nulls there — a null row
-    * fails every comparison, so a nulls-bearing file must scan.
+    * `nulls` is the file's null count for the column (-1 = unknown: a
+    * footer chunk without a null count): [[countWhere]] may only count a
+    * file from metadata when the conjunct's column provably has NO nulls
+    * there — a null row fails every comparison, so a nulls-bearing file
+    * must scan.
     * STRING columns (round 15) record their bounds in `slo`/`shi` instead
     * (UTF8-byte order — Spark's UTF8String min/max and parquet's unsigned
     * binary comparator agree on it); `min`/`max` hold inert placeholders
@@ -238,8 +239,8 @@ object Snapshots {
     if (v <= 0) return None
     val mm = manifestMeta(spark, root, v)
     mm.clustering.map { c =>
-      val p2l = parseSchemaStr(mm.schema).map(_.fields.iterator
-        .map(f => physicalOf(f) -> f.name).toMap).getOrElse(Map.empty)
+      val p2l = parseSchemaStr(mm.schema).fields.iterator
+        .map(f => physicalOf(f) -> f.name).toMap
       c.copy(cols = c.cols.map(cc => p2l.getOrElse(cc, cc)))
     }
   }
@@ -249,12 +250,12 @@ object Snapshots {
     * commit carrying an already-present tag is skipped, which turns
     * at-least-once callers (streaming foreachBatch replays) into
     * exactly-once table states. `ts` is the publish wall-clock (epoch
-    * millis; 0 in pre-ts manifests) — what [[readAsOf]] time-travels by.
-    * `schema` is the table schema as StructType json ("" in pre-schema
-    * manifests): reads plan against THIS — no footer sampling of data
-    * files — and files written before a column existed surface it as
-    * nulls (the parquet reader's missing-column fill), which is what makes
-    * additive schema evolution safe under every other operation here.
+    * millis) — what [[readAsOf]] time-travels by. `schema` is the table
+    * schema as StructType json: reads plan against THIS — no footer
+    * sampling of data files — and files written before a column existed
+    * surface it as nulls (the parquet reader's missing-column fill), which
+    * is what makes additive schema evolution safe under every other
+    * operation here.
     *
     * This is the in-memory VIEW; on disk the file list and stats live in
     * immutable SHARD files (one per commit batch) that the manifest
@@ -287,44 +288,53 @@ object Snapshots {
     * a file list + that list's ColStats) instead of inlining them. A plain
     * append therefore writes O(batch) metadata — one new shard with the
     * batch's files, plus a manifest whose size is O(#shards), ~40 bytes a
-    * ref — where the inline layout rewrote every file URI AND every
-    * ColStats of the whole table on each commit (O(table), the ~100 MB
-    * driver-side json at 1M files that motivated this split). Shards are
-    * shared across versions by reference: carried forward untouched on
-    * append, filtered (metadata-only rewrite of the AFFECTED shards) on
-    * merge/delete, and reclaimed by vacuum when no retained manifest
-    * references them. `inline` carries a pre-shard manifest's content so
-    * old tables stay readable; the next commit on top of one materializes
-    * it into a real shard. */
+    * ref — where inlining would rewrite every file URI AND every ColStats
+    * of the whole table on each commit (O(table), ~100 MB of driver-side
+    * json at 1M files). Shards are shared across versions by reference:
+    * carried forward untouched on append, filtered (metadata-only rewrite
+    * of the AFFECTED shards) on merge/delete, and reclaimed by vacuum when
+    * no retained manifest references them.
+    *
+    * ONE FORMAT: every manifest starts `{"fmt":1,` ([[FormatVersion]]) and
+    * [[manifestMeta]] reads no other: an unstamped manifest (an older
+    * generation, such as the pre-shard inline layout) or another version
+    * fails with one error naming its path. Every commit parses its head
+    * first, so nothing commits on top of a refused manifest, and every
+    * manifest and shard reachable from a format-1 head is format 1: file
+    * lists live in shards, timestamp stats are exact epoch micros, and the
+    * schema is recorded and non-empty. Optional keys (`retired`,
+    * `clustering`, `indexed`; a shard's `blooms` and `dvs`, a row's `"b"`
+    * size, a stat's `sum`, `slo`/`shi` and `nr`) are rendered only when
+    * present. A table of an older format is read with the engine that
+    * wrote it and its rows committed to a new root. */
   final case class ManifestMeta(
       version: Long,
       parent: Long,
       shardRefs: Seq[ShardRef],
-      tag: String = "",
-      ts: Long = 0L,
-      schema: String = "",
+      tag: String,
+      ts: Long,
+      schema: String,
       retired: Seq[String] = Seq.empty,
-      inline: Option[(Seq[String], Seq[ColStats])] = None,
       clustering: Option[Clustering] = None,
       /** Advisory index declaration: the PHYSICAL (stats, bloom) column
         * names new appends should index under — carried commit-to-commit
         * so [[appendFiles]] (the per-epoch streaming commit) learns them
         * from the head RECORD alone, O(1), instead of resolving every
-        * shard (O(table metadata) per trigger). None on legacy manifests
-        * → appendFiles falls back to the full resolve. Advisory only:
+        * shard (O(table metadata) per trigger). None until a commit
+        * declares one (a converted table's first version) → appendFiles
+        * falls back to the full resolve. Advisory only:
         * readers treat missing per-file stats as must-scan, so an
         * imprecise declaration weakens pruning, never correctness. */
       indexed: Option[(Seq[String], Seq[String])] = None)
 
+  /** The on-disk format every manifest is stamped with (`"fmt":1`); the
+    * only one [[manifestMeta]] reads — see [[ManifestMeta]]. */
+  private val FormatVersion = 1
+
   /** A loaded shard: its ref plus the content. */
   private final case class Shard(ref: ShardRef, files: Seq[String], stats: Seq[ColStats],
       rows: Seq[FileRows] = Seq.empty, blooms: Seq[FileBloom] = Seq.empty,
-      dvs: Seq[FileDv] = Seq.empty,
-      // false for shard generations whose TIMESTAMP stats predate the
-      // round-17 exact-micros canon (they recorded rounded seconds):
-      // [[resolve]] hides their timestamp stats so no miner can compare
-      // micros literals against seconds bounds — degrade, never lie
-      tsExact: Boolean = true)
+      dvs: Seq[FileDv] = Seq.empty)
 
   /** A read-modify-write commit found the head moved past the version it
     * was computed from. Subclasses IllegalArgumentException so callers
@@ -421,7 +431,7 @@ object Snapshots {
     val p = manifestPath(root, v)
     require(fs(spark, root).exists(p),
       s"snapshot $v does not exist at $root (vacuumed or never committed)")
-    parseManifestMeta(readText(spark, root, p))
+    parseManifestMeta(readText(spark, root, p), p)
   }
 
   // shards are SHARED across the table's chains — always in the main dir
@@ -461,9 +471,9 @@ object Snapshots {
 
   private def loadShard(spark: SparkSession, root: String, ref: ShardRef): Shard =
     ShardCache.get(root, ref.name).getOrElse {
-      val (files, stats, rows, blooms, dvs, tsExact) =
+      val (files, stats, rows, blooms, dvs) =
         parseShard(readText(spark, root, shardPath(root, ref.name)))
-      val sh = Shard(ref, files, stats, rows, blooms, dvs, tsExact)
+      val sh = Shard(ref, files, stats, rows, blooms, dvs)
       ShardCache.put(root, ref.name, sh)
       sh
     }
@@ -496,12 +506,7 @@ object Snapshots {
     }
 
   private def loadShards(spark: SparkSession, root: String, m: ManifestMeta): Seq[Shard] =
-    m.inline match {
-      // pre-shard manifest: its content acts as one unnamed pseudo-shard
-      case Some((files, stats)) => // pre-shard era: seconds-canon ts stats
-        Seq(Shard(ShardRef("", files.size), files, stats, tsExact = false))
-      case None => m.shardRefs.map(loadShard(spark, root, _))
-    }
+    m.shardRefs.map(loadShard(spark, root, _))
 
   private def resolve(m: ManifestMeta, shards: Seq[Shard]): Manifest = {
     // stats are recorded under PHYSICAL column names (immutable with the
@@ -511,24 +516,12 @@ object Snapshots {
     // keeps working across renames with no knowledge of the mapping.
     // Dropped columns' stats keep their physical label — no logical name
     // reaches them, so they are inert.
-    val schemaOpt = parseSchemaStr(m.schema) // parsed ONCE per resolve
-    val p2l: Map[String, String] = schemaOpt match {
-      case Some(sc) => sc.fields.iterator
-        .map(f => physicalOf(f) -> f.name).filter(e => e._1 != e._2).toMap
-      case None => Map.empty
-    }
-    // round-17 canon fence: a shard without the "tsus" marker recorded its
-    // TIMESTAMP stats in rounded SECONDS — comparing them against the
-    // micros canon would prune valid files (silently-empty reads) or
-    // full-accept wrong ones (metadata-deleting non-matching rows). Hide
-    // exactly those entries ([[canonSafeStat]], the ONE shared rule): the
-    // columns read as stat-less (must-scan, conservative).
-    val tsPhys = tsPhysicalCols(schemaOpt)
+    val p2l: Map[String, String] = parseSchemaStr(m.schema).fields.iterator
+      .map(f => physicalOf(f) -> f.name).filter(e => e._1 != e._2).toMap
     // no-range TOMBSTONES ride to their own collection: every range
     // consumer reads `stats` and must never see a tombstone's inert
     // min/max; IS NULL mining reads `tombs`
-    val (tombStats, rangeStats) = shards.flatMap(sh =>
-      sh.stats.filter(canonSafeStat(sh.tsExact, tsPhys, _))).partition(_.nr)
+    val (tombStats, rangeStats) = shards.flatMap(_.stats).partition(_.nr)
     def relab(ss: Seq[ColStats]): Seq[ColStats] =
       if (p2l.isEmpty) ss
       else ss.map(st => p2l.get(st.col).fold(st)(l => st.copy(col = l)))
@@ -551,29 +544,10 @@ object Snapshots {
     * rewrite, the Delta-style column-mapping idea. */
   private val PhysicalKey = "graft.physical"
 
-  /** PHYSICAL names of timestamp-typed columns, None when the schema is
-    * unknowable (legacy schema-less manifests). */
-  private def tsPhysicalCols(
-      schema: Option[StructType]): Option[Set[String]] =
-    schema.map(_.fields.iterator.filter(f =>
-        f.dataType == org.apache.spark.sql.types.TimestampType ||
-          f.dataType == org.apache.spark.sql.types.TimestampNTZType)
-      .map(physicalOf).toSet)
-
-  /** The round-17 canon-fence rule, shared by [[resolve]] (hide) and
-    * [[reindexStats]] (never carry into a marked shard): a stats entry
-    * from an UNMARKED shard survives only if it is a string bound
-    * (canon-free) or its column is provably NOT timestamp-typed; with no
-    * parseable schema, only string bounds survive. One definition so the
-    * two sites cannot diverge. */
-  private def canonSafeStat(
-      tsExact: Boolean, tsPhys: Option[Set[String]], st: ColStats): Boolean =
-    tsExact || st.slo != null || tsPhys.exists(ts => !ts.contains(st.col))
-
   private[graft] def physicalOf(f: org.apache.spark.sql.types.StructField): String =
     if (f.metadata.contains(PhysicalKey)) f.metadata.getString(PhysicalKey) else f.name
 
-  /** THE exact-double rule, in one place (the [[canonSafeStat]] precedent):
+  /** THE exact-double rule, in one place:
     * the canonical-double stat value `d` converted back to a CATALYST value
     * of column type `dt`, iff value→double is provably INJECTIVE over the
     * compared values — so the conversion names the unique original, and a
@@ -706,13 +680,8 @@ object Snapshots {
   def history(spark: SparkSession, root: String): Seq[Manifest] = {
     val cache = scala.collection.mutable.HashMap.empty[String, Shard]
     historyMeta(spark, root).map { m =>
-      val shards = m.inline match {
-        case Some((files, stats)) => // pre-shard era: seconds-canon ts stats
-        Seq(Shard(ShardRef("", files.size), files, stats, tsExact = false))
-        case None => m.shardRefs.map(r =>
-          cache.getOrElseUpdate(r.name, loadShard(spark, root, r)))
-      }
-      resolve(m, shards)
+      resolve(m, m.shardRefs.map(r =>
+        cache.getOrElseUpdate(r.name, loadShard(spark, root, r))))
     }
   }
 
@@ -795,14 +764,14 @@ object Snapshots {
         val mineS = statsCols.map(c => toPhys.getOrElse(c, c))
         val mineB = bloomCols.map(c => toPhys.getOrElse(c, c))
         // overwrite restarts the declaration; append unions with the
-        // head's (a legacy None head stays None — fallback resolve)
+        // head's (an undeclared head stays None — fallback resolve)
         if (!append || head.isEmpty) Some((mineS, mineB))
         else head.flatMap(_.indexed).map { case (s, b) =>
           ((s ++ mineS).distinct, (b ++ mineB).distinct)
         }
       }) { head =>
       val parent = if (append) head else None
-      val refs = parent.map(shardRefsOf(spark, root, _)).getOrElse(Seq.empty) :+ newRef
+      val refs = parent.map(_.shardRefs).getOrElse(Seq.empty) :+ newRef
       (refs, mergedSchemaJson(parent.map(_.schema), df.schema, assigned))
     }
   }
@@ -872,7 +841,7 @@ object Snapshots {
       }
     }) { head =>
       val parent = if (append) head else None
-      val parentRefs = parent.map(shardRefsOf(spark, root, _)).getOrElse(Seq.empty)
+      val parentRefs = parent.map(_.shardRefs).getOrElse(Seq.empty)
       (parentRefs ++ refs, mergedSchemaJson(parent.map(_.schema), schema0, assigned))
     }
   }
@@ -919,7 +888,7 @@ object Snapshots {
     base.fold(AppendMapping(Map.empty, Map.empty, Seq.empty, Seq.empty)) { m0 =>
       val ps = parseSchemaStr(m0.schema)
       val fresh = freshPhysicals(ps, m0.retired, batch)
-      val toPhys = ps.map(logicalToPhysical).getOrElse(Map.empty) ++ fresh
+      val toPhys = logicalToPhysical(ps) ++ fresh
       val batchPhys = batch.fieldNames.map(c => toPhys.getOrElse(c, c)).toSet
       val (ds, db) = m0.indexed.getOrElse((Seq.empty[String], Seq.empty[String]))
       AppendMapping(toPhys, fresh, ds.filter(batchPhys), db.filter(batchPhys))
@@ -952,8 +921,7 @@ object Snapshots {
     val headV = headVersion(spark, root)
     require(headV > 0, s"no snapshot committed at $root yet")
     val meta = manifestMeta(spark, root, headV)
-    val s = parseSchemaStr(meta.schema).getOrElse(sys.error(
-      s"$root has no recorded schema (legacy manifest) — commit once to record one"))
+    val s = parseSchemaStr(meta.schema)
     require(s.fieldNames.contains(from), s"no column '$from' in $root")
     require(!s.fieldNames.contains(to), s"column '$to' already exists in $root")
     require(!Checks.referenced(spark, Checks.list(spark, root)).contains(from),
@@ -969,7 +937,7 @@ object Snapshots {
     publishMeta(spark, root, tag = "", requireHead = headV,
       clustering = h => h.flatMap(_.clustering)) { head =>
       val h = head.getOrElse(sys.error("rename base vanished"))
-      (shardRefsOf(spark, root, h), renamed.json)
+      (h.shardRefs, renamed.json)
     }
   }
 
@@ -996,8 +964,7 @@ object Snapshots {
     val headV = headVersion(spark, root)
     require(headV > 0, s"no snapshot committed at $root yet")
     val meta = manifestMeta(spark, root, headV)
-    val s = parseSchemaStr(meta.schema).getOrElse(sys.error(
-      s"$root has no recorded schema (legacy manifest) — commit once to record one"))
+    val s = parseSchemaStr(meta.schema)
     val field = s.fields.find(_.name == name)
       .getOrElse(sys.error(s"no column '$name' in $root"))
     require(widenOk(field.dataType, to),
@@ -1018,7 +985,7 @@ object Snapshots {
     publishMeta(spark, root, tag = "", requireHead = headV,
       clustering = h => h.flatMap(_.clustering)) { head =>
       val h = head.getOrElse(sys.error("widen base vanished"))
-      (shardRefsOf(spark, root, h), widened.json)
+      (h.shardRefs, widened.json)
     }
   }
 
@@ -1059,8 +1026,7 @@ object Snapshots {
     val headV = headVersion(spark, root)
     require(headV > 0, s"no snapshot committed at $root yet")
     val meta = manifestMeta(spark, root, headV)
-    val s = parseSchemaStr(meta.schema).getOrElse(sys.error(
-      s"$root has no recorded schema (legacy manifest) — commit once to record one"))
+    val s = parseSchemaStr(meta.schema)
     val field = s.fields.find(_.name == name)
       .getOrElse(sys.error(s"no column '$name' in $root"))
     require(s.fields.length > 1, s"cannot drop the last column of $root")
@@ -1074,7 +1040,7 @@ object Snapshots {
       clustering = h =>
         h.flatMap(_.clustering).filterNot(_.cols.contains(physicalOf(field)))) { head =>
       val h = head.getOrElse(sys.error("drop base vanished"))
-      (shardRefsOf(spark, root, h), remaining.json)
+      (h.shardRefs, remaining.json)
     }
   }
 
@@ -1096,8 +1062,7 @@ object Snapshots {
     val headV = headVersion(spark, root)
     require(headV > 0, s"no snapshot committed at $root yet")
     val meta = manifestMeta(spark, root, headV)
-    val s = parseSchemaStr(meta.schema).getOrElse(sys.error(
-      s"$root has no recorded schema (legacy manifest) — commit once to record one"))
+    val s = parseSchemaStr(meta.schema)
     require(!s.fieldNames.contains(name), s"column '$name' already exists in $root")
     val taken = meta.retired.toSet ++ s.fields.map(physicalOf).toSet
     val base = org.apache.spark.sql.types.StructField(name, dataType, nullable = true)
@@ -1110,7 +1075,7 @@ object Snapshots {
     publishMeta(spark, root, tag = "", requireHead = headV,
       clustering = h => h.flatMap(_.clustering)) { head =>
       val h = head.getOrElse(sys.error("add-column base vanished"))
-      (shardRefsOf(spark, root, h), StructType(s.fields :+ field).json)
+      (h.shardRefs, StructType(s.fields :+ field).json)
     }
   }
 
@@ -1148,7 +1113,7 @@ object Snapshots {
       root: String,
       newFiles: Seq[String],
       tag: String,
-      schemaIfNew: Option[StructType] = None): Option[Long] = {
+      schemaIfNew: StructType): Option[Long] = {
     require(tag.nonEmpty, "idempotency tag must be non-empty")
     if (historyMeta(spark, root).exists(_.tag == tag)) {
       if (newFiles.nonEmpty)
@@ -1156,8 +1121,8 @@ object Snapshots {
       return None
     }
     val headV = headVersion(spark, root)
-    // O(1) from the head RECORD when declared; legacy heads (pre-indexed
-    // manifests) pay the full shard resolve once per trigger as before
+    // O(1) from the head RECORD when declared; an undeclared head (a
+    // converted table's first version) pays the full shard resolve once
     val (statsP, bloomP) =
       if (headV == 0) (Seq.empty[String], Seq.empty[String])
       else manifestMeta(spark, root, headV).indexed.getOrElse {
@@ -1173,16 +1138,14 @@ object Snapshots {
       if (bloomP.isEmpty || newFiles.isEmpty) Seq.empty[FileBloom]
       else {
         val logical = parseSchemaStr(manifestMeta(spark, root, headV).schema)
-        collectBlooms(spark, newFiles, bloomP,
-          logical.getOrElse(sys.error(s"$root has no recorded schema")),
-          logical.map(logicalToPhysical).getOrElse(Map.empty),
+        collectBlooms(spark, newFiles, bloomP, logical, logicalToPhysical(logical),
           if (rows.nonEmpty) rows else rowsFromFooters(spark, newFiles))
       }
     val newRef =
       if (newFiles.isEmpty) None
       else Some(writeShard(spark, root, newFiles, stats, rows, blooms))
     Some(publishMeta(spark, root, tag,
-      // carry the head's declaration; a legacy (undeclared) head gets
+      // carry the head's declaration; an undeclared head gets
       // BACKFILLED from the resolve this trigger already paid, and a
       // fresh table records its (empty) truth — either way the NEXT
       // trigger reads it O(1)
@@ -1190,11 +1153,8 @@ object Snapshots {
       // schema: the staged files carry the head's physical schema (the
       // writer factory derived it from the head) — keep it; a FRESH
       // table records the writer's logical schema (no mapping yet)
-      val schema = head.map(_.schema)
-        .orElse(schemaIfNew.map(_.json))
-        .getOrElse("")
-      (head.map(h => shardRefsOf(spark, root, h)).getOrElse(Seq.empty) ++ newRef,
-        schema)
+      (head.map(_.shardRefs).getOrElse(Seq.empty) ++ newRef,
+        head.fold(schemaIfNew.json)(_.schema))
     })
   }
 
@@ -1243,7 +1203,7 @@ object Snapshots {
       s"replaceFiles: ${(removed -- fileSet).take(3).mkString(", ")} not in " +
         s"$root v$expectedHead — the scanned state has moved")
     val logical = parseSchema(m)
-    val toPhys = logical.map(logicalToPhysical).getOrElse(Map.empty)
+    val toPhys = logicalToPhysical(logical)
     // validate staged rows against table CHECKs before they become
     // reachable (rules speak logical names; files store physical)
     val rules = Checks.list(spark, root)
@@ -1252,7 +1212,7 @@ object Snapshots {
       val toLogical = toPhys.map(_.swap)
       val staged = staged0.select(staged0.columns.toSeq.map(c =>
         org.apache.spark.sql.functions.col(c).as(toLogical.getOrElse(c, c))): _*)
-      Checks.findViolation(staged, rules, logical).foreach { case (rname, cnt) =>
+      Checks.findViolation(staged, rules, Some(logical)).foreach { case (rname, cnt) =>
         fs(spark, root).delete(new Path(newFiles.head).getParent, true)
         throw new IllegalArgumentException(
           s"check constraint violation rewriting $root: '$rname' ($cnt rows)")
@@ -1267,9 +1227,7 @@ object Snapshots {
         .getOrElse(collectStats(spark, newFiles, statsP))
     val blooms =
       if (bloomP.isEmpty || newFiles.isEmpty) Seq.empty[FileBloom]
-      else collectBlooms(spark, newFiles, bloomP,
-        logical.getOrElse(sys.error(s"$root has no recorded schema")),
-        toPhys,
+      else collectBlooms(spark, newFiles, bloomP, logical, toPhys,
         if (rows.nonEmpty) rows else rowsFromFooters(spark, newFiles))
     val newRef =
       if (newFiles.isEmpty) None
@@ -1345,33 +1303,15 @@ object Snapshots {
       }
     val ref = writeShard(spark, root, files, adoptStats, adoptRows, adoptBlooms)
     publishMeta(spark, root, tag = "", requireHead = 0L) { _ =>
-      (Seq(ref), if (schema.fields.isEmpty) "" else schema.json)
+      (Seq(ref), schema.json)
     }
   }
-
-  /** The parent's shard refs, materializing a pre-shard (inline) manifest
-    * into a real shard once so it can be carried by reference forever
-    * after — the lazy migration path for old tables. */
-  private[engine] def shardRefsOf(spark: SparkSession, root: String, m: ManifestMeta): Seq[ShardRef] =
-    m.inline match {
-      // pre-shard era: its TIMESTAMP stats are seconds-canon — the
-      // materialized shard must NOT carry the tsus marker (loadShards
-      // marks the same inline content tsExact=false; a marked shard here
-      // would launder seconds bounds into "exact micros")
-      case Some((files, stats)) =>
-        Seq(writeShard(spark, root, files, stats, tsExact = false))
-      case None => m.shardRefs
-    }
 
   private def mergedSchemaJson(
       parentSchema: Option[String],
       batch: StructType,
-      assigned: Map[String, String] = Map.empty): String = {
-    // a field-less schema means "unknown" (legacy restore path) — record ""
-    // so reads fall back to footers, not a 0-column plan
-    val s = mergeSchemas(parentSchema.flatMap(parseSchemaStr), batch, assigned)
-    if (s.fields.isEmpty) "" else s.json
-  }
+      assigned: Map[String, String] = Map.empty): String =
+    mergeSchemas(parentSchema.map(parseSchemaStr), batch, assigned).json
 
   /** Fresh PHYSICAL names for batch columns whose default physical (their
     * own name) is already taken — by a retired (dropped) column whose data
@@ -1382,13 +1322,11 @@ object Snapshots {
     * write (the files must store the fresh name) and passed through to the
     * schema merge so the metadata records the same mapping. */
   private def freshPhysicals(
-      parent: Option[StructType],
+      parent: StructType,
       retired: Seq[String],
       batch: StructType): Map[String, String] = {
-    val taken = retired.toSet ++
-      parent.map(_.fields.map(physicalOf).toSet).getOrElse(Set.empty)
-    if (taken.isEmpty) return Map.empty
-    val existing = parent.map(_.fieldNames.toSet).getOrElse(Set.empty)
+    val taken = retired.toSet ++ parent.fields.map(physicalOf)
+    val existing = parent.fieldNames.toSet
     batch.fields.iterator.map(_.name)
       .filterNot(existing.contains)
       .filter(taken.contains)
@@ -1683,22 +1621,6 @@ object Snapshots {
       }
   }
 
-  /** Footer-derived per-file stats: min/max/null-count for `statsCols` plus
-    * row counts, read from the parquet FOOTERS of freshly-written files —
-    * metadata-only I/O, NO Spark job. Integral/floating top-level
-    * columns qualify (chunk stats order-match Spark's double-cast exactly:
-    * long→double rounding is monotone, so cast(min) = min(cast)), as do
-    * MICROS-annotated INT64 timestamps (epoch micros, the index's canonical
-    * unit, verbatim) and INT32 dates (epoch days verbatim); a
-    * DECIMAL/string/other statsCol returns None and the caller falls back
-    * to the distributed scan, preserving its exact semantics. A
-    * (file, column) whose chunks lack usable stats yields no ColStats row
-    * — consumers already treat missing stats as must-scan — and an all-null
-    * file records none, both matching the scan path. Driver-side and
-    * O(batch files): a commit's file count is bounded by its partitioning
-    * (never the table's), so this stays trivial even when the table is
-    * 100 TB; the footer open is the same metadata read [[writeShard]]
-    * already does for row counts, now paid once. */
   /** Footer reads above this count fan out as a Spark job instead of a
     * serial driver loop: a 10k-file commit's stats pass is then bounded
     * by the cluster, not one thread's round-trips (at 100 TB the commit
@@ -1890,6 +1812,22 @@ object Snapshots {
     } catch { case _: FooterMiss => None }
   }
 
+  /** Footer-derived per-file stats: min/max/null-count for `statsCols` plus
+    * row counts, read from the parquet FOOTERS of freshly-written files —
+    * metadata-only I/O, NO Spark job. Integral/floating top-level
+    * columns qualify (chunk stats order-match Spark's double-cast exactly:
+    * long→double rounding is monotone, so cast(min) = min(cast)), as do
+    * MICROS-annotated INT64 timestamps (epoch micros, the index's canonical
+    * unit, verbatim) and INT32 dates (epoch days verbatim); a
+    * DECIMAL/string/other statsCol returns None and the caller falls back
+    * to the distributed scan, preserving its exact semantics. A
+    * (file, column) whose chunks lack usable stats yields no ColStats row
+    * — consumers already treat missing stats as must-scan — and an all-null
+    * file records none, both matching the scan path. Driver-side and
+    * O(batch files): a commit's file count is bounded by its partitioning
+    * (never the table's), so this stays trivial even when the table is
+    * 100 TB; the footer open is the same metadata read [[writeShard]]
+    * already does for row counts, now paid once. */
   private def statsFromFooters(
       spark: SparkSession,
       files: Seq[String],
@@ -1933,16 +1871,15 @@ object Snapshots {
     }
   }
 
-  private[graft] def parseSchemaStr(s: String): Option[StructType] =
-    if (s.isEmpty) None
-    else Some(DataType.fromJson(s).asInstanceOf[StructType])
+  private[graft] def parseSchemaStr(s: String): StructType =
+    DataType.fromJson(s).asInstanceOf[StructType]
 
-  private def parseSchema(m: Manifest): Option[StructType] = parseSchemaStr(m.schema)
+  private def parseSchema(m: Manifest): StructType = parseSchemaStr(m.schema)
 
   /** Scan exactly `files`, planned against the manifest's recorded schema
     * and file sizes when present (no footer sampling, and no file status
     * request for a file whose size the manifest records under a unique
-    * basename; pre-schema files fill missing columns with nulls), with the
+    * basename; files written before a column existed read it as null), with the
     * manifest's DELETION VECTORS applied —
     * every read path funnels here, so a merge-on-read delete is invisible
     * to all downstream consumers (merge/mergeInto/delete survivors,
@@ -2045,9 +1982,8 @@ object Snapshots {
     }
   }
 
-  /** The physical scan: a [[ManifestFileIndex]] relation for manifests
-    * that record a schema, a path-based parquet read (which lists and
-    * samples footers) only for schema-less legacy ones. `withMeta = true`
+  /** The physical scan: a [[ManifestFileIndex]] relation planned against
+    * the manifest's recorded schema. `withMeta = true`
     * appends the two hidden DV-join
     * columns — file basename and `_metadata.row_index`, the stable
     * within-file row position parquet scans expose — BEFORE any
@@ -2065,34 +2001,32 @@ object Snapshots {
     def addMeta(df: DataFrame): DataFrame =
       if (!withMeta) df
       else df.select(df.columns.toSeq.map(col) ++ metaCols: _*)
-    parseSchema(m) match {
-      case Some(s) if files.isEmpty =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case Some(s) =>
-        // plan against PHYSICAL names (what the files store), surface
-        // LOGICAL: a renamed column reads from every file generation (files
-        // lacking the physical column fill nulls — additive evolution), a
-        // dropped column is simply not requested, and with no mapping this
-        // is the plain schema read. The relation is sized from the
-        // manifest's recorded bytes: planning touches no data file.
-        val bytes = recordedSizes(m)
-        def scan(schema: StructType) = ManifestFileIndex.scan(spark, files, bytes, schema)
-        val l2p = logicalToPhysical(s)
-        if (l2p.isEmpty) addMeta(scan(s))
-        else {
-          val phys = StructType(s.fields.map(f => f.copy(name = physicalOf(f))))
-          // strip the mapping key from the surfaced schema: the logical
-          // frame must not leak physical names into downstream schemas (a
-          // compact's overwrite would otherwise record a stale mapping)
-          val logicalCols = s.fields.toSeq.map(f =>
-            org.apache.spark.sql.functions.col(physicalOf(f)).as(f.name,
-              new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata).remove(PhysicalKey).build()))
-          scan(phys)
-            .select(logicalCols ++ (if (withMeta) metaCols else Seq.empty): _*)
-        }
-      case None if files.isEmpty => spark.emptyDataFrame
-      case None => addMeta(spark.read.parquet(files: _*))
+    val s = parseSchema(m)
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+    else {
+      // plan against PHYSICAL names (what the files store), surface
+      // LOGICAL: a renamed column reads from every file generation (files
+      // lacking the physical column fill nulls — additive evolution), a
+      // dropped column is simply not requested, and with no mapping this
+      // is the plain schema read. The relation is sized from the
+      // manifest's recorded bytes: planning touches no data file.
+      val bytes = recordedSizes(m)
+      def scan(schema: StructType) = ManifestFileIndex.scan(spark, files, bytes, schema)
+      val l2p = logicalToPhysical(s)
+      if (l2p.isEmpty) addMeta(scan(s))
+      else {
+        val phys = StructType(s.fields.map(f => f.copy(name = physicalOf(f))))
+        // strip the mapping key from the surfaced schema: the logical
+        // frame must not leak physical names into downstream schemas (a
+        // compact's overwrite would otherwise record a stale mapping)
+        val logicalCols = s.fields.toSeq.map(f =>
+          org.apache.spark.sql.functions.col(physicalOf(f)).as(f.name,
+            new org.apache.spark.sql.types.MetadataBuilder()
+              .withMetadata(f.metadata).remove(PhysicalKey).build()))
+        scan(phys)
+          .select(logicalCols ++ (if (withMeta) metaCols else Seq.empty): _*)
+      }
     }
   }
 
@@ -2111,20 +2045,6 @@ object Snapshots {
     }
   }
 
-  /** Write one immutable metadata shard (the batch's file list + stats +
-    * per-file row counts); nothing references it until a manifest names it,
-    * so a loser's shard is ordinary orphan debris, never a correctness
-    * hazard. Files whose row count `knownRows` doesn't carry are counted
-    * from their parquet FOOTERS — a metadata-only read per file, no Spark
-    * job — so every shard this engine writes carries complete counts: the
-    * stats pass supplies them when it runs, footers fill the statsCols-free
-    * commit path, and metadata-only rewrites (carry/compact) pass the
-    * already-known counts through. A file whose footer can't be read (not
-    * parquet, simulated FS quirk) is simply omitted — consumers treat a
-    * missing count as "must scan", never as zero. */
-  /** Per-file row counts from parquet footers — a metadata read per file,
-    * no Spark job. Unreadable footers are omitted (consumers treat a
-    * missing count as "must scan", never as zero). */
   /** Executor-safe single-footer row count (None: unreadable). */
   private def mineFooterRows(
       uri: String, conf: org.apache.hadoop.conf.Configuration): Option[FileRows] =
@@ -2137,10 +2057,24 @@ object Snapshots {
       Some(FileRows(new Path(uri).getName, n, in.getLength))
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Per-file row counts from parquet footers — a metadata read per file,
+    * no Spark job. Unreadable footers are omitted (consumers treat a
+    * missing count as "must scan", never as zero). */
   private def rowsFromFooters(spark: SparkSession, files: Seq[String]): Seq[FileRows] =
     if (files.isEmpty) Seq.empty
     else minedFooters(spark, files, mineFooterRows).flatten
 
+  /** Write one immutable metadata shard (the batch's file list + stats +
+    * per-file row counts); nothing references it until a manifest names it,
+    * so a loser's shard is ordinary orphan debris, never a correctness
+    * hazard. Files whose row count `knownRows` doesn't carry are counted
+    * from their parquet FOOTERS — a metadata-only read per file, no Spark
+    * job — so every shard this engine writes carries complete counts: the
+    * stats pass supplies them when it runs, footers fill the statsCols-free
+    * commit path, and metadata-only rewrites (carry/compact) pass the
+    * already-known counts through. A file whose footer can't be read (not
+    * parquet, simulated FS quirk) is simply omitted — consumers treat a
+    * missing count as "must scan", never as zero. */
   private def writeShard(
       spark: SparkSession,
       root: String,
@@ -2148,8 +2082,7 @@ object Snapshots {
       stats: Seq[ColStats],
       knownRows: Seq[FileRows] = Seq.empty,
       blooms: Seq[FileBloom] = Seq.empty,
-      dvs: Seq[FileDv] = Seq.empty,
-      tsExact: Boolean = true): ShardRef = {
+      dvs: Seq[FileDv] = Seq.empty): ShardRef = {
     val f = fs(spark, root)
     f.mkdirs(new Path(s"${dataRoot(root)}/$SnapDir"))
     val known = knownRows.map(_.file).toSet
@@ -2157,20 +2090,11 @@ object Snapshots {
     val rows = knownRows ++ rowsFromFooters(spark, missing)
     val name = s"shard-${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}.json"
     val out = f.create(shardPath(root, name), /*overwrite=*/ false)
-    try out.write(renderShard(files, stats, rows, blooms, dvs, tsExact)
-      .getBytes("UTF-8")) finally out.close()
+    try out.write(renderShard(files, stats, rows, blooms, dvs).getBytes("UTF-8"))
+    finally out.close()
     ShardRef(name, files.size)
   }
 
-  /** Optimistic-commit loop at the metadata level: re-derive the new
-    * manifest's shard-ref list + schema from the CURRENT head on every
-    * attempt (so a retry lands on top of the racer's state, never a stale
-    * one), then publish atomically. The shards themselves are immutable and
-    * pre-written — a retry re-points at them, it never rewrites them.
-    * `requireHead >= 0` turns the loop into a single guarded attempt: the
-    * commit aborts loudly if the head is not exactly that version — the
-    * read-modify-write fence for callers whose payload was computed FROM a
-    * specific head (merge, delete, incremental refresh). */
   /** Shard-ref count past which a successful commit triggers an automatic
     * [[compactManifests]]. DEFAULT-ON policy, not opt-in mechanism: without
     * it a 10k-commit table carries 10k ShardRefs (~40 B each) in every
@@ -2179,7 +2103,19 @@ object Snapshots {
     * amortizes to O(table metadata / 64) per commit. */
   private[graft] val AutoCompactShardRefs = 64
 
-  /** `clustering` decides the published manifest's hash-clustering spec
+  /** Optimistic-commit loop at the metadata level: re-derive the new
+    * manifest's shard-ref list + schema from the CURRENT head on every
+    * attempt (so a retry lands on top of the racer's state, never a stale
+    * one), then publish atomically. The shards themselves are immutable and
+    * pre-written — a retry re-points at them, it never rewrites them.
+    * Parsing the head refuses a manifest of another format, so no commit
+    * ever lands on top of one ([[ManifestMeta]]).
+    * `requireHead >= 0` turns the loop into a single guarded attempt: the
+    * commit aborts loudly if the head is not exactly that version — the
+    * read-modify-write fence for callers whose payload was computed FROM a
+    * specific head (merge, delete, incremental refresh).
+    *
+    * `clustering` decides the published manifest's hash-clustering spec
     * FROM the head's (None in, None out for most commits): the default
     * DROPS it — conservative-correct, since only a path that provably
     * keeps every file bucket-pure (DV-only deletes, metadata-only commits,
@@ -2208,6 +2144,8 @@ object Snapshots {
             "recompute and retry")
       val headMeta = if (head > 0) Some(manifestMeta(spark, root, head)) else None
       val (refs, schema) = build(headMeta)
+      require(schema.nonEmpty && parseSchemaStr(schema).nonEmpty,
+        s"commit to $root records no columns")
       // retired physical names are a table-lifetime fact: inherited by every
       // commit; only dropColumn extends the list
       val retired = retiredOverride.getOrElse(
@@ -2320,7 +2258,7 @@ object Snapshots {
         .unionByName(df, allowMissingColumns = true)
     val parentSchema = parseSchema(m)
     val fresh = freshPhysicals(parentSchema, meta.retired, survivors.schema)
-    val toPhys = parentSchema.map(logicalToPhysical).getOrElse(Map.empty) ++ fresh
+    val toPhys = logicalToPhysical(parentSchema) ++ fresh
     val (written, newStats, newRows, newBlooms) =
       writeBatch(survivors, root, statsCols, toPhys, bloomCols)
     val newRef = writeShard(spark, root, written, newStats, newRows, newBlooms)
@@ -2443,6 +2381,7 @@ object Snapshots {
       val fb = files.map(base).toSet
       val sub = Manifest(man.version, files, man.parent,
         stats = man.stats.filter(s => fb.contains(s.file)),
+        schema = man.schema,
         blooms = man.blooms.filter(b => fb.contains(b.file)))
       probe match {
         case KeysSmall(ks) => candidateFilesForKeys(sub, key, ks)
@@ -2578,7 +2517,7 @@ object Snapshots {
     val meta = manifestMeta(spark, root, headV)
     val shards = loadShards(spark, root, meta)
     val m = resolve(meta, shards)
-    val targetSchema = parseSchema(m).getOrElse(readFiles(spark, m, m.files.take(1)).schema)
+    val targetSchema = parseSchema(m)
     val targetCols = targetSchema.fields.map(_.name).toSeq
 
     // clause validation up front — a typo'd SET column must not silently
@@ -2690,7 +2629,7 @@ object Snapshots {
 
     // inserts conform to the target schema, so no fresh physicals can
     // arise here — only the parent's rename mapping applies
-    val toPhys = parseSchema(m).map(logicalToPhysical).getOrElse(Map.empty)
+    val toPhys = logicalToPhysical(parseSchema(m))
     val (written, newStats, newRows, newBlooms) =
       writeBatch(survivors, root, statsCols, toPhys, bloomCols)
     val newRef = writeShard(spark, root, written, newStats, newRows, newBlooms)
@@ -2704,8 +2643,7 @@ object Snapshots {
   /** Carry the untouched portion of `shards` forward: a shard with no
     * touched file keeps its ref (zero I/O); a shard intersecting the
     * touched set is rewritten filtered to its untouched entries (cost ∝
-    * that shard's size); a fully-touched shard drops. Pre-shard inline
-    * pseudo-shards (ref name "") always materialize. */
+    * that shard's size); a fully-touched shard drops. */
   private def carryUntouched(
       spark: SparkSession,
       root: String,
@@ -2747,7 +2685,7 @@ object Snapshots {
       touchedNames.contains(d.file) || dvUpdates.contains(d.file) ||
         dvDrop.contains(d.file)
     shards.flatMap { sh =>
-      val affected = sh.ref.name.isEmpty || sh.files.exists(touched) ||
+      val affected = sh.files.exists(touched) ||
         sh.files.exists(u => dvUpdates.contains(new Path(u).getName)) ||
         sh.dvs.exists(dvStale)
       if (!affected) Some(sh.ref)
@@ -2756,7 +2694,7 @@ object Snapshots {
         val dvs = sh.dvs.filterNot(dvStale)
         if (dvs.isEmpty) None
         else Some(writeShard(spark, root, Seq.empty, Seq.empty, Seq.empty,
-          Seq.empty, dvs, tsExact = sh.tsExact))
+          Seq.empty, dvs))
       } else {
         val keep = sh.files.filterNot(touched)
         if (keep.isEmpty) None
@@ -2771,7 +2709,7 @@ object Snapshots {
             sh.stats.filter(s => keepNames.contains(s.file)),
             sh.rows.filter(r => keepNames.contains(r.file)),
             sh.blooms.filter(b => keepNames.contains(b.file)),
-            dvs, tsExact = sh.tsExact))
+            dvs))
         }
       }
     }
@@ -2841,7 +2779,7 @@ object Snapshots {
     val survivors = readFiles(spark, m, touched)
       .join(keys.select(col(key)).distinct(), Seq(key), "left_anti")
     // a delete never introduces columns; only the rename mapping applies
-    val toPhys = parseSchema(m).map(logicalToPhysical).getOrElse(Map.empty)
+    val toPhys = logicalToPhysical(parseSchema(m))
     val (written, newStats, newRows, newBlooms) =
       writeBatch(survivors, root, statsCols, toPhys, bloomCols)
     val newRef = writeShard(spark, root, written, newStats, newRows, newBlooms)
@@ -2903,9 +2841,7 @@ object Snapshots {
     val m = resolve(meta, shards)
     if (m.files.isEmpty) return headV
     // prune with the readWhere miner — only files that can hold a match scan
-    val probe =
-      if (m.schema.nonEmpty) readFilesRaw(spark, m, Seq.empty, withMeta = false).filter(cond)
-      else readFilesRaw(spark, m, m.files, withMeta = false).filter(cond)
+    val probe = readFilesRaw(spark, m, Seq.empty, withMeta = false).filter(cond)
     val (candidates, fullDrop) =
       if (m.stats.isEmpty && m.blooms.isEmpty) (m.files, Set.empty[String])
       else {
@@ -3091,7 +3027,7 @@ object Snapshots {
     val allDrops = dropFiles ++
       m.files.filter(u => deadNames.contains(new Path(u).getName))
     val cowFiles = m.files.filter(u => cowNames.contains(new Path(u).getName))
-    val toPhys = parseSchema(m).map(logicalToPhysical).getOrElse(Map.empty)
+    val toPhys = logicalToPhysical(parseSchema(m))
     val newRefs =
       if (cowFiles.isEmpty) Seq.empty
       else {
@@ -3124,11 +3060,10 @@ object Snapshots {
     * alternative today — [[compact]] — rewrites every byte.
     *
     * INCREMENTAL (round 18): the read pass covers ONLY files missing a
-    * full-fidelity entry for some requested column — an entry that is
-    * canon-safe ([[canonSafeStat]]) AND as capable as a fresh scan's
-    * (string bounds for string columns; an exact recorded SUM for
-    * integral/decimal columns — pre-round-17 entries lack one, so
-    * adopting an old table still heals it into SUM pushdown). Covered
+    * full-fidelity entry for some requested column — an entry as capable
+    * as a fresh scan's (string bounds for string columns; an exact
+    * recorded SUM for integral/decimal columns — footer-mined write-time
+    * entries lack one, so ANALYZE heals them into SUM pushdown). Covered
     * files' entries carry verbatim: stats describe immutable write-once
     * parquet, so a recorded entry can never be stale. Cost is therefore
     * ∝ index DECAY, not table size — declaring one new column on a
@@ -3150,10 +3085,7 @@ object Snapshots {
     * clustering and bucket purity survive. Stats cover each file's
     * PHYSICAL rows (deletion vectors included — same contract as
     * write-time stats: pruning stays a superset, extremes decline under
-    * vectors). Old-generation shards' seconds-canon timestamp stats are
-    * dropped rather than laundered into the new (tsus-marked) shard
-    * bodies — canon-unsafe entries count as missing, so their files
-    * re-scan and heal. */
+    * vectors). */
   def reindexStats(
       spark: SparkSession,
       root: String,
@@ -3168,20 +3100,16 @@ object Snapshots {
     val shards = loadShards(spark, root, meta)
     val m = resolve(meta, shards)
     if (m.files.isEmpty) return headV
-    val schemaOpt = parseSchema(m)
-    val toPhys = schemaOpt.map(logicalToPhysical).getOrElse(Map.empty)
+    val schema = parseSchema(m)
+    val toPhys = logicalToPhysical(schema)
     val statsP = statsCols.map(c => toPhys.getOrElse(c, c))
     val bloomP = bloomCols.map(c => toPhys.getOrElse(c, c))
-    val tsPhys = tsPhysicalCols(schemaOpt)
     // column type by PHYSICAL name, for the fresh-capability check
-    val physType: Map[String, DataType] = schemaOpt
-      .map(_.fields.iterator.map(f => physicalOf(f) -> f.dataType).toMap)
-      .getOrElse(Map.empty)
+    val physType: Map[String, DataType] =
+      schema.fields.iterator.map(f => physicalOf(f) -> f.dataType).toMap
     // is this recorded entry everything a fresh scan would produce? A
     // capability mismatch (numeric bounds on a string column, a missing
-    // SUM on a summable one) marks the file for re-scan; unknown schema
-    // falls back to presence (legacy tables: conservative pruning, no
-    // metadata aggregates anyway).
+    // SUM on a summable one) marks the file for re-scan.
     // a TOMBSTONE ([[ColStats.nr]]) is everything a fresh scan would
     // produce — the scan already ran and proved no range/sum exists, so
     // the file is covered, not decayed (the round-19 fix for "every
@@ -3191,8 +3119,7 @@ object Snapshots {
       case Some(StringType) => st.slo != null
       case Some(ByteType | ShortType | IntegerType | LongType |
                 _: DecimalType) => st.slo == null && st.sumS != null
-      case Some(_) => st.slo == null
-      case None => true
+      case _ => st.slo == null
     })
     // per shard: which files lack a full-fidelity entry for some requested
     // stats column / a bloom for some requested bloom column
@@ -3200,7 +3127,7 @@ object Snapshots {
       val s = Seq.newBuilder[String]; val b = Seq.newBuilder[String]
       shards.foreach { sh =>
         val covered: Map[String, Set[String]] = sh.stats
-          .filter(st => canonSafeStat(sh.tsExact, tsPhys, st) && capable(st))
+          .filter(capable)
           .groupBy(_.file).map { case (f, sts) => f -> sts.map(_.col).toSet }
         val bloomed: Map[String, Set[String]] =
           sh.blooms.groupBy(_.file).map { case (f, bs) => f -> bs.map(_.col).toSet }
@@ -3252,29 +3179,24 @@ object Snapshots {
     val refs = shards.map { sh =>
       val names = sh.files.map(u => new Path(u).getName)
       val oldRowsByName = sh.rows.map(r => r.file -> r).toMap
-      // untouched shards carry by reference — the pre-shard pseudo-shard
-      // (empty ref name) has no reference to carry and always rewrites;
-      // a shard with a count-less file rewrites too (writeShard fills the
-      // row gap from footers — metadata I/O only), so one healed pass
-      // also completes rowsComplete for the metadata COUNT surface
-      val touched = sh.ref.name.isEmpty ||
-        names.exists(n => scannedS(n) || scannedB(n)) ||
+      // untouched shards carry by reference; a shard with a count-less
+      // file rewrites too (writeShard fills the row gap from footers —
+      // metadata I/O only), so one healed pass also completes
+      // rowsComplete for the metadata COUNT surface
+      val touched = names.exists(n => scannedS(n) || scannedB(n)) ||
         names.exists(n => !oldRowsByName.contains(n))
       if (!touched) sh.ref
       else {
         // old entries survive unless this reindex re-scanned their file for
-        // their column, or they are canon-unsafe (the same [[canonSafeStat]]
-        // rule resolve hides by — never carried into the new tsus-marked
-        // shard)
-        val keptStats = sh.stats.filter(st =>
-          !(statsP.contains(st.col) && scannedS(st.file)) &&
-            canonSafeStat(sh.tsExact, tsPhys, st))
+        // their column
+        val keptStats = sh.stats.filterNot(st =>
+          statsP.contains(st.col) && scannedS(st.file))
         val addStats = names.flatMap(n => statsByFile.getOrElse(n, Seq.empty))
         val keptBlooms = sh.blooms.filterNot(b =>
           bloomP.contains(b.col) && scannedB(b.file))
         val addBlooms = names.flatMap(n => bloomsByFile.getOrElse(n, Seq.empty))
         // old row entries win (they carry recorded byte sizes); new ones
-        // only fill gaps (legacy count-less shards)
+        // only fill gaps (count-less shards)
         val rws = names.flatMap(n => oldRowsByName.get(n).orElse(rowsByFileNew.get(n)))
         writeShard(spark, root, sh.files, keptStats ++ addStats, rws,
           keptBlooms ++ addBlooms, sh.dvs)
@@ -3325,7 +3247,7 @@ object Snapshots {
     val names = targets.map(_.file).toSet
     val files = m.files.filter(u => names.contains(new Path(u).getName))
     val survivors = readFiles(spark, m, files) // DVs applied
-    val toPhys = parseSchema(m).map(logicalToPhysical).getOrElse(Map.empty)
+    val toPhys = logicalToPhysical(parseSchema(m))
     val (written, newStats, newRows, newBlooms) =
       writeBatch(survivors, root, statsCols, toPhys, bloomCols)
     val newRef = writeShard(spark, root, written, newStats, newRows, newBlooms)
@@ -3357,12 +3279,8 @@ object Snapshots {
     // seconds) — and convert on the DRIVER to the canonical double the
     // whole index speaks: timestamps as epoch MICROS (exact in a double to
     // ±2^53 ≈ ±285 years, so equality/top-n/min-max pushdowns stay
-    // EXACT where a rounded-seconds canon had to decline), dates as epoch
-    // DAYS. Round 17 changed the timestamp canon from seconds to micros;
-    // new shards carry the "tsus" marker and [[resolve]] hides timestamp
-    // stats from unmarked (older-binary) shards, so old tables stay
-    // readable with conservative pruning (see renderRows' compatibility
-    // note).
+    // EXACT where a rounded-seconds canon would decline), dates as epoch
+    // DAYS.
     def temporal(c: String): Boolean = fieldTypes.get(c).exists {
       case org.apache.spark.sql.types.TimestampType => true
       case org.apache.spark.sql.types.TimestampNTZType => true
@@ -3459,7 +3377,7 @@ object Snapshots {
   }
 
   /** The recorded per-file SUM as a number, if one is usable: None for
-    * never-recorded (footer-mined / pre-round-17) AND for the "!"
+    * never-recorded (footer-mined) AND for the "!"
     * tried-but-unrecordable sentinel (decimal(38) overflow). Every
     * consumer of [[ColStats.sumS]] must come through here. */
   def recordedSum(st: ColStats): Option[java.math.BigDecimal] =
@@ -3474,7 +3392,7 @@ object Snapshots {
     * bounds), while Spark orders NaN ABOVE every value — so an
     * UP-UNBOUNDED probe [x, +inf) (compiled from `a > x` / `a >= x`) is
     * satisfied by NaN rows the recorded max cannot see, and the max-side
-    * test must not prune on such columns (a doctored/legacy/foreign
+    * test must not prune on such columns (a foreign-footer
     * NaN-blind entry would otherwise silently drop NaN rows). Probes
     * with a finite roof stay fully prunable: NaN fails `<= hi`. */
   def candidateFiles(m: Manifest, c: String, lo: Double, hi: Double): Seq[String] = {
@@ -3492,15 +3410,11 @@ object Snapshots {
   }
 
   /** Whether `c` is float/double in `m`'s schema — the types whose
-    * recorded bounds are NaN-blind ([[candidateFiles]]' fence; unknown
-    * schema stays conservative = treat as blind). */
+    * recorded bounds are NaN-blind ([[candidateFiles]]' fence). */
   private def nanBlindType(m: Manifest, c: String): Boolean =
-    parseSchema(m) match {
-      case Some(sc) => sc.fields.exists(f => f.name == c &&
-        (f.dataType == org.apache.spark.sql.types.FloatType ||
-          f.dataType == org.apache.spark.sql.types.DoubleType))
-      case None => true
-    }
+    parseSchema(m).fields.exists(f => f.name == c &&
+      (f.dataType == org.apache.spark.sql.types.FloatType ||
+        f.dataType == org.apache.spark.sql.types.DoubleType))
 
   /** Key-SET pruning: the files whose recorded `c` range contains at least
     * one of `keys` (sorted ascending). For a scattered key set — the
@@ -3674,32 +3588,27 @@ object Snapshots {
     // them), so the literal converts instead of the column
     import org.apache.spark.sql.functions.lit
     import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
-    def bnd(x: Double): org.apache.spark.sql.Column =
-      parseSchema(m).map(_.apply(c).dataType) match {
-        case Some(TimestampNTZType) =>
-          val us = Math.round(x) // canonical micros, exact to ±2^53
-          lit(java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
-            (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC))
-        case Some(TimestampType) =>
-          val us = Math.round(x) // canonical micros, exact to ±2^53
-          lit(java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L),
-            Math.floorMod(us, 1000000L) * 1000L))
-        case Some(DateType) =>
-          lit(java.time.LocalDate.ofEpochDay(x.toLong))
-        case _ => lit(x)
-      }
-    val pred = parseSchema(m).map(_.apply(c).dataType) match {
-      case Some(TimestampNTZType) | Some(TimestampType) | Some(DateType) =>
+    val dt = parseSchema(m).apply(c).dataType
+    def bnd(x: Double): org.apache.spark.sql.Column = dt match {
+      case TimestampNTZType =>
+        val us = Math.round(x) // canonical micros, exact to ±2^53
+        lit(java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
+          (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC))
+      case TimestampType =>
+        val us = Math.round(x) // canonical micros, exact to ±2^53
+        lit(java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L),
+          Math.floorMod(us, 1000000L) * 1000L))
+      case DateType =>
+        lit(java.time.LocalDate.ofEpochDay(x.toLong))
+      case _ => lit(x)
+    }
+    val pred = dt match {
+      case TimestampNTZType | TimestampType | DateType =>
         col(c) >= bnd(lo) && col(c) <= bnd(hi)
       case _ => col(c).cast("double") >= lo && col(c).cast("double") <= hi
     }
-    if (keep.isEmpty)
-      // every file pruned: preserve schema (and exactness) via a plan that
-      // cannot return rows — with a recorded schema that is a true empty
-      // relation; legacy manifests fall back to a lit(false)-filtered scan
-      (if (m.schema.nonEmpty) readFiles(spark, m, Seq.empty)
-       else spark.read.parquet(m.files: _*))
-        .filter(org.apache.spark.sql.functions.lit(false))
+    // every file pruned: an empty relation carrying the recorded schema
+    if (keep.isEmpty) readFiles(spark, m, Seq.empty)
     else readFiles(spark, m, keep).filter(pred)
   }
 
@@ -3845,9 +3754,8 @@ object Snapshots {
     def litD(e: Expression): Option[Double] = e match {
       case Literal(null, _) => None
       // timestamp literals carry MICROS internally — exactly the index's
-      // canonical unit (round 17; the seconds canon before it rounded).
-      // Date literals are epoch DAYS, matching their recorded unit through
-      // the generic path below.
+      // canonical unit. Date literals are epoch DAYS, matching their
+      // recorded unit through the generic path below.
       case Literal(us: Long, TimestampType) => Some(us.toDouble)
       case Literal(us: Long, TimestampNTZType) => Some(us.toDouble)
       case Literal(x, _) => x match {
@@ -4138,8 +4046,8 @@ object Snapshots {
   /** The table's exact row count in O(metadata) — no data file opened, no
     * Spark job. Some(n) when every file in version v carries a recorded
     * per-file count (every shard this engine writes does — see
-    * [[writeShard]]); None on pre-round-8 metadata, where only a scan can
-    * answer. The 100 TB reading: `count(*)` is a manifest fold, the same
+    * [[writeShard]]); None when some file's footer was unreadable at
+    * commit, where only a scan can answer. The 100 TB reading: `count(*)` is a manifest fold, the same
     * O(1)-per-commit bookkeeping that lets engines like Iceberg/Delta
     * answer it without touching a single data object. */
   def rowCount(spark: SparkSession, root: String, version: Long = -1L): Option[Long] = {
@@ -4183,9 +4091,7 @@ object Snapshots {
     // mine against an EMPTY relation carrying the manifest schema: analysis
     // must not touch (or even list) data files — a fully-metadata answer
     // works with every data object unreachable
-    val probe =
-      if (m.schema.nonEmpty) readFiles(spark, m, Seq.empty).filter(cond)
-      else readFiles(spark, m, m.files).filter(cond)
+    val probe = readFiles(spark, m, Seq.empty).filter(cond)
     val (mined, allMinable) = minePredicate(m, probe)
     if (mined.isEmpty) return scanCount(m.files)
     val overlap = mined.map(_.overlap.toSet).reduce(_ intersect _)
@@ -4286,11 +4192,7 @@ object Snapshots {
       case KeysOpaqueSmall(ks) => candidateFilesForStrings(m, c, ks)
       case KeysOpaque => m.files
     }
-    if (touched.isEmpty)
-      (if (m.schema.nonEmpty) readFiles(spark, m, Seq.empty)
-       else spark.read.parquet(m.files: _*))
-        .filter(org.apache.spark.sql.functions.lit(false))
-    else readFiles(spark, m, touched)
+    readFiles(spark, m, touched) // empty: a 0-row relation with the schema
   }
 
   /** [[readForKeys]] with the probe precomputed — pairs with
@@ -4312,14 +4214,9 @@ object Snapshots {
       case KeysOpaqueSmall(ks) => candidateFilesForStrings(m, c, ks)
       case KeysOpaque => m.files
     }
-    if (touched.isEmpty)
-      // every file pruned (or the probe had no keys): mirror readRange's
-      // empty shape so the result still CARRIES THE SCHEMA — on a legacy
-      // (pre-recorded-schema) manifest readFiles(_, Seq.empty) would be a
-      // 0-column relation and the semi join below would throw on `c`
-      (if (m.schema.nonEmpty) readFiles(spark, m, Seq.empty)
-       else spark.read.parquet(m.files: _*))
-        .filter(org.apache.spark.sql.functions.lit(false))
+    // every file pruned (or the probe had no keys): an empty relation
+    // carrying the recorded schema
+    if (touched.isEmpty) readFiles(spark, m, Seq.empty)
     else
       readFiles(spark, m, touched)
         .join(keys.select(col(c)).distinct(), Seq(c), "left_semi")
@@ -4383,84 +4280,69 @@ object Snapshots {
     val mTo = manifest(spark, root, toV)
     val mFrom = if (fromV == 0) None else Some(manifest(spark, root, fromV))
     val fromDvs = mFrom.map(_.dvs).getOrElse(Seq.empty)
-    if (mTo.schema.nonEmpty) {
-      // both sides plan against the TARGET version's recorded schema, so a
-      // delta spanning a schema evolution compares rows in one shape
-      // (pre-evolution files fill the new columns with nulls) and an empty
-      // side is a true empty relation — the plan's only file scans are the
-      // changed files, which is the operator's whole point. Added files
-      // read under the TO version's deletion vectors (rows deleted by toV
-      // never existed for it); REMOVED files read under the FROM version's
-      // (the rows that existed then).
-      val base = readFiles(spark, mTo, added).withColumn("_sign", lit(1))
-        .unionByName(readFilesDvs(spark, mTo, removed, fromDvs)
-          .withColumn("_sign", lit(-1)))
-      // deletion-vector deltas on files carried in BOTH versions: a
-      // merge-on-read delete changes rows with NO file-list change — those
-      // rows surface here by position. toV-only positions are deletions
-      // (-1); fromV-only positions are restorations (+1, the restore-to-
-      // pre-delete case). Cost ∝ changed positions, never the table.
-      val toNames = mTo.files.map(u => new Path(u).getName).toSet
-      val commonNames = mFrom.map(_.files.map(u => new Path(u).getName).toSet
-        .intersect(toNames)).getOrElse(Set.empty)
-      val fromBy = fromDvs.map(d => d.file -> d).toMap
-      val toBy = mTo.dvs.map(d => d.file -> d).toMap
-      def bmOf(m2: Map[String, FileDv], n: String) =
-        m2.get(n).map(d => dvDecode(d.b64))
-          .getOrElse(new org.roaringbitmap.longlong.Roaring64Bitmap())
-      def bmMinus(a: org.roaringbitmap.longlong.Roaring64Bitmap,
-          b: org.roaringbitmap.longlong.Roaring64Bitmap) = {
-        val out = new org.roaringbitmap.longlong.Roaring64Bitmap()
-        val it = a.getLongIterator
-        while (it.hasNext) { val v = it.next(); if (!b.contains(v)) out.addLong(v) }
-        out
-      }
-      val dvDiffs = commonNames.toSeq.sorted.flatMap { n =>
-        if (!fromBy.contains(n) && !toBy.contains(n)) Seq.empty
-        else {
-          val f = bmOf(fromBy, n)
-          val t = bmOf(toBy, n)
-          val del = bmMinus(t, f)
-          val res = bmMinus(f, t)
-          (if (del.isEmpty) Seq.empty else Seq((n, dvEncode(del), -1))) ++
-            (if (res.isEmpty) Seq.empty else Seq((n, dvEncode(res), 1)))
-        }
-      }
-      if (dvDiffs.isEmpty) base
+    // both sides plan against the TARGET version's recorded schema, so a
+    // delta spanning a schema evolution compares rows in one shape
+    // (pre-evolution files fill the new columns with nulls) and an empty
+    // side is a true empty relation — the plan's only file scans are the
+    // changed files, which is the operator's whole point. Added files
+    // read under the TO version's deletion vectors (rows deleted by toV
+    // never existed for it); REMOVED files read under the FROM version's
+    // (the rows that existed then).
+    val base = readFiles(spark, mTo, added).withColumn("_sign", lit(1))
+      .unionByName(readFilesDvs(spark, mTo, removed, fromDvs)
+        .withColumn("_sign", lit(-1)))
+    // deletion-vector deltas on files carried in BOTH versions: a
+    // merge-on-read delete changes rows with NO file-list change — those
+    // rows surface here by position. toV-only positions are deletions
+    // (-1); fromV-only positions are restorations (+1, the restore-to-
+    // pre-delete case). Cost ∝ changed positions, never the table.
+    val toNames = mTo.files.map(u => new Path(u).getName).toSet
+    val commonNames = mFrom.map(_.files.map(u => new Path(u).getName).toSet
+      .intersect(toNames)).getOrElse(Set.empty)
+    val fromBy = fromDvs.map(d => d.file -> d).toMap
+    val toBy = mTo.dvs.map(d => d.file -> d).toMap
+    def bmOf(m2: Map[String, FileDv], n: String) =
+      m2.get(n).map(d => dvDecode(d.b64))
+        .getOrElse(new org.roaringbitmap.longlong.Roaring64Bitmap())
+    def bmMinus(a: org.roaringbitmap.longlong.Roaring64Bitmap,
+        b: org.roaringbitmap.longlong.Roaring64Bitmap) = {
+      val out = new org.roaringbitmap.longlong.Roaring64Bitmap()
+      val it = a.getLongIterator
+      while (it.hasNext) { val v = it.next(); if (!b.contains(v)) out.addLong(v) }
+      out
+    }
+    val dvDiffs = commonNames.toSeq.sorted.flatMap { n =>
+      if (!fromBy.contains(n) && !toBy.contains(n)) Seq.empty
       else {
-        import spark.implicits._
-        val posDf = spark.createDataset(dvDiffs)
-          .flatMap { case (n, b64, sign) =>
-            val it = dvDecode(b64).getLongIterator
-            new Iterator[(String, Long, Int)] {
-              override def hasNext: Boolean = it.hasNext
-              override def next(): (String, Long, Int) = (n, it.next(), sign)
-            }
+        val f = bmOf(fromBy, n)
+        val t = bmOf(toBy, n)
+        val del = bmMinus(t, f)
+        val res = bmMinus(f, t)
+        (if (del.isEmpty) Seq.empty else Seq((n, dvEncode(del), -1))) ++
+          (if (res.isEmpty) Seq.empty else Seq((n, dvEncode(res), 1)))
+      }
+    }
+    if (dvDiffs.isEmpty) base
+    else {
+      import spark.implicits._
+      val posDf = spark.createDataset(dvDiffs)
+        .flatMap { case (n, b64, sign) =>
+          val it = dvDecode(b64).getLongIterator
+          new Iterator[(String, Long, Int)] {
+            override def hasNext: Boolean = it.hasNext
+            override def next(): (String, Long, Int) = (n, it.next(), sign)
           }
-          .toDF(DvFileCol, DvPosCol, "_sign")
-        val changedNames = dvDiffs.map(_._1).toSet
-        val changedFiles = mTo.files.filter(u => changedNames.contains(new Path(u).getName))
-        val raw = readFilesRaw(spark, mTo, changedFiles, withMeta = true)
-        val keep = raw.columns.filterNot(_.startsWith("__gdv_")).toSeq
-        val dvRows = raw
-          .join(org.apache.spark.sql.functions.broadcast(posDf),
-            Seq(DvFileCol, DvPosCol), "inner")
-          .select(keep.map(col) :+ col("_sign"): _*)
-        base.unionByName(dvRows)
-      }
-    } else {
-      // legacy manifests (no recorded schema): one footer read supplies it
-      val addedDf = if (added.nonEmpty) Some(spark.read.parquet(added: _*)) else None
-      val removedDf = if (removed.nonEmpty) Some(spark.read.parquet(removed: _*)) else None
-      val schema = addedDf.orElse(removedDf).map(_.schema).getOrElse {
-        require(mTo.files.nonEmpty,
-          s"cannot derive a schema for an empty diff over an empty snapshot at $root")
-        spark.read.parquet(mTo.files.head).schema
-      }
-      def empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      addedDf.getOrElse(empty).withColumn("_sign", lit(1))
-        .unionByName(removedDf.getOrElse(empty).withColumn("_sign", lit(-1)))
+        }
+        .toDF(DvFileCol, DvPosCol, "_sign")
+      val changedNames = dvDiffs.map(_._1).toSet
+      val changedFiles = mTo.files.filter(u => changedNames.contains(new Path(u).getName))
+      val raw = readFilesRaw(spark, mTo, changedFiles, withMeta = true)
+      val keep = raw.columns.filterNot(_.startsWith("__gdv_")).toSeq
+      val dvRows = raw
+        .join(org.apache.spark.sql.functions.broadcast(posDf),
+          Seq(DvFileCol, DvPosCol), "inner")
+        .select(keep.map(col) :+ col("_sign"): _*)
+      base.unionByName(dvRows)
     }
   }
 
@@ -4605,7 +4487,7 @@ object Snapshots {
     }
     // carry the target's shards BY REFERENCE — a restore is pure metadata,
     // O(#shards) whatever the table size
-    val refs = shardRefsOf(spark, root, target)
+    val refs = target.shardRefs
     // A restore is a CONTENT-CHANGING commit, so it must never wear the
     // row-preserving `optimize:` marker — tag-reading walkers (Incremental
     // reflectedAt, walkInterim, branch classifyChain) would skip it and
@@ -4681,7 +4563,7 @@ object Snapshots {
       statsCols: Seq[String],
       bloomCols: Seq[String],
       cluster: Option[Clustering] = None): Long = {
-    val toPhys = parseSchema(m).map(logicalToPhysical).getOrElse(Map.empty)
+    val toPhys = logicalToPhysical(parseSchema(m))
     val (written, newStats, newRows, newBlooms) =
       writeBatch(rewritten, root, statsCols, toPhys, bloomCols, cluster)
     val newRef = writeShard(spark, root, written, newStats, newRows, newBlooms)
@@ -4741,7 +4623,7 @@ object Snapshots {
     // true no-op: no bucket has more than one file and no vectors live
     if (selected.isEmpty) return headV
     val rewritten = readFiles(spark, m, selected)
-    val toPhys = parseSchema(m).map(logicalToPhysical).getOrElse(Map.empty)
+    val toPhys = logicalToPhysical(parseSchema(m))
     val (written, newStats, newRows, newBlooms) =
       writeBatch(rewritten, root, statsCols, toPhys, bloomCols, Some(c))
     val newRef = writeShard(spark, root, written, newStats, newRows, newBlooms)
@@ -4774,9 +4656,7 @@ object Snapshots {
     val shards = loadShards(spark, root, meta)
     val m = resolve(meta, shards)
     if (m.files.isEmpty) return headV
-    val probe =
-      if (m.schema.nonEmpty) readFilesRaw(spark, m, Seq.empty, withMeta = false).filter(cond)
-      else readFilesRaw(spark, m, m.files, withMeta = false).filter(cond)
+    val probe = readFilesRaw(spark, m, Seq.empty, withMeta = false).filter(cond)
     val selected =
       if (m.stats.isEmpty && m.blooms.isEmpty) m.files
       else {
@@ -4786,7 +4666,7 @@ object Snapshots {
       }
     if (selected.isEmpty) return headV
     val rewritten = readFiles(spark, m, selected).repartition(targetFiles)
-    val toPhys = parseSchema(m).map(logicalToPhysical).getOrElse(Map.empty)
+    val toPhys = logicalToPhysical(parseSchema(m))
     val (written, newStats, newRows, newBlooms) =
       writeBatch(rewritten, root, statsCols, toPhys, bloomCols)
     val newRef = writeShard(spark, root, written, newStats, newRows, newBlooms)
@@ -4916,7 +4796,7 @@ object Snapshots {
   def vacuumBefore(spark: SparkSession, root: String, cutoffMillis: Long): Unit = {
     val allMeta = historyMeta(spark, root)
     if (allMeta.isEmpty) return
-    // the head survives unconditionally; pre-ts manifests (ts=0) age out
+    // the head survives unconditionally
     val (dropM, keepM) = allMeta.partition(m =>
       m.ts < cutoffMillis && m.version != allMeta.last.version)
     if (dropM.isEmpty) return
@@ -4940,11 +4820,8 @@ object Snapshots {
     // shared shards once per referencing version, O(versions × shards) small
     // reads on a long history
     val shardCache = scala.collection.mutable.HashMap.empty[String, Shard]
-    def filesOf(m: ManifestMeta): Seq[String] = m.inline match {
-      case Some((files, _)) => files
-      case None => m.shardRefs.flatMap(r =>
-        shardCache.getOrElseUpdate(r.name, loadShard(spark, root, r)).files)
-    }
+    def filesOf(m: ManifestMeta): Seq[String] = m.shardRefs.flatMap(r =>
+      shardCache.getOrElseUpdate(r.name, loadShard(spark, root, r)).files)
     // branches share data files and metadata shards with this chain by
     // reference — every OTHER chain's full retained history is live too,
     // or vacuuming main would corrupt a forked branch (and vice versa)
@@ -4980,11 +4857,11 @@ object Snapshots {
     val headV = headVersion(spark, root)
     require(headV > 0, s"no snapshot committed at $root yet")
     val meta = manifestMeta(spark, root, headV)
-    if (meta.inline.isEmpty && meta.shardRefs.size <= 1) return headV
+    if (meta.shardRefs.size <= 1) return headV
     val m = resolve(meta, loadShards(spark, root, meta))
-    // known counts pass through; a legacy table's uncounted files get a
-    // one-time footer backfill here (consolidation already touches all
-    // metadata — the natural upgrade point). Tombstones ride along or the
+    // known counts pass through; uncounted files get a one-time footer
+    // backfill here (consolidation already touches all metadata).
+    // Tombstones ride along or the
     // consolidation would turn by-design absence back into "decay".
     val one = writeShard(spark, root, m.files, m.stats ++ m.tombs, m.rows,
       m.blooms, m.dvs)
@@ -5079,34 +4956,18 @@ object Snapshots {
 
   private def renderStats(stats: Seq[ColStats]): String =
     stats.map { s =>
-      // string bounds rendered only when present — numeric entries (and
-      // every pre-round-15 shard) stay byte-identical
+      // optional keys are rendered only when present (see ManifestMeta)
       val str =
         if (s.slo == null) ""
         else s""","slo":${graft.JsonStr(s.slo)},"shi":${graft.JsonStr(s.shi)}"""
-      // sum rendered only when recorded — sum-less entries stay byte-identical
       val sm = if (s.sumS == null) "" else s""","sum":${graft.JsonStr(s.sumS)}"""
-      // tombstone marker only when set — range entries stay byte-identical
-      // (a pre-round-19 reader's regex skips nr-bearing entries entirely:
-      // the file reads as stat-less — conservative, never wrong)
       val nrF = if (s.nr) ""","nr":1""" else ""
       s"""{"file":${graft.JsonStr(s.file)},"col":${graft.JsonStr(s.col)},"min":${s.min},"max":${s.max},"nulls":${s.nulls}$nrF$sm$str}"""
     }.mkString("[", ",", "]")
 
   private def renderRows(rows: Seq[FileRows]): String =
-    // "b" only when known — earlier-era shard bodies stay byte-identical.
-    // COMPATIBILITY IS ONE-WAY (by design): this binary reads every
-    // earlier shard generation SAFELY — a pre-round-16 shard has no "b"
-    // sizes (byte pacing degrades to admit-alone), and a pre-round-17
-    // shard has no "tsus" marker, so [[resolve]] hides its seconds-canon
-    // timestamp stats (those columns read as stat-less: must-scan,
-    // conservative — degrade, never lie). The reverse direction is the
-    // one-way part: a PRE-round-16 reader's rows regex required
-    // `"n":(\d+)}` immediately before the brace and silently parses ZERO
-    // row entries from a "b"-bearing shard (degrading rowCount/countWhere/
-    // aggregate pushdown, never wrong answers), and a pre-round-17 reader
-    // would compare micros stats against seconds literals (wrong answers)
-    // — mixed-version deployments upgrade readers before writers.
+    // "b" only when known: the scan-collected stats pass (convertInPlace,
+    // reindex) sizes no file; byte pacing treats one as budget-exhausting
     rows.map(r => s"""{"file":${graft.JsonStr(r.file)},"n":${r.n}""" +
         (if (r.bytes >= 0L) s""","b":${r.bytes}}""" else "}"))
       .mkString("[", ",", "]")
@@ -5126,46 +4987,32 @@ object Snapshots {
 
   private def renderShard(files: Seq[String], stats: Seq[ColStats],
       rows: Seq[FileRows], blooms: Seq[FileBloom] = Seq.empty,
-      dvs: Seq[FileDv] = Seq.empty,
-      // the round-17 timestamp-canon marker; a METADATA REWRITE of an old
-      // shard must pass the SOURCE shard's flag, or seconds-era stats
-      // would launder into "exact micros"
-      tsExact: Boolean = true): String = {
-    // blooms/dvs rendered only when present — earlier-era shards stay byte-identical
+      dvs: Seq[FileDv] = Seq.empty): String = {
     val bl = if (blooms.isEmpty) "" else s""""blooms":${renderBlooms(blooms)},"""
     val dv = if (dvs.isEmpty) "" else s""""dvs":${renderDvs(dvs)},"""
-    val ts = if (tsExact) """"tsus":true,""" else ""
-    s"""{"stats":${renderStats(stats)},"rows":${renderRows(rows)},$bl$dv$ts"files":${files.map(graft.JsonStr(_)).mkString("[", ",", "]")}}"""
+    s"""{"stats":${renderStats(stats)},"rows":${renderRows(rows)},$bl$dv"files":${files.map(graft.JsonStr(_)).mkString("[", ",", "]")}}"""
   }
 
   private def renderManifestMeta(m: ManifestMeta): String = {
     val shards = m.shardRefs.map(r =>
       s"""{"name":${graft.JsonStr(r.name)},"n":${r.n}}""").mkString("[", ",", "]")
-    // retired (dropped columns' physical names) rendered only when present —
-    // pre-evolution manifests stay byte-compatible
+    // retired (dropped columns' physical names), clustering and indexed are
+    // rendered only when present (see ManifestMeta)
     val retired =
       if (m.retired.isEmpty) ""
       else s""","retired":${m.retired.map(graft.JsonStr(_)).mkString("[", ",", "]")}"""
-    // optional like retired: unclustered manifests stay byte-compatible
-    val clustering = m.clustering.fold("")(c => {
-      // single-key specs keep the legacy "col" form byte-identical;
-      // composite keys (round 15) render a "cols" array
-      val key =
-        if (c.cols.length == 1) s""""col":${graft.JsonStr(c.cols.head)}"""
-        else s""""cols":${c.cols.map(graft.JsonStr(_)).mkString("[", ",", "]")}"""
-      s""","clustering":{$key,"buckets":${c.buckets}""" +
-        (if (c.sorted) ""","sorted":true}""" else "}")
-    })
-    // optional like retired: pre-indexed manifests stay byte-compatible
+    val clustering = m.clustering.fold("")(c =>
+      s""","clustering":{"cols":${c.cols.map(graft.JsonStr(_)).mkString("[", ",", "]")},"buckets":${c.buckets}""" +
+        (if (c.sorted) ""","sorted":true}""" else "}"))
     val indexed = m.indexed.fold("") { case (s, b) =>
       s""","indexed":{"s":${s.map(graft.JsonStr(_)).mkString("[", ",", "]")},"b":${b.map(graft.JsonStr(_)).mkString("[", ",", "]")}}"""
     }
-    s"""{"version":${m.version},"parent":${m.parent},"ts":${m.ts},"tag":${graft.JsonStr(m.tag)},"schema":${graft.JsonStr(m.schema)},"shards":$shards$retired$clustering$indexed}"""
+    s"""{"fmt":$FormatVersion,"version":${m.version},"parent":${m.parent},"ts":${m.ts},"tag":${graft.JsonStr(m.tag)},"schema":${graft.JsonStr(m.schema)},"shards":$shards$retired$clustering$indexed}"""
   }
 
-  private def parseFilesArray(text: String, what: String): Seq[String] = {
+  private def parseFilesArray(text: String): Seq[String] = {
     val files = """"files":\[(.*)\]""".r.findFirstMatchIn(text)
-      .map(_.group(1)).getOrElse(sys.error(s"bad $what: missing files in $text"))
+      .map(_.group(1)).getOrElse(sys.error(s"bad shard: missing files in $text"))
     if (files.trim.isEmpty) Seq.empty[String]
     else """"([^"\\]*(?:\\.[^"\\]*)*)"""".r.findAllMatchIn(files)
       .map(m => unescape(m.group(1))).toSeq
@@ -5174,19 +5021,18 @@ object Snapshots {
   private def parseStatsArray(text: String): Seq[ColStats] = {
     val num = """-?[0-9.eE+-]+"""
     val str = """"([^"\\]*(?:\\.[^"\\]*)*)""""
-    // "nulls" optional: pre-round-8 shards lack it → -1 (unknown);
-    // "sum" optional: scan-collected entries only (round 17, plain decimal
-    // string — never escaped); "slo"/"shi" optional: string-column entries
-    // only (round 15)
-    // "nr" optional: the round-19 no-range tombstone; "sum" accepts the
-    // "!" sentinel (tried, unrecordable) alongside plain decimal strings
+    // "nulls" is -1 when unknown (a foreign footer without null counts);
+    // "sum" optional: scan-collected entries only (plain decimal string —
+    // never escaped, or the "!" sentinel: tried, unrecordable);
+    // "slo"/"shi" optional: string-column entries only; "nr" optional: the
+    // no-range tombstone
     ("""\{"file":"([^"\\]*(?:\\.[^"\\]*)*)","col":"([^"\\]*(?:\\.[^"\\]*)*)","min":(""" + num +
-      """),"max":(""" + num + """)(?:,"nulls":(-?\d+))?(?:,"nr":(1))?(?:,"sum":"([-0-9.!]+)")?(?:,"slo":""" + str +
+      """),"max":(""" + num + """),"nulls":(-?\d+)(?:,"nr":(1))?(?:,"sum":"([-0-9.!]+)")?(?:,"slo":""" + str +
       ""","shi":""" + str + """)?\}""").r
       .findAllMatchIn(text).map { g =>
         ColStats(unescape(g.group(1)), unescape(g.group(2)),
           g.group(3).toDouble, g.group(4).toDouble,
-          Option(g.group(5)).map(_.toLong).getOrElse(-1L),
+          g.group(5).toLong,
           Option(g.group(8)).map(unescape).orNull,
           Option(g.group(9)).map(unescape).orNull,
           sumS = g.group(7),
@@ -5196,7 +5042,7 @@ object Snapshots {
 
   /** Per-file row-count entries. Shape-anchored on `"file"` + `"n"` (stats
     * entries carry `"col"` right after `"file"`, manifest shard refs use
-    * `"name"` — no cross-match); absent in pre-round-8 shards → empty. */
+    * `"name"` — no cross-match). */
   private def parseRowsArray(text: String): Seq[FileRows] =
     """\{"file":"([^"\\]*(?:\\.[^"\\]*)*)","n":(\d+)(?:,"b":(\d+))?\}""".r
       .findAllMatchIn(text)
@@ -5204,7 +5050,7 @@ object Snapshots {
         Option(g.group(3)).map(_.toLong).getOrElse(-1L))).toSeq
 
   /** Bloom entries, shape-anchored on the `"b64"` key (stats carry
-    * `"min"`, rows carry `"n"` — no cross-match). Absent pre-round-9.
+    * `"min"`, rows carry `"n"` — no cross-match).
     * NOTE every string-token pattern in these parsers is the UNROLLED-LOOP
     * form `[^"\\]*(?:\\.[^"\\]*)*`, not the naive `(?:[^"\\]|\\.)*`: the
     * alternation-under-star shape makes Java's regex engine recurse once
@@ -5219,8 +5065,7 @@ object Snapshots {
       .toSeq
 
   /** Deletion-vector entries, shape-anchored on the `"dv64"` key (blooms
-    * carry `"b64"`, stats `"min"`, rows `"n"` — no cross-match). Absent
-    * before round 9's merge-on-read deletes. */
+    * carry `"b64"`, stats `"min"`, rows `"n"` — no cross-match). */
   private def parseDvsArray(text: String): Seq[FileDv] =
     ("""\{"file":"([^"\\]*(?:\\.[^"\\]*)*)","dv64":"([^"\\]*(?:\\.[^"\\]*)*)","del":(\d+)\}""").r
       .findAllMatchIn(text)
@@ -5228,52 +5073,42 @@ object Snapshots {
       .toSeq
 
   private def parseShard(text: String)
-      : (Seq[String], Seq[ColStats], Seq[FileRows], Seq[FileBloom], Seq[FileDv], Boolean) =
-    (parseFilesArray(text, "shard"), parseStatsArray(text), parseRowsArray(text),
-      parseBloomsArray(text), parseDvsArray(text),
-      // round-17 marker: absent => the shard's TIMESTAMP stats are rounded
-      // seconds (older binary) and must not be compared against micros
-      text.contains("\"tsus\":true"))
+      : (Seq[String], Seq[ColStats], Seq[FileRows], Seq[FileBloom], Seq[FileDv]) =
+    (parseFilesArray(text), parseStatsArray(text), parseRowsArray(text),
+      parseBloomsArray(text), parseDvsArray(text))
 
-  /** Minimal parser for the exact shapes renderManifestMeta emits — and,
-    * for pre-shard tables, the legacy inline form (files+stats in the
-    * manifest itself), surfaced via `inline`. No json library in the
-    * classpath contract, same stance as JsonStr on the write side. */
-  private def parseManifestMeta(text: String): ManifestMeta = {
+  /** Minimal parser for the exact shape renderManifestMeta emits. No json
+    * library in the classpath contract, same stance as JsonStr on the
+    * write side. A manifest not stamped `"fmt":1` is refused with one
+    * error naming `path` ([[ManifestMeta]]). */
+  private def parseManifestMeta(text: String, path: Path): ManifestMeta = {
+    val fmt = """^\{"fmt":(\d+),""".r.findFirstMatchIn(text).map(_.group(1))
+    if (!fmt.contains(FormatVersion.toString))
+      throw new IllegalStateException(
+        s"unsupported snapshot manifest $path (${fmt.fold("no format stamp")(f =>
+          s"format $f")}): this engine reads manifest format $FormatVersion " +
+          "only — read the table with the engine that wrote it and commit its " +
+          "rows to a new root")
+    def missing(key: String): Nothing = sys.error(s"bad manifest $path: missing $key")
     def longField(key: String): Long =
       s""""$key":(-?\\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong)
-        .getOrElse(sys.error(s"bad manifest: missing $key in $text"))
-    val tag = """"tag":"([^"\\]*(?:\\.[^"\\]*)*)"""".r.findFirstMatchIn(text)
-      .map(m => unescape(m.group(1))).getOrElse("")
-    // optional: pre-ts manifests read as ts=0 (always readAsOf-eligible)
-    val ts = """"ts":(-?\d+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toLong).getOrElse(0L)
-    // optional: pre-schema manifests read as "" (reads fall back to footers)
-    val schema = """"schema":"([^"\\]*(?:\\.[^"\\]*)*)"""".r.findFirstMatchIn(text)
-      .map(m => unescape(m.group(1))).getOrElse("")
-    // optional: pre-evolution manifests carry no retired list
+        .map(_.group(1).toLong).getOrElse(missing(key))
+    def stringField(key: String): String =
+      s""""$key":"([^"\\\\]*(?:\\\\.[^"\\\\]*)*)"""".r.findFirstMatchIn(text)
+        .map(m => unescape(m.group(1))).getOrElse(missing(key))
+    // optional: only dropColumn starts a retired list
     val retired = stringArrayAfter(text, """"retired":""").getOrElse(Seq.empty)
-    // optional: pre-clustering manifests read as None (unclustered).
-    // Composite keys (round 15) carry a quote-aware "cols" array; the
-    // legacy single-key "col" form parses as before.
+    // optional: None = unclustered
     val clustering = {
-      val multi = {
-        val at = text.indexOf(""""clustering":{"cols":""")
-        if (at < 0) None
-        else for {
-          (cols, after) <- stringArrayAt(text, at + """"clustering":{"cols":""".length)
-          bm <- """^,"buckets":(\d+)(,"sorted":true)?\}""".r
-            .findFirstMatchIn(text.substring(after))
-        } yield Clustering(cols, bm.group(1).toInt, sorted = bm.group(2) != null)
-      }
-      multi.orElse(
-        """"clustering":\{"col":"([^"\\]*(?:\\.[^"\\]*)*)","buckets":(\d+)(,"sorted":true)?\}""".r
-          .findFirstMatchIn(text)
-          .map(g => Clustering(Seq(unescape(g.group(1))), g.group(2).toInt,
-            sorted = g.group(3) != null)))
+      val at = text.indexOf(""""clustering":{"cols":""")
+      if (at < 0) None
+      else for {
+        (cols, after) <- stringArrayAt(text, at + """"clustering":{"cols":""".length)
+        bm <- """^,"buckets":(\d+)(,"sorted":true)?\}""".r
+          .findFirstMatchIn(text.substring(after))
+      } yield Clustering(cols, bm.group(1).toInt, sorted = bm.group(2) != null)
     }
-    // optional: pre-indexed manifests read as None (appendFiles resolves)
+    // optional: None = nothing declared yet (appendFiles resolves)
     val indexed = {
       val at = text.indexOf(""""indexed":{"s":""")
       if (at < 0) None
@@ -5283,20 +5118,14 @@ object Snapshots {
         (b, _) <- stringArrayAt(text, bAt + """"b":""".length)
       } yield (s, b)
     }
-    val shardsField = """"shards":\[(.*?)\]""".r.findFirstMatchIn(text).map(_.group(1))
-    shardsField match {
-      case Some(body) =>
-        val refs = """\{"name":"([^"\\]*(?:\\.[^"\\]*)*)","n":(\d+)\}""".r
-          .findAllMatchIn(body)
-          .map(g => ShardRef(unescape(g.group(1)), g.group(2).toLong)).toSeq
-        ManifestMeta(longField("version"), longField("parent"), refs, tag, ts, schema,
-          retired = retired, clustering = clustering, indexed = indexed)
-      case None => // legacy inline manifest
-        ManifestMeta(longField("version"), longField("parent"), Seq.empty, tag, ts, schema,
-          retired = retired,
-          inline = Some((parseFilesArray(text, "manifest"), parseStatsArray(text))),
-          clustering = clustering, indexed = indexed)
-    }
+    val refs = """"shards":\[(.*?)\]""".r.findFirstMatchIn(text)
+      .map(g => """\{"name":"([^"\\]*(?:\\.[^"\\]*)*)","n":(\d+)\}""".r
+        .findAllMatchIn(g.group(1))
+        .map(r => ShardRef(unescape(r.group(1)), r.group(2).toLong)).toSeq)
+      .getOrElse(missing("shards"))
+    ManifestMeta(longField("version"), longField("parent"), refs,
+      stringField("tag"), longField("ts"), stringField("schema"),
+      retired = retired, clustering = clustering, indexed = indexed)
   }
 
   /** Parse the `["a","b",...]` string array whose `[` sits at `text(at)`,

@@ -199,7 +199,7 @@ private[streaming] class SnapshotStreamingWrite(
     }.toSeq.sorted
     if (newFiles.isEmpty) return // an empty trigger mints no version
     Snapshots.appendFiles(SparkSession.active, root, newFiles,
-      tag = s"stream-$queryId-e$epochId", schemaIfNew = Some(rowSchema))
+      tag = s"stream-$queryId-e$epochId", schemaIfNew = rowSchema)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -400,19 +400,13 @@ private[graft] object SnapshotParquetDataWriter {
       .json
   }
 
-  /** Flattened conf for executor-side parquet writing.
-    * ParquetWriteSupport + SparkToParquetSchemaConverter read several
-    * keys RAW (`.toBoolean` / `withName`, no ConfigEntry default
-    * fallback) — resolve them on the DRIVER through the session conf
-    * (which does apply defaults) and append LAST so they override any
-    * unset/garbage value in the flattened entries. */
   /** [[writerConf]] plus parquet-internal bloom filters (adaptive) on the
     * table's declared bloom-indexed PHYSICAL columns — read O(1) from the
     * head record ([[Snapshots.ManifestMeta.indexed]]) so files written by
     * the DSv2 paths (streaming epochs, CoW rewrites) prune row groups on
-    * string points exactly like batch-committed ones. A legacy head
-    * without the declaration simply writes without them (pruning weakens,
-    * never rows). */
+    * string points exactly like batch-committed ones. A head without the
+    * declaration simply writes without them (pruning weakens, never
+    * rows). */
   def writerConfWithBlooms(spark: SparkSession, root: String): Array[(String, String)] = {
     val headV = Snapshots.headVersion(spark, root)
     val bloomPhys =
@@ -425,6 +419,12 @@ private[graft] object SnapshotParquetDataWriter {
          bloomPhys.map(c => s"parquet.bloom.filter.enabled#$c" -> "true"))
   }
 
+  /** Flattened conf for executor-side parquet writing.
+    * ParquetWriteSupport + SparkToParquetSchemaConverter read several
+    * keys RAW (`.toBoolean` / `withName`, no ConfigEntry default
+    * fallback) — resolve them on the DRIVER through the session conf
+    * (which does apply defaults) and append LAST so they override any
+    * unset/garbage value in the flattened entries. */
   def writerConf(spark: SparkSession): Array[(String, String)] = {
     def resolved(key: String, dflt: String): (String, String) =
       key -> spark.conf.get(key, dflt)

@@ -114,8 +114,6 @@ private[streaming] object SnapshotSource {
     val v = if (version > 0) version else Snapshots.headVersion(spark, root)
     if (v == 0) return new StructType()
     val s = Snapshots.parseSchemaStr(Snapshots.manifestMeta(spark, root, v).schema)
-      .getOrElse(sys.error(
-        s"$root has no recorded schema (legacy manifest) — commit once to record one"))
     StructType(s.fields.map(f => f.copy(metadata = Metadata.empty)))
   }
 
@@ -228,8 +226,7 @@ private[streaming] object SnapshotSource {
     val head = Snapshots.headVersion(spark, root)
     if (head == 0) return Map.empty // fresh table: logical IS physical
     Snapshots.parseSchemaStr(Snapshots.manifestMeta(spark, root, head).schema)
-      .map(s => s.fields.map(f => f.name -> Snapshots.physicalOf(f)).toMap)
-      .getOrElse(Map.empty)
+      .fields.map(f => f.name -> Snapshots.physicalOf(f)).toMap
   }
 }
 
@@ -1428,29 +1425,25 @@ private[streaming] class SnapshotMicroBatchStream(
         // arithmetic as the ReadMaxFiles branch, instead of resolving and
         // set-differencing FULL manifests per version on a long catch-up.
         // Shard-replacing commits (compaction/merge/delete) fall back to
-        // the full-manifest diff, lazily. A file whose shard predates the
-        // size index counts as budget-exhausting (admitted alone with its
-        // version, conservative), so old tables still make progress.
+        // the full-manifest diff, lazily. A file without a recorded size
+        // counts as budget-exhausting (admitted alone with its version,
+        // conservative), so such tables still make progress.
         var v = from
         var budget: Long = mb.maxBytes()
-        def refsOf(mm: Snapshots.ManifestMeta): Option[Seq[Snapshots.ShardRef]] =
-          if (mm.inline.isDefined) None else Some(mm.shardRefs)
-        var prevRefs: Option[Set[String]] =
-          if (from == 0) Some(Set.empty)
-          else refsOf(Snapshots.manifestMeta(spark, root, from))
-            .map(_.map(_.name).toSet)
+        var prevRefs: Set[String] =
+          if (from == 0) Set.empty
+          else Snapshots.manifestMeta(spark, root, from).shardRefs.map(_.name).toSet
         var prevFiles: Option[Set[String]] =
           if (from == 0) Some(Set.empty) else None
         var done = false
         while (!done && v < head) {
-          val mm = Snapshots.manifestMeta(spark, root, v + 1)
-          val curRefs = refsOf(mm)
-          val bytes: Long = (prevRefs, curRefs) match {
-            case (Some(p), Some(c)) if p.subsetOf(c.map(_.name).toSet) =>
+          val curRefs = Snapshots.manifestMeta(spark, root, v + 1).shardRefs
+          val bytes: Long =
+            if (prevRefs.subsetOf(curRefs.map(_.name).toSet)) {
               prevFiles = None // cached file set no longer describes v+1
               Snapshots.shardFileBytes(spark, root,
-                c.filterNot(r => p.contains(r.name)))
-            case _ =>
+                curRefs.filterNot(r => prevRefs.contains(r.name)))
+            } else {
               val pf = prevFiles.getOrElse(
                 if (v == 0) Set.empty[String]
                 else Snapshots.manifest(spark, root, v).files.toSet)
@@ -1462,11 +1455,11 @@ private[streaming] class SnapshotMicroBatchStream(
                 // carry duplicate basenames — each file's bytes must count
                 added.toSeq.map(u => new Path(u).getName),
                 m1.rows.iterator.map(r => r.file -> r.bytes).toMap)
-          }
+            }
           if (bytes <= budget || v == from) {
             // always admit at least one version, else no progress
             budget = math.max(0L, budget - bytes)
-            prevRefs = curRefs.map(_.map(_.name).toSet)
+            prevRefs = curRefs.map(_.name).toSet
             v += 1
           } else done = true
         }
@@ -1481,30 +1474,27 @@ private[streaming] class SnapshotMicroBatchStream(
         // (compaction/merge/delete) load full file lists, lazily.
         var v = from
         var budget: Long = mf.maxFiles().toLong
-        def shardsOf(mm: Snapshots.ManifestMeta): Option[Map[String, Long]] =
-          if (mm.inline.isDefined) None
-          else Some(mm.shardRefs.map(r => r.name -> r.n).toMap)
-        var prevShards: Option[Map[String, Long]] =
-          if (from == 0) Some(Map.empty)
-          else shardsOf(Snapshots.manifestMeta(spark, root, from))
+        def shardsOf(v: Long): Map[String, Long] =
+          Snapshots.manifestMeta(spark, root, v).shardRefs.map(r => r.name -> r.n).toMap
+        var prevShards: Map[String, Long] =
+          if (from == 0) Map.empty else shardsOf(from)
         var prevFiles: Option[Set[String]] =
           if (from == 0) Some(Set.empty) else None
         var done = false
         while (!done && v < head) {
-          val mm = Snapshots.manifestMeta(spark, root, v + 1)
-          val curShards = shardsOf(mm)
-          val addedCount: Long = (prevShards, curShards) match {
-            case (Some(p), Some(c)) if p.keySet.subsetOf(c.keySet) =>
+          val curShards = shardsOf(v + 1)
+          val addedCount: Long =
+            if (prevShards.keySet.subsetOf(curShards.keySet)) {
               prevFiles = None // cached file set no longer describes v+1
-              (c.keySet -- p.keySet).iterator.map(c).sum
-            case _ =>
+              (curShards.keySet -- prevShards.keySet).iterator.map(curShards).sum
+            } else {
               val pf = prevFiles.getOrElse(
                 if (v == 0) Set.empty[String]
                 else Snapshots.manifest(spark, root, v).files.toSet)
               val nf = Snapshots.manifest(spark, root, v + 1).files.toSet
               prevFiles = Some(nf)
               (nf -- pf).size.toLong
-          }
+            }
           if (addedCount <= budget || v == from) {
             // always admit at least one version, else no progress
             budget -= addedCount
@@ -1598,23 +1588,17 @@ private[streaming] class SnapshotMicroBatchStream(
         val m = Snapshots.manifest(spark, root, v)
         (m.files.toSet, m.dvs.map(d => d.file -> d.b64).toMap)
       }
-    // shard-ref names of the previous commit; None for pre-shard (inline)
-    // manifests, which are ineligible for the cheap path
-    def shardsOf(mm: Snapshots.ManifestMeta): Option[Set[String]] =
-      if (mm.inline.isDefined) None else Some(mm.shardRefs.map(_.name).toSet)
-    var prevShards: Option[Set[String]] =
-      if (fromV == 0) Some(Set.empty)
+    // shard-ref names of the previous commit
+    def shardsOf(mm: Snapshots.ManifestMeta): Set[String] = mm.shardRefs.map(_.name).toSet
+    var prevShards: Set[String] =
+      if (fromV == 0) Set.empty
       else shardsOf(Snapshots.manifestMeta(spark, root, fromV))
     var v = fromV
     while (v < toV) {
       v += 1
       val mm = Snapshots.manifestMeta(spark, root, v)
       val curShards = shardsOf(mm)
-      val pureAppend = (prevShards, curShards) match {
-        case (Some(p), Some(c)) => p.subsetOf(c)
-        case _ => false
-      }
-      if (pureAppend) {
+      if (prevShards.subsetOf(curShards)) {
         // every parent shard carried by reference: nothing removed, no DV
         // changed — preSpan unchanged. The cached full state no longer
         // describes v; drop it (recomputed on demand).

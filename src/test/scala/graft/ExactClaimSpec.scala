@@ -260,32 +260,18 @@ class ExactClaimSpec extends SparkSpec {
           .otherwise(($"id".cast("float") / 10f) + lit(6.0f)).as("fv"))
         .coalesce(1), // ONE file so the NaN poisons the whole column's stats
       root, statsCols = Seq("id", "fv"))
-    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = new Path(s"$root/_snapshots")
-    def readText(p: Path): String = {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    rewriteShard(root) { body =>
+      // the NaN-polluted float column must record no usable RANGE: footer
+      // mining leaves it absent (parquet-mr omits NaN-polluted float
+      // bounds), the distributed pass records a no-range tombstone (round
+      // 19) — either way nothing a miner could trust
+      val fvEntries = """\{[^}]*"col":"fv"[^}]*\}""".r.findAllIn(body).toList
+      assert(fvEntries.forall(_.contains("\"nr\":1")),
+        s"a NaN-polluted float column must record no usable range: $fvEntries")
+      val fname = """"file":"([^"]+)"""".r.findFirstMatchIn(body).get.group(1)
+      body.replace("\"stats\":[",
+        s""""stats":[{"file":"$fname","col":"fv","min":6.0,"max":6.9,"nulls":0},""")
     }
-    val shard = f.listStatus(snap).map(_.getPath)
-      .find(_.getName.startsWith("shard-")).getOrElse(fail("no shard"))
-    val body = readText(shard)
-    // the NaN-polluted float column must record no usable RANGE: footer
-    // mining leaves it absent (parquet-mr omits NaN-polluted float
-    // bounds), the distributed pass records a no-range tombstone (round
-    // 19) — either way nothing a miner could trust
-    val fvEntries = """\{[^}]*"col":"fv"[^}]*\}""".r.findAllIn(body).toList
-    assert(fvEntries.forall(_.contains("\"nr\":1")),
-      s"a NaN-polluted float column must record no usable range: $fvEntries")
-    val fname = """"file":"([^"]+)"""".r.findFirstMatchIn(body).get.group(1)
-    val doctored = body.replace("\"stats\":[",
-      s""""stats":[{"file":"$fname","col":"fv","min":6.0,"max":6.9,"nulls":0},""")
-    val nn = s"shard-${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}.json"
-    val out = f.create(new Path(snap, nn), false)
-    try out.write(doctored.getBytes("UTF-8")) finally out.close()
-    val mp = new Path(snap, "manifest-1.json")
-    val repointed = readText(mp).replace(shard.getName, nn) // read BEFORE create truncates
-    val out2 = f.create(mp, true)
-    try out2.write(repointed.getBytes("UTF-8")) finally out2.close()
 
     val q = batchRead(root).filter($"fv" < 7.0f)
     val d = descOf(q)

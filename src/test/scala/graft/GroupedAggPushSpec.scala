@@ -191,40 +191,17 @@ class GroupedAggPushSpec extends SparkSpec {
 
   /** Doctor the head manifest so `fileName` (recorded row count `n`)
     * carries a FULL deletion vector — the state `commitMarkedDeletes` can
-    * no longer produce (it drops fully-deleted files), synthesized here
-    * the only way it can still arise: a shard written by an older binary.
-    * The shard is re-written under a NEW name (shards are immutable and
-    * process-cached) and the manifest is re-pointed at it. */
+    * no longer produce (it drops fully-deleted files); the grouped
+    * pushdown's suppression of such a group stays pinned regardless. */
   private def fullVector(root: String, fileName: String, n: Long): Unit = {
-    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = new Path(s"$root/_snapshots")
-    def readText(p: Path): String = {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    def writeText(p: Path, s: String): Unit = {
-      val out = f.create(p, true)
-      try out.write(s.getBytes("UTF-8")) finally out.close()
-    }
-    val shard = f.listStatus(snap).map(_.getPath)
-      .filter(_.getName.startsWith("shard-"))
-      .find(p => readText(p).contains(fileName))
-      .getOrElse(fail(s"no shard holds $fileName"))
     val bm = new org.roaringbitmap.longlong.Roaring64Bitmap()
     (0L until n).foreach(p => bm.add(p))
     bm.runOptimize()
     val bos = new java.io.ByteArrayOutputStream()
     bm.serialize(new java.io.DataOutputStream(bos))
     val b64 = java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
-    val doctored = readText(shard).replace(""""files":""",
-      s""""dvs":[{"file":"$fileName","dv64":"$b64","del":$n}],"files":""")
-    val newName = s"shard-${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}.json"
-    writeText(new Path(snap, newName), doctored)
-    val head = f.listStatus(snap).map(_.getPath.getName)
-      .flatMap("""manifest-(\d+)\.json""".r.findFirstMatchIn(_))
-      .map(_.group(1).toLong).max
-    val mp = new Path(snap, s"manifest-$head.json")
-    writeText(mp, readText(mp).replace(shard.getName, newName))
+    rewriteShard(root, _.contains(fileName))(_.replace(""""files":""",
+      s""""dvs":[{"file":"$fileName","dv64":"$b64","del":$n}],"files":"""))
   }
 
   test("a fully-vectored single-group file never emits a phantom (group, 0) row") {

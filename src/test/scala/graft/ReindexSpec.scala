@@ -17,9 +17,8 @@ import graft.engine.Snapshots
   * Pins: the file list is IDENTICAL across the commit; deletion vectors,
   * recorded byte sizes, and other columns' metadata carry; the indexed
   * surface actually lights up (band pruning, countWhere from metadata,
-  * SUM/MIN/MAX pushdown answering with the data bytes destroyed);
-  * seconds-era timestamp stats are dropped, never laundered into the new
-  * tsus-marked shards; the SQL CALL surface routes the same path.
+  * SUM/MIN/MAX pushdown answering with the data bytes destroyed); the SQL
+  * CALL surface routes the same path.
   */
 class ReindexSpec extends SparkSpec {
   import spark.implicits._
@@ -127,33 +126,6 @@ class ReindexSpec extends SparkSpec {
       case o => o.children.flatMap(go)
     }
     go(q.queryExecution.executedPlan).mkString("\n")
-  }
-
-  test("seconds-era ts stats are dropped by reindex, not laundered; reindexing ts heals them") {
-    val root = tmp()
-    val day = (d: Int) => java.time.LocalDateTime.of(2024, 3, d, 12, 0)
-    Snapshots.commit(
-      (1 to 20).map(d => (d.toLong, day(d))).toDF("id", "ts")
-        .repartitionByRange(4, $"ts"),
-      root, statsCols = Seq("ts", "id"))
-    // age the shard to the seconds generation (no tsus marker, /1e6 stats)
-    ageShardToSecondsCanon(root)
-    // reindex a DIFFERENT column: the aged ts stats must NOT reappear as
-    // exact-micros in the new tsus-marked shard
-    val v2 = Snapshots.reindexStats(spark, root, Seq("id"))
-    assert(Snapshots.manifest(spark, root, v2).stats.forall(_.col != "ts"),
-      "seconds-canon ts stats must be dropped, not laundered")
-    val cond = col("ts") >= lit(day(6)) && col("ts") < lit(day(16))
-    assert(Snapshots.countWhere(spark, root, cond) === 10L)
-    // reindexing ts itself rebuilds exact-micros stats: range prunes again
-    Snapshots.reindexStats(spark, root, Seq("ts"))
-    val planned = Snapshots.readWhere(spark, root, cond)
-      .queryExecution.sparkPlan.collect {
-        case fe: org.apache.spark.sql.execution.FileSourceScanExec =>
-          fe.relation.location.inputFiles.length
-      }.sum
-    assert(planned < 4, s"healed ts index must prune ($planned of 4)")
-    assert(Snapshots.readWhere(spark, root, cond).count() === 10L)
   }
 
   test("reindex is incremental: covered files' bytes are never read, decayed ones heal") {
@@ -280,22 +252,7 @@ class ReindexSpec extends SparkSpec {
       spark.range(0, 120).select($"id",
         concat(lit("t"), ($"id" % 4).cast("string")).as("tag")).coalesce(1),
       root, statsCols = Seq("tag")) // string entries: capable as written
-    val f = fs(root)
-    val snap = new Path(s"$root/_snapshots")
-    def readText(p: Path): String = {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    val shard = f.listStatus(snap).map(_.getPath)
-      .find(_.getName.startsWith("shard-")).getOrElse(fail("no shard"))
-    val countless = readText(shard).replaceAll("""\"rows\":\[[^\]]*\]""", "\"rows\":[]")
-    val nn = s"shard-${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}.json"
-    val out = f.create(new Path(snap, nn), false)
-    try out.write(countless.getBytes("UTF-8")) finally out.close()
-    val mp = new Path(snap, "manifest-1.json")
-    val repointed = readText(mp).replace(shard.getName, nn) // read BEFORE create truncates
-    val out2 = f.create(mp, true)
-    try out2.write(repointed.getBytes("UTF-8")) finally out2.close()
+    rewriteShard(root)(_.replaceAll("""\"rows\":\[[^\]]*\]""", "\"rows\":[]"))
     assert(Snapshots.manifest(spark, root, 1L).rows.isEmpty)
 
     val v2 = Snapshots.reindexStats(spark, root, Seq("tag"))

@@ -47,12 +47,14 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  /** Rewrite `root`'s v1 shard body through `edit`, as an earlier binary
-    * would have written it. Shards are immutable and process-cached, so the
-    * doctored body lands under a NEW name and the manifest is re-pointed.
-    * ONE definition for every suite that fabricates legacy shards, so a
-    * format change cannot silently leave a spec testing a malformed relic. */
-  def rewriteShard(root: String)(edit: String => String): Unit = {
+  /** Rewrite one of `root`'s shard bodies — the first whose text `select`
+    * accepts — through `edit`, to model a shard this engine does not write
+    * itself (a foreign footer's stats, a state an older commit path left).
+    * Shards are immutable and process-cached, so the doctored body lands
+    * under a NEW name and the head manifest is re-pointed. ONE definition
+    * for every suite that doctors shards. */
+  def rewriteShard(root: String, select: String => Boolean = _ => true)(
+      edit: String => String): Unit = {
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snap = new org.apache.hadoop.fs.Path(s"$root/_snapshots")
@@ -65,22 +67,13 @@ trait SparkSpec extends AnyFunSuite {
       try out.write(s.getBytes("UTF-8")) finally out.close()
     }
     val shard = f.listStatus(snap).map(_.getPath)
-      .find(_.getName.startsWith("shard-"))
-      .getOrElse(fail(s"no shard under $root"))
+      .filter(_.getName.startsWith("shard-"))
+      .find(p => select(readText(p)))
+      .getOrElse(fail(s"no matching shard under $root"))
     val nn = s"shard-${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}.json"
     writeText(new org.apache.hadoop.fs.Path(snap, nn), edit(readText(shard)))
-    val mp = new org.apache.hadoop.fs.Path(snap, "manifest-1.json")
+    val head = graft.engine.Snapshots.headVersion(spark, root)
+    val mp = new org.apache.hadoop.fs.Path(snap, s"manifest-$head.json")
     writeText(mp, readText(mp).replace(shard.getName, nn))
   }
-
-  /** Age `root`'s v1 shard back to the PRE-round-17 generation: strip the
-    * `"tsus"` canon marker and convert the `ts` column's recorded stats
-    * from micros to the old rounded-seconds unit. */
-  def ageShardToSecondsCanon(root: String, tsCol: String = "ts"): Unit =
-    rewriteShard(root) { text =>
-      (""""col":"""" + java.util.regex.Pattern.quote(tsCol) +
-        """","min":([-0-9.eE]+),"max":([-0-9.eE]+)""").r
-        .replaceAllIn(text.replace(""""tsus":true,""", ""), m =>
-          s""""col":"$tsCol","min":${m.group(1).toDouble / 1e6},"max":${m.group(2).toDouble / 1e6}""")
-    }
 }

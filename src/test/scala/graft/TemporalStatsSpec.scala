@@ -148,33 +148,6 @@ class TemporalStatsSpec extends SparkSpec {
     assert(got2 === (4L to 7L).toSet)
   }
 
-  test("seconds-era shards (no tsus marker) hide their ts stats: degrade, never lie") {
-    // a shard written by a pre-round-17 binary recorded timestamp stats in
-    // rounded SECONDS and carries no "tsus" marker. Simulated by doctoring
-    // the shard back to that generation: resolve must HIDE the ts stats
-    // (columns read as stat-less → every file scans, results exact) —
-    // comparing micros literals against seconds bounds would return
-    // silently-empty bands and metadata-delete wrong files
-    val root = tmp()
-    val rows = (1 to 20).map(d => (d.toLong, day(d)))
-    Snapshots.commit(rows.toDF("id", "ts").repartitionByRange(4, $"ts"),
-      root, statsCols = Seq("ts"))
-    ageShardToSecondsCanon(root)
-    // the band read stays EXACT (the old stats are invisible, all files scan)
-    val cond = col("ts") >= lit(day(6)) && col("ts") < lit(day(16))
-    val got = Snapshots.readWhere(spark, root, cond)
-      .select("id").as[Long].collect().toSet
-    assert(got === (6L to 15L).toSet,
-      "seconds-era ts stats must be hidden, not compared against micros")
-    assert(Snapshots.countWhere(spark, root, cond) === 10L)
-    // a retention delete over the aged shard must not metadata-drop wrongly
-    val v = Snapshots.deleteWhere(spark, root, col("ts") < lit(day(6)))
-    assert(Snapshots.read(spark, root).select("id").as[Long].collect().toSet ===
-      (6L to 20L).toSet)
-    // and statsRange (a pure metadata answer) declines instead of lying
-    assert(Snapshots.statsRange(spark, root, "ts", 1L).isEmpty)
-  }
-
   test("date-keyed delete prunes through epoch-day stats (probe no longer opaque)") {
     // the per-day upsert/delete shape: a DATE key column now probes as
     // canonical epoch DAYS (unix_date) instead of going opaque on the
