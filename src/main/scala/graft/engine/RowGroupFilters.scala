@@ -8,7 +8,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
 /** Row-group (and page/bloom) predicate pushdown for the DSv2 snapshot
-  * readers — the WITHIN-file half of filter pruning. [[FilterPrune]] drops
+  * readers — the WITHIN-file half of filter pruning. [[StatsPredicate]] drops
   * whole files via the manifest index; this module re-expresses the same
   * pushed conjuncts as parquet `FilterPredicate`s so the reader's
   * `ParquetFileReader` can additionally drop row groups (footer stats),
@@ -63,7 +63,7 @@ private[graft] object RowGroupFilters {
       physOf: Map[String, String]): Array[RgF] =
     filters.flatMap(one(_, schema, physOf)).toArray
 
-  private def tagOf(dt: DataType): Option[String] = dt match {
+  private[engine] def tagOf(dt: DataType): Option[String] = dt match {
     case ByteType | ShortType | IntegerType | DateType => Some("int")
     case LongType => Some("long")
     case FloatType => Some("float")
@@ -118,8 +118,8 @@ private[graft] object RowGroupFilters {
     case ("double", d: java.lang.Double) if !d.isNaN => Some(d.doubleValue)
     case ("boolean", b: java.lang.Boolean) => Some(b.booleanValue)
     case ("string", s: String) => Some(s)
-    // epoch-micros canonicalization, the exact arithmetic FilterPrune's
-    // file-level miner uses (same unit since round 17) — both java.sql and
+    // epoch-micros canonicalization, also the file-level literal of
+    // StatsPredicate.fromFilter (same unit since round 17) — both java.sql and
     // java.time literal flavors arrive depending on spark.sql.datetime.java8API
     case ("ts", t: java.sql.Timestamp) => Some(DateTimeUtils.fromJavaTimestamp(t))
     case ("ts", i: java.time.Instant) => Some(DateTimeUtils.instantToMicros(i))
@@ -182,7 +182,7 @@ private[graft] object RowGroupFilters {
         col(a).flatMap { case (p, t) =>
           val cs = vs.flatMap(v => canon(t, v))
           // a null/untranslatable member makes the IN unminable (its rows
-          // could live anywhere) — all-or-nothing, like FilterPrune
+          // could live anywhere) — all-or-nothing, like StatsPredicate
           if (cs.length == vs.length) Some(RgIn(p, t, cs)) else None
         }
       // LIKE 'p%' as the range [p, nextPrefix(p)): min/max footer stats

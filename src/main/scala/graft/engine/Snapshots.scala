@@ -267,7 +267,7 @@ object Snapshots {
       stats: Seq[ColStats] = Seq.empty,
       tag: String = "",
       ts: Long = 0L,
-      schema: String = "",
+      schema: String,
       rows: Seq[FileRows] = Seq.empty,
       blooms: Seq[FileBloom] = Seq.empty,
       dvs: Seq[FileDv] = Seq.empty,
@@ -564,8 +564,8 @@ object Snapshots {
     * scale the type can't hold proves `d` is no image at all → None);
     * float/double never (NaN-blind stats); strings have no double canon.
     * Callers: [[graft.streaming.SnapshotSourceProvider]]'s aggregate
-    * pushdown, the Catalyst miner's full-acceptance guard here, and
-    * [[FilterPrune]]'s top-n threshold emission / full-acceptance twin. */
+    * pushdown, [[StatsPredicate]]'s acceptance and rejection at a bound,
+    * and [[FilterPrune]]'s top-n threshold emission. */
   private[graft] def exactValue(
       dt: org.apache.spark.sql.types.DataType, d: Double): Option[Any] = {
     import org.apache.spark.sql.types._
@@ -2243,10 +2243,7 @@ object Snapshots {
     // rewrites, conservative but correct for string doc-id/hash keys
     val touched = probe match {
       case KeysEmpty => sys.error("merge batch has no non-null keys")
-      case KeysSmall(ks) => candidateFilesForKeys(m, key, ks)
-      case KeysRange(lo, hi) => candidateFiles(m, key, lo, hi)
-      case KeysOpaqueSmall(ks) => candidateFilesForStrings(m, key, ks)
-      case KeysOpaque => m.files
+      case p => candidateFilesForProbe(m, key, p)
     }
     val touchedSet = touched.toSet
     val survivors =
@@ -2384,10 +2381,8 @@ object Snapshots {
         schema = man.schema,
         blooms = man.blooms.filter(b => fb.contains(b.file)))
       probe match {
-        case KeysSmall(ks) => candidateFilesForKeys(sub, key, ks)
-        case KeysRange(lo, hi) => candidateFiles(sub, key, lo, hi)
-        case KeysOpaqueSmall(ks) => candidateFilesForStrings(sub, key, ks)
-        case _ => files // opaque keys: no pruning index — conservative
+        case KeysEmpty => files // unreachable: merge refuses an empty batch
+        case p => candidateFilesForProbe(sub, key, p)
       }
     }
     if (nwMeta.schema != oldMeta.schema)
@@ -2554,10 +2549,7 @@ object Snapshots {
     val probe = if (hasBySource) KeysOpaque else probeKeys(source, key)
     val touched = probe match {
       case KeysEmpty => sys.error("mergeInto source has no non-null keys")
-      case KeysSmall(ks) => candidateFilesForKeys(m, key, ks)
-      case KeysRange(lo, hi) => candidateFiles(m, key, lo, hi)
-      case KeysOpaqueSmall(ks) => candidateFilesForStrings(m, key, ks)
-      case KeysOpaque => m.files
+      case p => candidateFilesForProbe(m, key, p)
     }
     val touchedSet = touched.toSet
     val target = readFiles(spark, m, touched)
@@ -2751,10 +2743,7 @@ object Snapshots {
     val probe = probeKeys(keys, key)
     val touched = probe match {
       case KeysEmpty => return headV // empty key set: nothing to delete
-      case KeysSmall(ks) => candidateFilesForKeys(m, key, ks)
-      case KeysRange(lo, hi) => candidateFiles(m, key, lo, hi)
-      case KeysOpaqueSmall(ks) => candidateFilesForStrings(m, key, ks)
-      case KeysOpaque => m.files
+      case p => candidateFilesForProbe(m, key, p)
     }
     if (touched.isEmpty) return headV // no file can hold a matching row
     if (mergeOnRead) {
@@ -2801,7 +2790,7 @@ object Snapshots {
     * copy-on-write's full rewrite of every touched file.
     *
     * Mechanics per call:
-    *  1. the predicate is mined against the stats/bloom index exactly as
+    *  1. the predicate is judged against the stats/bloom index as in
     *     [[readWhere]] — only files that can hold a matching row scan;
     *  2. the scan (existing DVs applied, so already-deleted rows never
     *     re-count) marks matching positions and compresses them
@@ -2840,29 +2829,24 @@ object Snapshots {
     val shards = loadShards(spark, root, meta)
     val m = resolve(meta, shards)
     if (m.files.isEmpty) return headV
-    // prune with the readWhere miner — only files that can hold a match scan
+    // prune as readWhere does — only files that can hold a match scan
     val probe = readFilesRaw(spark, m, Seq.empty, withMeta = false).filter(cond)
     val (candidates, fullDrop) =
       if (m.stats.isEmpty && m.blooms.isEmpty) (m.files, Set.empty[String])
-      else {
-        val (mined, allMinable) = minePredicate(m, probe)
-        if (mined.isEmpty) (m.files, Set.empty[String])
-        else {
-          val keepSet = mined.map(_.overlap.toSet).reduce(_ intersect _)
-          val kept = m.files.filter(keepSet)
-          // METADATA DELETE (round 16): a file EVERY conjunct fully
-          // accepts (recorded bounds inside the band, zero recorded
-          // nulls) provably holds ONLY matching rows — drop it from the
-          // manifest without scanning, vectoring, or rewriting it. The
-          // retention shape at 100 TB: `DELETE WHERE day < cutoff` over a
+      else statsPredicate(probe) match {
+        case None => (m.files, Set.empty[String])
+        case Some(pred) =>
+          val kept = StatsPredicate.overlap(m, pred)
+          // METADATA DELETE (round 16): a file the predicate accepts
+          // (recorded bounds inside the band, zero recorded nulls)
+          // provably holds ONLY matching rows — drop it from the manifest
+          // without scanning, vectoring, or rewriting it. The retention
+          // shape at 100 TB: `DELETE WHERE day < cutoff` over a
           // day-laid-out table is O(manifest), not a scan of the expiring
           // region. Sound under an existing DV (live rows ⊆ all rows, all
-          // matching); files with unrecorded stats never full-accept.
-          val full =
-            if (!allMinable) Set.empty[String]
-            else mined.map(_.full).reduce(_ intersect _)
+          // matching); files with unrecorded stats never accept.
+          val full = StatsPredicate.accept(m, pred)
           (kept, kept.filter(full).toSet)
-        }
       }
     if (candidates.isEmpty) return headV
     val scanSet = candidates.filterNot(fullDrop)
@@ -3385,36 +3369,22 @@ object Snapshots {
 
   /** The subset of `m.files` a [lo, hi] range predicate on `c` can touch:
     * files whose recorded range overlaps, plus files with no recorded range
-    * (pruning must stay conservative).
-    *
-    * NaN fence (round 19): recorded float/double bounds are NaN-BLIND
-    * (parquet footers omit NaN; the stats pass declines non-finite
-    * bounds), while Spark orders NaN ABOVE every value — so an
-    * UP-UNBOUNDED probe [x, +inf) (compiled from `a > x` / `a >= x`) is
-    * satisfied by NaN rows the recorded max cannot see, and the max-side
-    * test must not prune on such columns (a foreign-footer
-    * NaN-blind entry would otherwise silently drop NaN rows). Probes
-    * with a finite roof stay fully prunable: NaN fails `<= hi`. */
+    * (pruning must stay conservative). Spark orders NaN above +inf, so no
+    * NaN row lies in a band; but recorded float/double bounds are
+    * NaN-blind, so a caller probing `c > x` as [x, +inf] must not prune
+    * with them ([[StatsPredicate]]'s NaN-blind rule). */
   def candidateFiles(m: Manifest, c: String, lo: Double, hi: Double): Seq[String] = {
-    val maxBlind = hi.isPosInfinity && nanBlindType(m, c)
     // slo-bearing entries are STRING bounds whose min/max are inert
     // placeholders — a numeric probe must never read them
     val ranges = m.stats.filter(s => s.col == c && s.slo == null)
       .map(s => s.file -> s).toMap
     m.files.filter { f =>
       ranges.get(new Path(f).getName) match {
-        case Some(s) => s.min <= hi && (maxBlind || s.max >= lo)
+        case Some(s) => s.min <= hi && s.max >= lo
         case None => true
       }
     }
   }
-
-  /** Whether `c` is float/double in `m`'s schema — the types whose
-    * recorded bounds are NaN-blind ([[candidateFiles]]' fence). */
-  private def nanBlindType(m: Manifest, c: String): Boolean =
-    parseSchema(m).fields.exists(f => f.name == c &&
-      (f.dataType == org.apache.spark.sql.types.FloatType ||
-        f.dataType == org.apache.spark.sql.types.DoubleType))
 
   /** Key-SET pruning: the files whose recorded `c` range contains at least
     * one of `keys` (sorted ascending). For a scattered key set — the
@@ -3422,16 +3392,24 @@ object Snapshots {
     * global [min, max] covers nearly every file, but each FILE's tight
     * range (z-order/range-clustered layouts) contains few or none of the
     * keys, so per-file membership prunes orders of magnitude harder.
-    * O(|files| · log |keys|); stat-less files stay conservative. */
+    * O(|files| · log |keys|); stat-less files stay conservative. The
+    * search compares as Spark does, so -0.0 and 0.0 are one key
+    * (`Arrays.binarySearch` orders -0.0 first and would miss a 0.0 file
+    * probed by -0.0). */
   def candidateFilesForKeys(m: Manifest, c: String, keys: Array[Double]): Seq[String] = {
     val ranges = m.stats.filter(s => s.col == c && s.slo == null)
       .map(s => s.file -> s).toMap
     m.files.filter { f =>
       ranges.get(new Path(f).getName) match {
         case Some(s) =>
-          val i = java.util.Arrays.binarySearch(keys, s.min)
-          val idx = if (i >= 0) i else -i - 1
-          idx < keys.length && keys(idx) <= s.max
+          // the first key >= s.min
+          var lo = 0
+          var hi = keys.length
+          while (lo < hi) {
+            val mid = (lo + hi) >>> 1
+            if (keys(mid) < s.min) lo = mid + 1 else hi = mid
+          }
+          lo < keys.length && keys(lo) <= s.max
         case None => true
       }
     }
@@ -3499,6 +3477,20 @@ object Snapshots {
     * string values: the [[FileBloom]] index can prune per file where the
     * numeric stats index cannot see at all. */
   private[engine] final case class KeysOpaqueSmall(ks: Array[String]) extends KeyProbe
+
+  /** The files of `m` whose recorded `c` stats or bloom cannot rule out
+    * every probed key: per-file key membership, the global range past the
+    * driver cap, the bloom for opaque keys, every file when nothing
+    * indexes them, and none for an empty probe (callers that treat an
+    * empty batch otherwise decide that first). */
+  private[engine] def candidateFilesForProbe(
+      m: Manifest, c: String, probe: KeyProbe): Seq[String] = probe match {
+    case KeysEmpty => Seq.empty
+    case KeysSmall(ks) => candidateFilesForKeys(m, c, ks)
+    case KeysRange(lo, hi) => candidateFiles(m, c, lo, hi)
+    case KeysOpaqueSmall(ks) => candidateFilesForStrings(m, c, ks)
+    case KeysOpaque => m.files
+  }
 
   /** Classify a batch's key column for file pruning. Numeric(-castable)
     * keys prune: by sorted distinct set when it fits the driver cap (one
@@ -3619,26 +3611,29 @@ object Snapshots {
     * is [[readRange]]'s UX fixed: no hand-lifting of bounds into (col,
     * lo, hi) arguments, no knowledge of which columns carry stats; the
     * pruner reads the ANALYZED Catalyst predicate (so it sees exactly
-    * what the engine will evaluate, casts and all) and mines it
-    * conservatively:
+    * what the engine will evaluate, casts and all) and judges it with
+    * [[StatsPredicate]]'s overlap face:
     *
-    *  - top-level conjuncts split (`a && b` prunes by both);
+    *  - `a && b` prunes by both sides, `a || b` by the union of both
+    *    (an OR prunes only when both sides can be judged);
     *  - `<col> {<,<=,>,>=,=,<=>} <literal>` (either operand order) on a
-    *    stats column tightens that column's [lo, hi] band;
+    *    stats column tightens that column's band; string columns prune
+    *    through their bounds and blooms, `startsWith` through its band;
     *  - `IN (literals)` prunes by per-file key-set membership
     *    ([[candidateFilesForKeys]] — tighter than the list's envelope);
+    *  - IS [NOT] NULL prunes through recorded null counts and all-null
+    *    tombstones;
     *  - widening numeric casts around the column (the analyzer's own
-    *    comparison coercions: int→long/double, float/decimal→double) are
-    *    looked through — they are monotonic, so a file's [min, max] maps
-    *    to the cast domain faithfully; truncating casts are NOT unwrapped
-    *    (double→int is not order-faithful against raw-column stats);
-    *  - anything else — OR trees, functions of the column, IS NULL,
-    *    opaque string predicates — contributes NO pruning for its
-    *    conjunct and the file survives. Conservative, never wrong.
+    *    comparison coercions) are looked through, and `cast(ntz as date)`
+    *    and `year(date)` prune as monotone transforms; truncating casts
+    *    are NOT unwrapped (double→int is not order-faithful against
+    *    raw-column stats);
+    *  - anything else — other functions of the column, opaque string
+    *    predicates — contributes NO pruning and the file survives.
+    *    Conservative, never wrong.
     *
-    * Files pruned = intersection across all mined constraints; result ≡
-    * `read(...).filter(cond)` by construction (spec-pinned, including
-    * randomized predicates), the index only shrinks the scan. At lake
+    * Result ≡ `read(...).filter(cond)` by construction (spec-pinned,
+    * including randomized predicates), the index only shrinks the scan. At lake
     * scale this is the difference between "the analyst's WHERE clause
     * reads the z-order sliver" and "the analyst knew to call the right
     * pruning API". */
@@ -3653,395 +3648,22 @@ object Snapshots {
     val full = readFiles(spark, m, m.files)
     val filtered = full.filter(cond)
     if (m.stats.isEmpty && m.blooms.isEmpty) return filtered
-    val (mined, _) = minePredicate(m, filtered)
-    if (mined.isEmpty) return filtered
-    val keepSet = mined.map(_.overlap.toSet).reduce(_ intersect _)
-    if (keepSet.size == m.files.size) filtered
-    else if (keepSet.isEmpty)
+    val keep = statsPredicate(filtered).fold(m.files)(StatsPredicate.overlap(m, _))
+    if (keep.size == m.files.size) filtered
+    else if (keep.isEmpty)
       // no file can satisfy the mined constraints: a provably-empty plan
       // over the SAME relation keeps the schema on any manifest era
       filtered.filter(org.apache.spark.sql.functions.lit(false))
-    else readFiles(spark, m, m.files.filter(keepSet)).filter(cond)
+    else readFiles(spark, m, keep).filter(cond)
   }
 
-  /** One mined conjunct of a predicate: `overlap` = the files that MIGHT
-    * hold a satisfying row (the pruning set — stat-less files stay in,
-    * conservative); `full` = the files where EVERY row provably satisfies
-    * it: recorded stats, ZERO recorded nulls for the column (a null fails
-    * any comparison — a nulls-bearing file must scan), and the file's
-    * [min, max] strictly inside the accepted region (strict bounds honored
-    * exactly, never widened). full ⊆ overlap by construction. */
-  private final case class MinedConjunct(overlap: Seq[String], full: Set[String])
-
-  /** Mine `filtered`'s ANALYZED predicate (so the miner sees exactly what
-    * the engine will evaluate, casts and all) against `m`'s stats index.
-    * Returns (one entry per MINABLE conjunct, allMinable): an opaque
-    * conjunct — OR tree, function of a column, IS NULL, stat-less column —
-    * yields no entry and flips allMinable to false. That is harmless for
-    * pruning (no constraint ⇒ no file dropped) but decisive for
-    * [[countWhere]]: nothing may be counted from metadata while a conjunct
-    * the miner can't read could reject rows anywhere. */
-  private def minePredicate(
-      m: Manifest,
-      filtered: DataFrame): (Seq[MinedConjunct], Boolean) = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    import org.apache.spark.sql.types._
-    // string-bound entries (slo set) never numeric-mine
-    val numStats = m.stats.filter(_.slo == null)
-    val statCols = numStats.map(_.col).toSet
-    val statsByCol = numStats.groupBy(_.col)
-      .map { case (c, ss) => c -> ss.map(s => s.file -> s).toMap }
-
-    // the analyzed (resolved, coerced) predicate — what will actually run
-    val resolved: Option[Expression] =
-      filtered.queryExecution.analyzed.collectFirst { case f: LFilter => f.condition }
-
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    // monotonic (order-faithful) casts only: a file's raw-column [min,max]
-    // — recorded as doubles — brackets the cast values iff the cast is
-    // non-decreasing and the stats' own cast("double") commutes with it
-    def widening(from: DataType, to: DataType): Boolean = (from, to) match {
-      case (ByteType | ShortType | IntegerType, LongType | FloatType | DoubleType) => true
-      case (LongType | FloatType, DoubleType) => true
-      case (_: DecimalType, DoubleType) => true
-      case (f, t) => f == t
-    }
-    /** (stat column, monotone transform from its canonical unit to the
-      * compared unit, is-identity). Non-identity transforms come from
-      * TZ-FREE calendar shapes only — `cast(ntz_ts as date)` (wall-clock
-      * date, micros → epoch days) and `year(date)` (days → year); their
-      * LTZ variants depend on the session zone and conservatively do not
-      * mine. A transformed conjunct contributes OVERLAP pruning only
-      * (`full` stays empty): monotone non-decreasing f maps a file's
-      * [min, max] to a bracketing [f(min), f(max)], so overlap stays a
-      * sound superset, while full acceptance would need injectivity. */
-    def statAttr(e: Expression): Option[(String, Double => Double, Boolean)] =
-      e match {
-        case a: AttributeReference if statCols.contains(a.name) =>
-          Some((a.name, identity[Double] _, true))
-        case c: Cast if widening(c.child.dataType, c.dataType) => statAttr(c.child)
-        case c: Cast if c.dataType == DateType &&
-            c.child.dataType == TimestampNTZType =>
-          statAttr(c.child).map { case (n, f, _) =>
-            (n, (x: Double) => math.floor(f(x) / 86400e6), false) } // micros → days
-        case y: Year if y.child.dataType == DateType =>
-          statAttr(y.child).map { case (n, f, _) =>
-            (n, (x: Double) =>
-              java.time.LocalDate.ofEpochDay(f(x).toLong).getYear.toDouble,
-              false) }
-        case _ => None
-      }
-    /** Files whose TRANSFORMED recorded range can intersect [lo, hi]
-      * (stat-less files stay candidates). Identity delegates to the one
-      * shared [[candidateFiles]] implementation so the two overlap tests
-      * cannot diverge. */
-    def overlapOf(c: String, f: Double => Double, ident: Boolean,
-        lo: Double, hi: Double): Seq[String] =
-      if (ident) candidateFiles(m, c, lo, hi)
-      else {
-        val ranges = statsByCol.getOrElse(c, Map.empty)
-        m.files.filter { file =>
-          ranges.get(new Path(file).getName) match {
-            case Some(st) => f(st.max) >= lo && f(st.min) <= hi
-            case None => true
-          }
-        }
-      }
-    def litD(e: Expression): Option[Double] = e match {
-      case Literal(null, _) => None
-      // timestamp literals carry MICROS internally — exactly the index's
-      // canonical unit. Date literals are epoch DAYS, matching their
-      // recorded unit through the generic path below.
-      case Literal(us: Long, TimestampType) => Some(us.toDouble)
-      case Literal(us: Long, TimestampNTZType) => Some(us.toDouble)
-      case Literal(x, _) => x match {
-        // a NaN literal is UNMINABLE, not a range probe (same rule as
-        // FilterPrune.canon): Spark orders NaN above every value and equal
-        // to itself, while recorded bounds are NaN-blind — `fv = NaN`
-        // against them would prune files whose hidden NaN rows match
-        case n: Number => Some(n.doubleValue).filterNot(_.isNaN)
-        case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-        case _ => None
-      }
-      // the analyzer coerces the LITERAL side too (`id >= 250` becomes
-      // `id >= cast(250 as bigint)` in the analyzed plan — folding only
-      // happens later, in the optimizer); widening casts preserve the
-      // numeric value we mine
-      case c: Cast if widening(c.child.dataType, c.dataType) => litD(c.child)
-      case _ => None
-    }
-    // files whose recorded stats satisfy `ok` AND carry zero nulls — the
-    // full-acceptance filter shared by every shape below
-    def fullFiles(c: String, ok: ColStats => Boolean): Set[String] = {
-      val byFile = statsByCol.getOrElse(c, Map.empty)
-      m.files.filter { f =>
-        byFile.get(new Path(f).getName).exists(s => s.nulls == 0L && ok(s))
-      }.toSet
-    }
-    // FULL acceptance on EQUALITY or a NON-STRICT bound compares the
-    // rounded-double stat to the rounded-double literal — sound only when
-    // value→double is INJECTIVE over the compared values, else distinct
-    // values collapse (long 2^53+1 and 2^53 share a double: `id =
-    // 9007199254740993L` must not full-accept a file of ...992s — wired to
-    // dropFiles, that collapse is data loss). STRICT bounds need no guard:
-    // rounding is monotone non-decreasing, so rd(v) < rd(lit) ⟹ v < lit.
-    // Overlap pruning is likewise monotone-safe and stays unguarded. The
-    // rule itself lives in ONE place — [[exactValue]] (round 18; also
-    // guards aggAnswer.exact, FilterPrune's full-acceptance twin, and the
-    // capForTopN threshold emission).
-    val typeOf: Map[String, DataType] =
-      filtered.queryExecution.analyzed.output.map(a => a.name -> a.dataType).toMap
-    def injective(c: String, d: Double): Boolean =
-      typeOf.get(c).exists(dt => exactValue(dt, d).isDefined)
-    // float/double bounds are NaN-BLIND (the stats pass declines
-    // NaN-polluted entries; foreign/doctored ones may hide NaN rows), so
-    // a finite recorded range proves nothing about EVERY row — FULL
-    // acceptance never trusts them (one rule with FilterPrune.fullAccept's
-    // nanBlind; e.g. `fv < 7`'s hi-strict arm would otherwise full-accept
-    // [6.0, 6.9] over a file hiding NaN, and deleteWhere would drop the
-    // NaN row that fails the predicate). Overlap pruning's NaN fence
-    // lives in [[candidateFiles]].
-    def nanBlindC(c: String): Boolean = typeOf.get(c).exists {
-      case FloatType | DoubleType => true
-      case _ => false
-    }
-    def bound(a: (String, Double => Double, Boolean), x: Double,
-        isLo: Boolean, strict: Boolean): MinedConjunct = {
-      val (c, f, ident) = a
-      val overlap =
-        if (isLo) overlapOf(c, f, ident, x, Double.PositiveInfinity)
-        else overlapOf(c, f, ident, Double.NegativeInfinity, x)
-      val full =
-        if (!ident || nanBlindC(c)) Set.empty[String]
-        else fullFiles(c, s =>
-          if (isLo) {
-            if (strict) s.min > x
-            else injective(c, x) && injective(c, s.min) && s.min >= x
-          } else {
-            if (strict) s.max < x
-            else injective(c, x) && injective(c, s.max) && s.max <= x
-          })
-      MinedConjunct(overlap, full)
-    }
-    def pointOf(a: (String, Double => Double, Boolean), x: Double): MinedConjunct = {
-      val (c, f, ident) = a
-      MinedConjunct(overlapOf(c, f, ident, x, x),
-        if (!ident || nanBlindC(c)) Set.empty
-        else fullFiles(c, s =>
-          injective(c, x) && injective(c, s.min) && s.min == x && s.max == x))
-    }
-    def point(l: Expression, r: Expression): Option[MinedConjunct] =
-      (statAttr(l), litD(r), statAttr(r), litD(l)) match {
-        case (Some(a), Some(x), _, _) => Some(pointOf(a, x))
-        case (_, _, Some(a), Some(x)) => Some(pointOf(a, x))
-        case _ => None
-      }
-    // `attr > lit` and `lit < attr` are the same lo-bound; mirror for hi.
-    // For the OVERLAP set strictness collapses (candidate ranges are closed
-    // — the closed band is a conservative superset); for the FULL set it is
-    // honored exactly inside `bound`.
-    def band(l: Expression, r: Expression, loSide: Boolean,
-        strict: Boolean): Option[MinedConjunct] =
-      (statAttr(l), litD(r), statAttr(r), litD(l)) match {
-        case (Some(a), Some(x), _, _) => Some(bound(a, x, isLo = loSide, strict))
-        case (_, _, Some(a), Some(x)) => Some(bound(a, x, isLo = !loSide, strict))
-        case _ => None
-      }
-    def inKeys(a: (String, Double => Double, Boolean), arr: Array[Double]): MinedConjunct = {
-      val (c, f, ident) = a
-      if (ident)
-        MinedConjunct(candidateFilesForKeys(m, c, arr),
-          fullFiles(c, s => s.min == s.max && injective(c, s.min) &&
-            java.util.Arrays.binarySearch(arr, s.min) >= 0))
-      else
-        // transformed in-set: conservative range envelope of the key set
-        MinedConjunct(overlapOf(c, f, ident = false, arr.head, arr.last), Set.empty)
-    }
-    // STRING conjuncts prune through BOTH string indexes: the per-file
-    // bloom ([[FileBloom]], equality/IN absence) and the slo/shi bounds
-    // ([[ColStats]] string form, UTF8-byte order — bands, prefixes).
-    // Round 16: strings also FULL-accept — slo==shi==k pins every row to
-    // k exactly (truncated parquet bounds that coincide still pin), and a
-    // band swallows a file whose whole [slo, shi] sits inside it — so
-    // `lang = 'de'` retention deletes drop partition-shaped files as
-    // metadata and countWhere answers string bands without scanning.
-    // Truncation stays sound by direction: slo is a LOWER bound (slo >= k
-    // proves every row >= k), shi an UPPER one (shi < k proves every row
-    // < k); nulls must be recorded ZERO for any full acceptance.
-    val bloomedCols = m.blooms.map(_.col).toSet
-    val strStatCols = m.stats.iterator.filter(_.slo != null).map(_.col).toSet
-    val strStatsByCol = m.stats.filter(_.slo != null).groupBy(_.col)
-      .map { case (c, ss) => c -> ss.map(s => s.file -> s).toMap }
-    def strAttr(e: Expression): Option[String] = e match {
-      case a: AttributeReference if a.dataType == StringType &&
-          (bloomedCols.contains(a.name) || strStatCols.contains(a.name)) =>
-        Some(a.name)
-      case _ => None
-    }
-    def litS(e: Expression): Option[String] = e match {
-      case Literal(u: org.apache.spark.unsafe.types.UTF8String, StringType) =>
-        Some(u.toString)
-      case _ => None
-    }
-    def cmpU(a: String, b: String): Int =
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-    def fullStrFiles(c: String, ok: ColStats => Boolean): Set[String] = {
-      val byFile = strStatsByCol.getOrElse(c, Map.empty)
-      m.files.filter(f =>
-        byFile.get(new Path(f).getName).exists(s => s.nulls == 0L && ok(s))).toSet
-    }
-    def strPointOf(c: String, k: String): MinedConjunct = {
-      val band = candidateFilesForStringBand(m, c, k, Some(k + "\u0000"))
-      val overlap =
-        if (!bloomedCols.contains(c)) band
-        else { val b = candidateFilesForStrings(m, c, Array(k)).toSet; band.filter(b) }
-      MinedConjunct(overlap, fullStrFiles(c, s => s.slo == k && s.shi == k))
-    }
-    def strPoint(l: Expression, r: Expression): Option[MinedConjunct] =
-      (strAttr(l), litS(r), strAttr(r), litS(l)) match {
-        case (Some(c), Some(k), _, _) => Some(strPointOf(c, k))
-        case (_, _, Some(c), Some(k)) => Some(strPointOf(c, k))
-        case _ => None
-      }
-    def strBandOf(c: String, k: String, isLo: Boolean, strict: Boolean): MinedConjunct = {
-      // the least string strictly above k is k+"\u0000" (UTF8-byte order)
-      val overlap =
-        if (isLo) candidateFilesForStringBand(m, c, if (strict) k + "\u0000" else k, None)
-        else candidateFilesForStringBand(m, c, "", Some(if (strict) k else k + "\u0000"))
-      val full = fullStrFiles(c, s =>
-        if (isLo) { if (strict) cmpU(s.slo, k) > 0 else cmpU(s.slo, k) >= 0 }
-        else { if (strict) cmpU(s.shi, k) < 0 else cmpU(s.shi, k) <= 0 })
-      MinedConjunct(overlap, full)
-    }
-    def strBand(l: Expression, r: Expression, loSide: Boolean,
-        strict: Boolean): Option[MinedConjunct] =
-      (strAttr(l), litS(r), strAttr(r), litS(l)) match {
-        case (Some(c), Some(k), _, _) => Some(strBandOf(c, k, loSide, strict))
-        case (_, _, Some(c), Some(k)) => Some(strBandOf(c, k, !loSide, strict))
-        case _ => None
-      }
-    def strIn(a: Expression, keys: Seq[String]): Option[MinedConjunct] =
-      strAttr(a).map { c =>
-        // overlap = bloom-admitted ∩ (range-touching ANY key): both string
-        // indexes constrain, either absent = that side conservative
-        val viaBloom =
-          if (bloomedCols.contains(c))
-            candidateFilesForStrings(m, c, keys.toArray).toSet
-          else null
-        val viaBand = keys.iterator.flatMap(k =>
-          candidateFilesForStringBand(m, c, k, Some(k + "\u0000"))).toSet
-        val overlap = m.files.filter(f =>
-          viaBand.contains(f) && (viaBloom == null || viaBloom.contains(f)))
-        val ks = keys.toSet
-        MinedConjunct(overlap,
-          fullStrFiles(c, s => s.slo == s.shi && ks.contains(s.slo)))
-      }
-    // NULL-NESS conjuncts (round 19, the Catalyst twin of FilterPrune's
-    // IS NULL mining): null counts are type-agnostic — numeric ranges,
-    // string bounds, and no-range tombstones all carry one. IS NULL
-    // overlaps the files that might hold a null (exact zero-null entries
-    // prune) and FULLY accepts all-null-tombstoned files (nulls ==
-    // recorded rows — `DELETE WHERE c IS NULL` drops them as metadata);
-    // IS NOT NULL mirrors. Unknown counts (-1) stay conservative.
-    val rowsByFileN: Map[String, Long] = m.rows.iterator.map(r => r.file -> r.n).toMap
-    def nullness(a: Expression, isNull: Boolean): Option[MinedConjunct] = a match {
-      case attr: AttributeReference =>
-        val c = attr.name
-        val known: Map[String, Long] = (m.stats.iterator ++ m.tombs.iterator)
-          .filter(s => s.col == c && s.nulls >= 0L).map(s => s.file -> s.nulls).toMap
-        if (known.isEmpty) None
-        else {
-          val allNull = m.tombs.iterator
-            .filter(t => t.col == c && t.nulls > 0L &&
-              rowsByFileN.get(t.file).contains(t.nulls)).map(_.file).toSet
-          val zeroNull = known.collect { case (f, 0L) => f }.toSet
-          def nameOf(f: String) = new Path(f).getName
-          if (isNull) Some(MinedConjunct(
-            m.files.filter(f => !zeroNull(nameOf(f))),
-            m.files.filter(f => allNull(nameOf(f))).toSet))
-          else Some(MinedConjunct(
-            m.files.filter(f => !allNull(nameOf(f))),
-            m.files.filter(f => zeroNull(nameOf(f))).toSet))
-        }
-      case _ => None
-    }
-    // mine one conjunct (None = opaque, no constraint)
-    def permits(e: Expression): Option[MinedConjunct] = e match {
-      case IsNull(a) => nullness(a, isNull = true)
-      case IsNotNull(a) => nullness(a, isNull = false)
-      case Not(IsNull(a)) => nullness(a, isNull = false)
-      case Not(IsNotNull(a)) => nullness(a, isNull = true)
-      case EqualTo(l, r) => point(l, r).orElse(strPoint(l, r))
-      case EqualNullSafe(l, r) => point(l, r).orElse(strPoint(l, r))
-      case GreaterThan(l, r) =>
-        band(l, r, loSide = true, strict = true)
-          .orElse(strBand(l, r, loSide = true, strict = true))
-      case GreaterThanOrEqual(l, r) =>
-        band(l, r, loSide = true, strict = false)
-          .orElse(strBand(l, r, loSide = true, strict = false))
-      case LessThan(l, r) =>
-        band(l, r, loSide = false, strict = true)
-          .orElse(strBand(l, r, loSide = false, strict = true))
-      case LessThanOrEqual(l, r) =>
-        band(l, r, loSide = false, strict = false)
-          .orElse(strBand(l, r, loSide = false, strict = false))
-      case StartsWith(l, r) =>
-        // LIKE 'p%' == the band [p, nextPrefix(p)); full acceptance iff a
-        // file's whole [slo, shi] sits inside it (needs a finite roof)
-        (strAttr(l), litS(r)) match {
-          case (Some(c), Some(p)) if p.nonEmpty =>
-            val np = RowGroupFilters.nextPrefix(p)
-            Some(MinedConjunct(
-              candidateFilesForStringBand(m, c, p, np),
-              np.fold(Set.empty[String])(roof => fullStrFiles(c, s =>
-                cmpU(s.slo, p) >= 0 && cmpU(s.shi, roof) < 0))))
-          case _ => None
-        }
-      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        statAttr(a).flatMap { sa =>
-          val ks = vs.flatMap(litD)
-          if (ks.size != vs.size) None // a non-numeric/null element: no pruning
-          else {
-            val arr = ks.toArray; java.util.Arrays.sort(arr)
-            Some(inKeys(sa, arr))
-          }
-        }.orElse {
-          val ks = vs.flatMap(litS)
-          if (ks.size != vs.size) None else strIn(a, ks)
-        }
-      case InSet(a, hs) if hs.nonEmpty =>
-        statAttr(a).flatMap { sa =>
-          // same unit discipline as litD: timestamp set elements are raw
-          // MICROS internally — the index's canonical unit (date Ints are
-          // already epoch days)
-          val conv: Number => Double = a.dataType match {
-            case TimestampType | TimestampNTZType => n => n.longValue().toDouble
-            case _ => n => n.doubleValue
-          }
-          val ks = hs.toSeq.collect { case n: Number => conv(n) }
-          // a NaN set element: unminable, same rule as litD
-          if (ks.size != hs.size || ks.exists(_.isNaN)) None
-          else {
-            val arr = ks.toArray; java.util.Arrays.sort(arr)
-            Some(inKeys(sa, arr))
-          }
-        }.orElse {
-          val ks = hs.toSeq.collect {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.toString }
-          if (ks.size != hs.size) None else strIn(a, ks)
-        }
-      case _ => None
-    }
-
-    val cs = resolved.toSeq.flatMap(conjuncts)
-    val minedOpts = cs.map(permits)
-    (minedOpts.flatten, minedOpts.forall(_.isDefined))
-  }
+  /** The [[StatsPredicate]] of `filtered`'s ANALYZED filter condition, so
+    * the stats judge exactly what the engine will evaluate, casts and all.
+    * None when no stats can judge any part of it. */
+  private def statsPredicate(filtered: DataFrame): Option[StatsPredicate.Pred] =
+    filtered.queryExecution.analyzed
+      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
+      .flatMap(StatsPredicate.fromExpr)
 
   /** The table's exact row count in O(metadata) — no data file opened, no
     * Spark job. Some(n) when every file in version v carries a recorded
@@ -4067,13 +3689,11 @@ object Snapshots {
   }
 
   /** Exact `count(*) WHERE cond` with the metadata answering everything it
-    * can: conjuncts are mined as in [[readWhere]], files FULLY inside every
-    * conjunct's accepted region (stats recorded, zero nulls in the
-    * conjunct's column, strict bounds honored) contribute their recorded
-    * row counts with no I/O, files outside every constraint contribute
-    * nothing, and only the boundary files — plus everything, if any
-    * conjunct is opaque to the miner — are scanned with the untouched
-    * predicate. Exact by construction at every degradation level; a band
+    * can: files the predicate ACCEPTS ([[StatsPredicate.accept]] — stats
+    * recorded, zero nulls in the compared columns, strict bounds honored;
+    * none while any conjunct is opaque) contribute their recorded row
+    * counts with no I/O, files outside its overlap contribute nothing, and
+    * only the boundary files are scanned with the untouched predicate. Exact by construction at every degradation level; a band
     * query over a range-clustered table counts millions of interior rows
     * from the manifest and scans two edge files. */
   def countWhere(
@@ -4092,12 +3712,9 @@ object Snapshots {
     // must not touch (or even list) data files — a fully-metadata answer
     // works with every data object unreachable
     val probe = readFiles(spark, m, Seq.empty).filter(cond)
-    val (mined, allMinable) = minePredicate(m, probe)
-    if (mined.isEmpty) return scanCount(m.files)
-    val overlap = mined.map(_.overlap.toSet).reduce(_ intersect _)
-    val fullSet =
-      if (!allMinable) Set.empty[String]
-      else mined.map(_.full).reduce(_ intersect _)
+    val pred = statsPredicate(probe).getOrElse(return scanCount(m.files))
+    val overlap = StatsPredicate.overlap(m, pred).toSet
+    val fullSet = StatsPredicate.accept(m, pred)
     val rowsByName = m.rows.map(r => r.file -> r.n).toMap
     // a fully-accepted file without a recorded count degrades to the scan —
     // as does one carrying a deletion vector (which deleted rows fell where
@@ -4185,14 +3802,8 @@ object Snapshots {
     val v = headVersion(spark, root)
     require(v > 0, s"no snapshot committed at $root yet")
     val m = manifest(spark, root, v)
-    val touched = probe match {
-      case KeysEmpty => Seq.empty
-      case KeysSmall(ks) => candidateFilesForKeys(m, c, ks)
-      case KeysRange(lo, hi) => candidateFiles(m, c, lo, hi)
-      case KeysOpaqueSmall(ks) => candidateFilesForStrings(m, c, ks)
-      case KeysOpaque => m.files
-    }
-    readFiles(spark, m, touched) // empty: a 0-row relation with the schema
+    // an empty probe touches nothing: a 0-row relation with the schema
+    readFiles(spark, m, candidateFilesForProbe(m, c, probe))
   }
 
   /** [[readForKeys]] with the probe precomputed — pairs with
@@ -4207,13 +3818,7 @@ object Snapshots {
     val v = headVersion(spark, root)
     require(v > 0, s"no snapshot committed at $root yet")
     val m = manifest(spark, root, v)
-    val touched = probe match {
-      case KeysEmpty => Seq.empty
-      case KeysSmall(ks) => candidateFilesForKeys(m, c, ks)
-      case KeysRange(lo, hi) => candidateFiles(m, c, lo, hi)
-      case KeysOpaqueSmall(ks) => candidateFilesForStrings(m, c, ks)
-      case KeysOpaque => m.files
-    }
+    val touched = candidateFilesForProbe(m, c, probe)
     // every file pruned (or the probe had no keys): an empty relation
     // carrying the recorded schema
     if (touched.isEmpty) readFiles(spark, m, Seq.empty)
@@ -4632,8 +4237,8 @@ object Snapshots {
   }
 
   /** PREDICATE-SCOPED compaction — OPTIMIZE WHERE: rewrite into
-    * `targetFiles` only the files the mined predicate can touch (same
-    * conservative miner as [[readWhere]]); every other file carries by
+    * `targetFiles` only the files the predicate can touch (the same
+    * overlap face as [[readWhere]]); every other file carries by
     * reference. The 100 TB form of [[compact]]: a full-table OPTIMIZE is
     * unaffordable there, but "compact yesterday's ingest" / "re-cluster
     * the hot key band" touches a sliver. The predicate only SELECTS files
@@ -4659,11 +4264,7 @@ object Snapshots {
     val probe = readFilesRaw(spark, m, Seq.empty, withMeta = false).filter(cond)
     val selected =
       if (m.stats.isEmpty && m.blooms.isEmpty) m.files
-      else {
-        val (mined, _) = minePredicate(m, probe)
-        if (mined.isEmpty) m.files
-        else m.files.filter(mined.map(_.overlap.toSet).reduce(_ intersect _))
-      }
+      else statsPredicate(probe).fold(m.files)(StatsPredicate.overlap(m, _))
     if (selected.isEmpty) return headV
     val rewritten = readFiles(spark, m, selected).repartition(targetFiles)
     val toPhys = logicalToPhysical(parseSchema(m))

@@ -1422,7 +1422,7 @@ object Lake {
     //            registered DataSource-V2 view of the table gets the SAME
     //            file pruning as the readWhere API (pushed filters mined
     //            against the stats index inside the scan,
-    //            graft.engine.FilterPrune) and the SAME merge-on-read
+    //            graft.engine.StatsPredicate) and the SAME merge-on-read
     //            semantics (deletion vectors applied by the per-file
     //            readers). Required in-query: the scan plans fewer
     //            partitions than the table holds files, AND the head
@@ -2382,7 +2382,7 @@ object Lake {
     //            range-ordered across files with string min/max bounds
     //            (ColStats slo/shi, round 15) and small row groups: a
     //            prefix predicate is the band [p, nextPrefix(p)), answered
-    //            at BOTH granularities — FilterPrune drops whole files on
+    //            at BOTH granularities — StatsPredicate drops whole files on
     //            the recorded bounds, RowGroupFilters drops row groups on
     //            the parquet binary stats inside the survivor. Required
     //            in-query: the scan plans fewer partitions than the table

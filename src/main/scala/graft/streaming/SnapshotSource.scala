@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.engine.Snapshots
+import graft.engine.{Snapshots, StatsPredicate}
 
 /** DataSource-V2 TABLE over a snapshot table — batch AND streaming reads
   * through one provider, so the manifest index stops being an API-only
@@ -30,8 +30,8 @@ import graft.engine.Snapshots
   * .SnapshotSourceProvider").option("root", root).load()` — or the same
   * frame registered as a temp view and queried with plain `spark.sql` —
   * plans a scan whose PUSHED filters prune FILES through the manifest's
-  * stats/bloom/null indexes ([[graft.engine.FilterPrune]], the
-  * `sources.Filter` twin of `readWhere`'s Catalyst miner) before a single
+  * stats/bloom/null indexes ([[graft.engine.StatsPredicate]], which
+  * judges `readWhere`'s Catalyst predicates too) before a single
   * byte is read, and whose per-file readers apply deletion vectors
   * exactly like the API read path. All pushed filters stay RESIDUAL
   * (Spark re-evaluates them row-exactly on surviving files), so pruning
@@ -161,7 +161,7 @@ private[streaming] object SnapshotSource {
     }
 
   /** EXACT `sources.Filter` → Column translation for SQL DELETE. Unlike
-    * [[graft.engine.FilterPrune]] (conservative file pruning, where a
+    * [[graft.engine.StatsPredicate]] (conservative file pruning, where a
     * miss only costs I/O) this decides WHICH ROWS DIE, so every node must
     * reproduce Spark's own evaluation exactly or refuse: None bubbles up,
     * `canDeleteWhere` answers false, and Spark reports the predicate as
@@ -530,7 +530,7 @@ private[streaming] class SnapshotScanBuilder(
   // minable subset is used for FILE pruning only — a conservative index
   // can never drop a row. But when the manifest PROVES the whole pushed
   // conjunction exact — every file it OVERLAPS is also FULLY accepted by
-  // every conjunct ([[graft.engine.FilterPrune.fullAccept]], zero nulls +
+  // the conjunction ([[graft.engine.StatsPredicate.accept]], zero nulls +
   // the shared 2^53/p≤15 injectivity rule) — the scan's output over the
   // pruned files IS the filtered result, row for row: files outside the
   // overlap hold no satisfying row, files inside hold ONLY satisfying
@@ -566,7 +566,7 @@ private[streaming] class SnapshotScanBuilder(
     }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(graft.engine.FilterPrune.minable(fullSchema, _))
+    pushed = filters.filter(StatsPredicate.fromFilter(fullSchema, _).isDefined)
     if (allowExactFilterClaim && filters.nonEmpty) {
       val spark = SparkSession.active
       val v = travelVersion.getOrElse(Snapshots.headVersion(spark, root))
@@ -575,11 +575,11 @@ private[streaming] class SnapshotScanBuilder(
         // the strictness-aware set the scan will plan under the claim —
         // the closed-band prune would re-admit a strict-boundary file
         // whose rows all fail, and with no residual left they would leak
-        val overlap =
-          graft.engine.FilterPrune.exactPrune(m, fullSchema, pushed.toSeq).toSet
-        val full = filters.iterator
-          .map(graft.engine.FilterPrune.fullAccept(m, fullSchema, _))
-          .reduce(_ intersect _)
+        val overlap = StatsPredicate.fromFilters(fullSchema, pushed.toSeq)
+          .fold(m.files)(StatsPredicate.exactPrune(m, _)).toSet
+        // every filter, pushed or not: an unjudged one accepts nothing
+        val full = StatsPredicate.fromFilters(fullSchema, filters.toSeq)
+          .fold(Set.empty[String])(StatsPredicate.accept(m, _))
         if (overlap.subsetOf(full)) {
           pushed = filters // all claimed — honest pushedFilters report
           exactPushed = true
@@ -696,8 +696,8 @@ private[streaming] class SnapshotScanBuilder(
     val m = manifestAt(spark, v)
     if (m.files.isEmpty) return None // empty-table MIN is null — let Spark plan it
     val files =
-      if (exactPushed && pushed.nonEmpty)
-        graft.engine.FilterPrune.exactPrune(m, fullSchema, pushed.toSeq)
+      if (exactPushed) StatsPredicate.fromFilters(fullSchema, pushed.toSeq)
+        .fold(m.files)(StatsPredicate.exactPrune(m, _))
       else m.files
     // an empty claimed band: decline — Spark's scan of zero files yields
     // the correct empty grouped / null-extremum ungrouped result natively
@@ -1099,9 +1099,8 @@ private[streaming] class SnapshotScan(
     // (the builder pins `version`, so this recompute sees the same
     // manifest): a closed-band boundary file's rows would leak with no
     // residual Filter left to drop them
-    val kept =
-      if (exactPushed) graft.engine.FilterPrune.exactPrune(m, fullSchema, pushed.toSeq)
-      else graft.engine.FilterPrune.prune(m, fullSchema, pushed.toSeq)
+    val kept = StatsPredicate.fromFilters(fullSchema, pushed.toSeq).fold(m.files)(p =>
+      if (exactPushed) StatsPredicate.exactPrune(m, p) else StatsPredicate.overlap(m, p))
     (m, kept)
   }
 
@@ -1249,8 +1248,8 @@ private[streaming] class SnapshotScan(
     val finalKept =
       if (dataFilters.isEmpty) fileKept
       else fileKept.toSet.intersect(
-        graft.engine.FilterPrune.prune(m, fullSchema, dataFilters.toSeq)
-          .toSet).toSeq
+        StatsPredicate.fromFilters(fullSchema, dataFilters.toSeq)
+          .fold(m.files)(StatsPredicate.overlap(m, _)).toSet).toSeq
     // pushed LIMIT / TOP-N cap: plan only files whose recorded live rows
     // already cover the limit (TOP-N: only files that can hold a top row
     // under the stats threshold). Strictly a file-count reduction — Spark

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 import graft.engine.Snapshots
 
 /** The round-18 EXACT filter claim: when the manifest proves every file a
-  * pushed conjunction OVERLAPS is also FULLY accepted by every conjunct
-  * ([[graft.engine.FilterPrune.fullAccept]] — zero recorded nulls, the
+  * pushed conjunction OVERLAPS is also FULLY accepted by the conjunction
+  * ([[graft.engine.StatsPredicate.accept]] — zero recorded nulls, the
   * shared 2^53/p≤15 injectivity rule on equality/non-strict bounds, UTF8
   * string bounds), the scan builder claims the whole conjunction: Spark
   * keeps no residual Filter, and the pushdowns a residual always blocked

@@ -160,6 +160,9 @@ class LimitPushSpec extends SparkSpec {
       stats = Seq(
         Snapshots.ColStats("a.parquet", "k", 0, 40, nulls = 0L),
         Snapshots.ColStats("b.parquet", "k", 50, 150, nulls = 0L)),
+      schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("k",
+          org.apache.spark.sql.types.LongType))).json,
       rows = Seq(Snapshots.FileRows("a.parquet", 60L),
         Snapshots.FileRows("b.parquet", 60L)))
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -196,6 +199,9 @@ class LimitPushSpec extends SparkSpec {
         (s"f$i.parquet", n, dv, known)
       }
       val m = Snapshots.Manifest(1L, files.map(_._1), 0L,
+        schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("k",
+            org.apache.spark.sql.types.LongType))).json,
         rows = files.collect { case (f, n, _, true) => Snapshots.FileRows(f, n) },
         dvs = files.collect { case (f, _, dv, _) if dv > 0 =>
           Snapshots.FileDv(f, "", dv) })
@@ -236,6 +242,7 @@ class LimitPushSpec extends SparkSpec {
         stats = files.map { case (f, vals, nulls, _, slack) =>
           Snapshots.ColStats(f, "k", (vals.min - slack).toDouble,
             (vals.max + slack).toDouble, nulls = nulls.toLong) },
+        schema = schema.json,
         rows = files.map { case (f, vals, nulls, _, _) =>
           Snapshots.FileRows(f, (vals.size + nulls).toLong) },
         dvs = files.collect { case (f, _, _, dv, _) if dv > 0 =>

@@ -70,7 +70,8 @@ class ReadWhereSpec extends SparkSpec {
 
   test("unminable shapes stay conservative and exact") {
     val root = build()
-    // an OR tree: no conjunct-level constraint, all files survive
+    // an OR prunes by the union of its sides; x spans every file, so all
+    // files survive
     val or = col("x") === 3 || col("id") < 10
     assert(Snapshots.readWhere(spark, root, or).inputFiles.length === 8)
     exactVs(root, or)
