@@ -149,7 +149,8 @@ object Snapshots {
     * rows — at 100 TB a GDPR-sized delete (thousands of scattered rows)
     * rewrites terabytes. A DV commit instead writes O(deleted positions)
     * of compressed METADATA: the data file stays byte-identical in place,
-    * and every read anti-joins the (file, position) pairs back out (the
+    * and every read filters the marked (file, position) pairs out inside
+    * its scan, the bitmaps riding in the plan ([[RowFilters.dvLive]]; the
     * Iceberg v2 position-delete / Delta deletion-vector idea). Invariants:
     *  - a DV lives in the same shard entry family as its file; a rewrite
     *    that retires the file retires the DV with it, so a DV can never
@@ -1888,36 +1889,15 @@ object Snapshots {
   private[graft] def readFiles(spark: SparkSession, m: Manifest, files: Seq[String]): DataFrame =
     readFilesDvs(spark, m, files, m.dvs)
 
-  /** DV-side anti-join cardinality under which the deleted-positions
-    * relation is broadcast. DV totals are bounded by [[deleteWhere]]'s
-    * `maxDvFraction` + maintenance materialization; a table carrying more
-    * live deleted positions than this falls back to a shuffled anti-join —
-    * slower, never wrong. */
-  private[graft] val BroadcastDvPositions = 4000000L
-
-  /** The deleted-positions relation for `dvs`: one (file basename, position)
-    * row per deleted row, decoded DISTRIBUTED from the compressed bitmaps —
-    * the driver only ever handles the bitmap bytes. */
-  private def dvPositions(spark: SparkSession, dvs: Seq[FileDv]): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(dvs.map(d => (d.file, d.b64)))
-      .flatMap { case (f, b64) =>
-        val it = dvDecode(b64).getLongIterator
-        new Iterator[(String, Long)] {
-          override def hasNext: Boolean = it.hasNext
-          override def next(): (String, Long) = (f, it.next())
-        }
-      }
-      .toDF(DvFileCol, DvPosCol)
-  }
-
   private[graft] val DvFileCol = "__gdv_file"
   private[graft] val DvPosCol = "__gdv_pos"
 
-  private def dvDecode(b64: String): org.roaringbitmap.longlong.Roaring64Bitmap =
+  /** The one deletion-vector decoder: base64 text (a [[FileDv]]'s `b64`)
+    * or the serialized bytes `rb64_agg` emits, to a bitmap. */
+  private[graft] def dvDecode(b64: String): org.roaringbitmap.longlong.Roaring64Bitmap =
     dvFromBytes(java.util.Base64.getDecoder.decode(b64))
 
-  private def dvFromBytes(bytes: Array[Byte]): org.roaringbitmap.longlong.Roaring64Bitmap = {
+  private[graft] def dvFromBytes(bytes: Array[Byte]): org.roaringbitmap.longlong.Roaring64Bitmap = {
     val bm = new org.roaringbitmap.longlong.Roaring64Bitmap()
     bm.deserialize(new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes)))
     bm
@@ -1953,12 +1933,12 @@ object Snapshots {
     dvs.filter(d => names.contains(d.file) && d.deleted > 0)
   }
 
-  /** `files`' LIVE rows with the hidden DV-join meta columns retained:
-    * the vectors in `dvs` that cover these files anti-join out their
-    * marked positions (broadcast under [[BroadcastDvPositions]]). The ONE
+  /** `files`' LIVE rows with the hidden DV meta columns retained: a row
+    * filter drops the positions the vectors in `dvs` mark for these files,
+    * inside the scan's own job ([[RowFilters.dvLive]]). The ONE
     * implementation of vector application — reads, keyed vectored
-    * deletes, and predicate vectored deletes all route here, so the join
-    * keys and the broadcast threshold cannot silently diverge. */
+    * deletes, and predicate vectored deletes all route here. The meta
+    * columns stay so the vectored deletes can mark further positions. */
   private def liveRowsWithMeta(
       spark: SparkSession,
       m: Manifest,
@@ -1973,18 +1953,12 @@ object Snapshots {
       relevant: Seq[FileDv]): DataFrame = {
     val raw = readFilesRaw(spark, m, files, withMeta = true)
     if (relevant.isEmpty) raw
-    else {
-      import org.apache.spark.sql.functions.broadcast
-      val pos = dvPositions(spark, relevant)
-      val posSide =
-        if (relevant.map(_.deleted).sum <= BroadcastDvPositions) broadcast(pos) else pos
-      raw.join(posSide, Seq(DvFileCol, DvPosCol), "left_anti")
-    }
+    else raw.filter(RowFilters.dvLive(relevant, DvFileCol, DvPosCol))
   }
 
   /** The physical scan: a [[ManifestFileIndex]] relation planned against
     * the manifest's recorded schema. `withMeta = true`
-    * appends the two hidden DV-join
+    * appends the two hidden DV meta
     * columns — file basename and `_metadata.row_index`, the stable
     * within-file row position parquet scans expose — BEFORE any
     * column-mapping select (the `_metadata` struct is only reachable on
@@ -2183,7 +2157,11 @@ object Snapshots {
     * the table while a manifest-less layout rewrites (or
     * full-shuffle-joins) all of it. Files without recorded stats rewrite
     * conservatively. The rewrite
-    * is one pruned scan → anti join (batch side broadcastable) → union;
+    * is one pruned scan → the batch's keys filtered out → union: a typed
+    * `NOT IN` over the probe's collected keys when [[RowFilters.keyNotIn]]
+    * proves it equal to the anti join, else the anti join (batch side
+    * broadcastable). A driver-resident batch is probed with no job, so the
+    * merge runs its write job and nothing else;
     * the commit publishes (untouched ++ rewritten) atomically. Losers of a
     * concurrent-commit race ABORT loudly (the publish fence rejects any
     * head advance since `headV`) — the caller recomputes against the new
@@ -2200,7 +2178,7 @@ object Snapshots {
       requireHead: Long = -1L,
       bloomCols: Seq[String] = Seq.empty): Long =
     mergeProbed(df, root, key, probeKeys(df, key), statsCols, tag, requireHead,
-      bloomCols = bloomCols)
+      bloomCols = bloomCols, probeIsBatch = true)
 
   /** [[merge]] with the batch-key probe precomputed by the caller — the
     * job-count lever for pipelines that already probed the SAME key set (or
@@ -2214,7 +2192,10 @@ object Snapshots {
     *   fold shape: [[Incremental.refreshKeyed]] folds entire touched files
     *   with the delta, so its batch covers every key those files hold).
     *   Skips the survivors pass — no second read of the touched files, no
-    *   distinct, no anti join; the batch is written as-is. */
+    *   distinct, no anti join; the batch is written as-is.
+    * @param probeIsBatch `probe` is `df`'s own key set (not a superset), so
+    *   the survivors pass may filter by its collected keys instead of
+    *   anti-joining `df`'s key column. */
   private[engine] def mergeProbed(
       df: DataFrame,
       root: String,
@@ -2224,7 +2205,8 @@ object Snapshots {
       tag: String = "",
       requireHead: Long = -1L,
       batchReplacesTouched: Boolean = false,
-      bloomCols: Seq[String] = Seq.empty): Long = {
+      bloomCols: Seq[String] = Seq.empty,
+      probeIsBatch: Boolean = false): Long = {
     val spark = df.sparkSession
     import org.apache.spark.sql.functions.col
     val headV = headVersion(spark, root)
@@ -2248,8 +2230,8 @@ object Snapshots {
     val touchedSet = touched.toSet
     val survivors =
       if (touched.isEmpty || batchReplacesTouched) df
-      else readFiles(spark, m, touched)
-        .join(df.select(col(key)).distinct(), Seq(key), "left_anti")
+      else keyed(readFiles(spark, m, touched), key, if (probeIsBatch) probe else KeysOpaque,
+        df, anti = true)
         // allowMissingColumns: an evolving batch may introduce columns
         // (survivors fill nulls) or omit late-added ones (batch fills)
         .unionByName(df, allowMissingColumns = true)
@@ -2711,8 +2693,9 @@ object Snapshots {
     * appears in `keys` are removed; everything else carries forward BY FILE
     * REFERENCE. The right-to-erasure shape at 100 TB: the stats index
     * prunes to the files whose recorded `key` range overlaps the delete
-    * set's [min, max], only those are read, anti-joined (the key set is
-    * batch-sized — broadcastable), and rewritten without the matching rows;
+    * set's [min, max], only those are read, filtered by the probe's
+    * collected keys (or anti-joined, see [[keyed]]), and rewritten without
+    * the matching rows;
     * a delete that can touch nothing is a true no-op (no new version).
     * Old versions still SEE the rows until [[vacuum]] destroys their files
     * — erasure is complete exactly when retention policy says so, the same
@@ -2754,19 +2737,16 @@ object Snapshots {
       import org.apache.spark.sql.functions.{call_function, count, lit}
       graft.plans.GraftExtensions.register(spark)
       val live = liveRowsWithMeta(spark, m, touched, m.dvs)
-      val marked = live
-        .join(keys.select(col(key)).distinct(), Seq(key), "left_semi")
+      val marked = keyed(live, key, probe, keys, anti = false)
         .groupBy(col(DvFileCol))
         .agg(count(lit(1)).as("__n"),
           call_function("rb64_agg", col(DvPosCol)).as("__bm"))
       return commitMarkedDeletes(spark, root, headV, shards, m, Some(marked),
         touched.size, mergeOnRead = true, maxDvFraction, statsCols, bloomCols,
-        cowSurvivors = files => readFiles(spark, m, files)
-          .join(keys.select(col(key)).distinct(), Seq(key), "left_anti"))
+        cowSurvivors = files => keyed(readFiles(spark, m, files), key, probe, keys, anti = true))
     }
     val touchedSet = touched.toSet
-    val survivors = readFiles(spark, m, touched)
-      .join(keys.select(col(key)).distinct(), Seq(key), "left_anti")
+    val survivors = keyed(readFiles(spark, m, touched), key, probe, keys, anti = true)
     // a delete never introduces columns; only the rename mapping applies
     val toPhys = logicalToPhysical(parseSchema(m))
     val (written, newStats, newRows, newBlooms) =
@@ -2784,7 +2764,7 @@ object Snapshots {
     * `cond` are removed from the table WITHOUT rewriting the files that
     * hold them — their positions (parquet `_metadata.row_index`) are
     * folded into per-file compressed bitmaps ([[FileDv]]) recorded in the
-    * metadata shards, and every read anti-joins them back out. The 100 TB
+    * metadata shards, and every read filters them out in its scan. The 100 TB
     * delete shape: a scattered small delete (GDPR keys, spam rows) costs
     * one pruned scan + O(positions) of compressed metadata, instead of
     * copy-on-write's full rewrite of every touched file.
@@ -3470,26 +3450,60 @@ object Snapshots {
 
   private[engine] sealed trait KeyProbe
   private[engine] case object KeysEmpty extends KeyProbe
-  private[engine] final case class KeysSmall(ks: Array[Double]) extends KeyProbe
-  private[engine] final case class KeysRange(lo: Double, hi: Double) extends KeyProbe
+  /** A key set that fits the driver cap: `ks` as the stats index's sorted
+    * doubles, `keys` as the batch typed them (the exact filter's values). */
+  private[engine] final case class KeysSmall(ks: Array[Double], keys: RowFilters.KeySet)
+      extends KeyProbe
+  /** A key set past the driver cap: its global [lo, hi], from keys of type `dt`. */
+  private[engine] final case class KeysRange(lo: Double, hi: Double)(val dt: DataType) extends KeyProbe
   private[engine] case object KeysOpaque extends KeyProbe
   /** Opaque (non-numeric) keys that FIT the driver cap, carried as their
     * string values: the [[FileBloom]] index can prune per file where the
     * numeric stats index cannot see at all. */
-  private[engine] final case class KeysOpaqueSmall(ks: Array[String]) extends KeyProbe
+  private[engine] final case class KeysOpaqueSmall(ks: Array[String], keys: RowFilters.KeySet)
+      extends KeyProbe
 
   /** The files of `m` whose recorded `c` stats or bloom cannot rule out
     * every probed key: per-file key membership, the global range past the
     * driver cap, the bloom for opaque keys, every file when nothing
-    * indexes them, and none for an empty probe (callers that treat an
-    * empty batch otherwise decide that first). */
+    * indexes them or the keys' type does not speak the index's unit
+    * ([[RowFilters.keysPrune]]), and none for an empty probe (callers that
+    * treat an empty batch otherwise decide that first). */
   private[engine] def candidateFilesForProbe(
-      m: Manifest, c: String, probe: KeyProbe): Seq[String] = probe match {
-    case KeysEmpty => Seq.empty
-    case KeysSmall(ks) => candidateFilesForKeys(m, c, ks)
-    case KeysRange(lo, hi) => candidateFiles(m, c, lo, hi)
-    case KeysOpaqueSmall(ks) => candidateFilesForStrings(m, c, ks)
-    case KeysOpaque => m.files
+      m: Manifest, c: String, probe: KeyProbe): Seq[String] = {
+    def prunes(keyType: DataType, bloom: Boolean): Boolean =
+      parseSchema(m).fields.find(_.name == c).forall(f => RowFilters.keysPrune(f.dataType, keyType, bloom))
+    probe match {
+      case KeysEmpty => Seq.empty
+      case KeysSmall(ks, keys) if prunes(keys.dt, bloom = false) => candidateFilesForKeys(m, c, ks)
+      case r @ KeysRange(lo, hi) if prunes(r.dt, bloom = false) => candidateFiles(m, c, lo, hi)
+      case KeysOpaqueSmall(ks, keys) if prunes(keys.dt, bloom = true) => candidateFilesForStrings(m, c, ks)
+      case _ => m.files
+    }
+  }
+
+  /** `rows` restricted to (`anti = false`) or stripped of (`anti = true`)
+    * the rows whose `c` equals a key of `keys`' column `c`, where `probe`
+    * is the probe of that same frame. A small probe carries the keys, and
+    * where [[RowFilters]] proves its `IN` filter equal to the join, the
+    * filter runs inside the scan of `rows`: no second run of `keys`' plan,
+    * no distinct, no join stage. Range and opaque probes, float keys and
+    * mismatched key types join. */
+  private[engine] def keyed(
+      rows: DataFrame, c: String, probe: KeyProbe, keys: DataFrame, anti: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val colType = rows.select(col(c)).schema.head.dataType
+    val filter = probe match {
+      case KeysSmall(_, ks) => Some(ks)
+      case KeysOpaqueSmall(_, ks) => Some(ks)
+      case _ => None
+    }
+    filter.flatMap(ks =>
+      if (anti) RowFilters.keyNotIn(c, colType, ks) else RowFilters.keyIn(c, colType, ks)) match {
+      case Some(f) => rows.filter(f)
+      case None =>
+        rows.join(keys.select(col(c)).distinct(), Seq(c), if (anti) "left_anti" else "left_semi")
+    }
   }
 
   /** Classify a batch's key column for file pruning. Numeric(-castable)
@@ -3498,7 +3512,11 @@ object Snapshots {
     * (still sound, less tight). A key the double cast nulls out on
     * non-null input (string doc-ids/hashes — a primary corpus-lake shape)
     * is OPAQUE: the ColStats index is numeric-only, so no pruning is
-    * possible and every file is a candidate — conservative, never wrong. */
+    * possible and every file is a candidate — conservative, never wrong.
+    * A probe within the cap also carries the keys typed as `keysDf` types
+    * them, for [[keyed]]'s exact filter. A batch whose plan optimizes to a
+    * driver-resident relation (every in-memory frame) is collected with no
+    * job and deduplicated on the driver. */
   private[engine] def probeKeys(keysDf: DataFrame, key: String): KeyProbe = {
     import org.apache.spark.sql.functions.{col, min, max, unix_micros}
     // try_cast, not cast: under ANSI semantics a malformed string THROWS
@@ -3513,14 +3531,23 @@ object Snapshots {
     // library doesn't offer, and the naive cast throws at analysis rather
     // than degrading (conservative: every file is a candidate, never
     // wrong).
-    val casted = keysDf.schema.find(_.name == key).map(_.dataType) match {
-      case Some(org.apache.spark.sql.types.TimestampType) =>
+    val keyType = keysDf.select(col(key)).schema.head.dataType
+    val casted = keyType match {
+      case org.apache.spark.sql.types.TimestampType =>
         unix_micros(col(key)).cast("double")
-      case Some(org.apache.spark.sql.types.DateType) =>
+      case org.apache.spark.sql.types.DateType =>
         org.apache.spark.sql.functions.unix_date(col(key)).cast("double")
-      case Some(org.apache.spark.sql.types.TimestampNTZType) =>
+      case org.apache.spark.sql.types.TimestampNTZType =>
         org.apache.spark.sql.functions.lit(null).cast("double")
       case _ => col(key).try_cast("double")
+    }
+    // the exact filter's keys: dates and LTZ timestamps as their epoch days
+    // and micros, which round-trip exactly (a collect's java.sql values go
+    // through the hybrid calendar and the JVM's zone)
+    val exact = keyType match {
+      case org.apache.spark.sql.types.DateType => org.apache.spark.sql.functions.unix_date(col(key))
+      case org.apache.spark.sql.types.TimestampType => unix_micros(col(key))
+      case _ => col(key)
     }
     val MaxDriverKeys = 100000
     // ONE job in the common case: the distinct (string, cast) pairs up
@@ -3529,17 +3556,22 @@ object Snapshots {
     // which may be deep — the keyed-incremental fold reads state files +
     // the source delta — so job count here is commit latency, spec-pinned
     // (CommitJobsSpec).
-    val rows = keysDf.filter(col(key).isNotNull)
-      .select(col(key).cast("string").as("__s"), casted.as("__c"))
-      .distinct().limit(MaxDriverKeys + 1).collect()
+    val sel = keysDf.filter(col(key).isNotNull)
+      .select(col(key).cast("string").as("__s"), casted.as("__c"), exact.as("__k"))
+    val rows = sel.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        sel.collect().distinct.take(MaxDriverKeys + 1)
+      case _ => sel.distinct().limit(MaxDriverKeys + 1).collect()
+    }
     if (rows.isEmpty) return KeysEmpty
+    val keySet = RowFilters.KeySet(keyType, rows.map(_.get(2)))
     if (rows.exists(_.isNullAt(1))) {
       // non-numeric values present: the range/set index is useless, but a
       // capped distinct STRING set can still prune through file blooms
       if (rows.length > MaxDriverKeys) return KeysOpaque
       val ks = rows.map(_.getString(0))
       scala.util.Sorting.quickSort(ks)
-      return KeysOpaqueSmall(ks)
+      return KeysOpaqueSmall(ks, keySet)
     }
     if (rows.length > MaxDriverKeys) {
       // over the cap: the (rare) second pass fetches the global range —
@@ -3551,11 +3583,11 @@ object Snapshots {
       val r = keysDf.filter(col(key).isNotNull)
         .agg(min(casted), max(casted), count(lit(1)), count(casted)).head()
       if (r.getLong(2) != r.getLong(3)) KeysOpaque
-      else KeysRange(r.getDouble(0), r.getDouble(1))
+      else KeysRange(r.getDouble(0), r.getDouble(1))(keyType)
     } else {
       val ks = rows.map(_.getDouble(1))
       java.util.Arrays.sort(ks)
-      KeysSmall(ks)
+      KeysSmall(ks, keySet)
     }
   }
 
@@ -3645,16 +3677,13 @@ object Snapshots {
     val v = if (version >= 0) version else headVersion(spark, root)
     require(v > 0, s"no snapshot committed at $root yet")
     val m = manifest(spark, root, v)
-    val full = readFiles(spark, m, m.files)
-    val filtered = full.filter(cond)
-    if (m.stats.isEmpty && m.blooms.isEmpty) return filtered
-    val keep = statsPredicate(filtered).fold(m.files)(StatsPredicate.overlap(m, _))
-    if (keep.size == m.files.size) filtered
-    else if (keep.isEmpty)
-      // no file can satisfy the mined constraints: a provably-empty plan
-      // over the SAME relation keeps the schema on any manifest era
-      filtered.filter(org.apache.spark.sql.functions.lit(false))
-    else readFiles(spark, m, keep).filter(cond)
+    if (m.stats.isEmpty && m.blooms.isEmpty) return readFiles(spark, m, m.files).filter(cond)
+    // mine against an EMPTY relation carrying the manifest schema, as
+    // countWhere does: the one scan built is over the kept files
+    val probe = readFiles(spark, m, Seq.empty).filter(cond)
+    val keep = statsPredicate(probe).fold(m.files)(StatsPredicate.overlap(m, _))
+    // no file can satisfy the mined constraints: the empty relation
+    if (keep.isEmpty) probe else readFiles(spark, m, keep).filter(cond)
   }
 
   /** The [[StatsPredicate]] of `filtered`'s ANALYZED filter condition, so
@@ -3705,8 +3734,12 @@ object Snapshots {
     require(v > 0, s"no snapshot committed at $root yet")
     val m = manifest(spark, root, v)
     if (m.files.isEmpty) return 0L
+    // one map-only job: per-partition row counts, summed on the driver
+    // (`Dataset.count` aggregates through an exchange, two jobs under AQE)
     def scanCount(files: Seq[String]): Long =
-      readFiles(spark, m, files).filter(cond).count()
+      readFiles(spark, m, files).filter(cond).select()
+        .mapPartitions(it => Iterator.single(it.size.toLong))(org.apache.spark.sql.Encoders.scalaLong)
+        .collect().sum
     if (m.stats.isEmpty && m.blooms.isEmpty) return scanCount(m.files)
     // mine against an EMPTY relation carrying the manifest schema: analysis
     // must not touch (or even list) data files — a fully-metadata answer
@@ -3774,7 +3807,10 @@ object Snapshots {
 
   /** Key-set read through the manifest index: scan only the files whose
     * recorded `c` range can contain one of `keys`' values, then filter
-    * exactly (semi join on the distinct key set). Identical result to
+    * exactly — a typed `IN` over the probe's collected keys inside the
+    * scan, or a semi join on the distinct key set where the filter cannot
+    * be shown equal ([[keyed]]). A driver-resident key frame is probed
+    * with no job, so the read is its one scan job. Identical result to
     * filtering a full read; at lake scale a scattered key set reads the
     * per-file-membership sliver instead of the table — the point-lookup
     * complement of [[readRange]], and the state-read half of the keyed
@@ -3791,9 +3827,10 @@ object Snapshots {
     * changed-key semi join) or whose fold rewrites the touched files in
     * their entirety anyway (the keyed refresh: an untouched group from a
     * touched file folds to its identical self and is rewritten in place),
-    * the semi join [[readForKeys]] appends is pure overhead — a distinct,
-    * a broadcast build, and a join stage per commit. Rows beyond the key
-    * set ARE returned; callers own the contract. */
+    * the exact key filter [[readForKeys]] applies is redundant — and for
+    * a large or float key set it is a semi join: a distinct, a broadcast
+    * build, and a join stage per commit. Rows beyond the key set ARE returned;
+    * callers own the contract. */
   private[engine] def readTouched(
       spark: SparkSession,
       root: String,
@@ -3807,14 +3844,15 @@ object Snapshots {
   }
 
   /** [[readForKeys]] with the probe precomputed — pairs with
-    * [[mergeProbed]] so a fold pipeline probes its key set ONCE. */
+    * [[mergeProbed]] so a fold pipeline probes its key set ONCE. `probe`
+    * must be the probe of `keys` itself: its collected keys are the
+    * exact filter. */
   private[engine] def readForKeysProbed(
       spark: SparkSession,
       root: String,
       c: String,
       keys: DataFrame,
       probe: KeyProbe): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val v = headVersion(spark, root)
     require(v > 0, s"no snapshot committed at $root yet")
     val m = manifest(spark, root, v)
@@ -3822,9 +3860,7 @@ object Snapshots {
     // every file pruned (or the probe had no keys): an empty relation
     // carrying the recorded schema
     if (touched.isEmpty) readFiles(spark, m, Seq.empty)
-    else
-      readFiles(spark, m, touched)
-        .join(keys.select(col(c)).distinct(), Seq(c), "left_semi")
+    else keyed(readFiles(spark, m, touched), c, probe, keys, anti = false)
   }
 
   /** Time travel by wall clock: read the newest version whose publish

@@ -217,7 +217,7 @@ object Lake {
     // ---- q83: copy-on-write delete round-trip — a right-to-erasure
     //           request (all orders of a deterministic customer set) lands
     //           as Snapshots.delete: the stats index prunes to the files
-    //           the key set can touch, survivors are anti-joined and
+    //           the key set can touch, survivors are filtered and
     //           rewritten, everything else carries forward by reference.
     //           The read-back aggregate must equal the oracle's plain
     //           filtered aggregate over the source — proving the pruned
@@ -1027,7 +1027,7 @@ object Lake {
     //            (a price band touching every file + scattered point
     //            deletes) land as per-file position bitmaps, NOT rewrites:
     //            the data files are byte-untouched (DvSpec pins that), and
-    //            every read anti-joins the vectors back out. The whole
+    //            every read filters the vectors out in its scan. The whole
     //            post-delete table aggregates under the hash gate against
     //            the oracle's plain double-NOT filter — SQL DELETE
     //            semantics (only TRUE rows go) across accumulated vectors.

@@ -1954,13 +1954,6 @@ private[streaming] object SnapshotVectorized {
       vr
     } catch { case e: Throwable => vr.close(); throw e }
   }
-
-  def decodeDv(b64: String): org.roaringbitmap.longlong.Roaring64Bitmap = {
-    val bm = new org.roaringbitmap.longlong.Roaring64Bitmap()
-    bm.deserialize(new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(java.util.Base64.getDecoder.decode(b64))))
-    bm
-  }
 }
 
 /** ONE definition of the per-reader request shape, shared by all three
@@ -2063,7 +2056,7 @@ private[streaming] class SnapshotDvBatchReader(
     partition.uri, shape.readRequired, shape.readPhys, confEntries,
     partition.start, partition.length, partition.rg)
   vr.enableReturningBatches()
-  private val dv = SnapshotVectorized.decodeDv(partition.dvB64.get)
+  private val dv = Snapshots.dvDecode(partition.dvB64.get)
   private var base = 0L // sequential file ordinal when !needRowIdx
   private var current: ColumnarBatch = null
 
@@ -2184,7 +2177,7 @@ private[streaming] class SnapshotRowReader(
   private val vr = SnapshotVectorized.open(
     partition.uri, shape.readRequired, shape.readPhys, confEntries,
     partition.start, partition.length, partition.rg)
-  private val dv = partition.dvB64.map(SnapshotVectorized.decodeDv)
+  private val dv = partition.dvB64.map(Snapshots.dvDecode)
   private var rowIdx: Long = -1L
   private val stripIdx =
     if (!needRowIdx) null

@@ -132,4 +132,76 @@ class CommitJobsSpec extends SparkSpec {
     // are all in g = (id%5): id%100==0 → id%5==0 → group "0" gains 20×4
     assert(got("0") === 400L + 80L && got("1") === 400L)
   }
+
+  /** A range-clustered 2,000-row table over 8 files with `id` stats. */
+  private def lakeTable(): String = {
+    val root = tmp()
+    Snapshots.commit(spark.range(0, 2000).select($"id", ($"id" % 7).as("x"))
+      .repartitionByRange(8, $"id"), root, statsCols = Seq("id"))
+    root
+  }
+
+  // The pins below run under the session's own settings (AQE on, as the
+  // lake benchmark runs), where every exchange or broadcast is a job of its
+  // own. The join forms these verbs used measured: readForKeys 5 jobs
+  // (6 over vectored files), a read over vectored files 2, countWhere 2
+  // (3 over vectored files), merge 5 (6), keyed delete 5, vectored keyed
+  // delete 6.
+
+  test("readForKeys with a driver-resident key frame runs ONE job") {
+    val root = lakeTable()
+    val keys = Seq(5L, 300L, 1999L, 5000L).toDF("id")
+    var got: Array[Long] = null
+    val jobs = countJobs {
+      got = Snapshots.readForKeys(spark, root, "id", keys).select("id").as[Long].collect()
+    }
+    assert(jobs <= 1, s"readForKeys ran $jobs jobs — the probe or the semi join is back?")
+    assert(got.sorted.toSeq === Seq(5L, 300L, 1999L))
+    Snapshots.deleteWhere(spark, root, $"id" % 10 === 5)
+    val dvJobs = countJobs(Snapshots.readForKeys(spark, root, "id", keys).collect())
+    assert(dvJobs <= 1, s"readForKeys over vectored files ran $dvJobs jobs")
+  }
+
+  test("a read over deletion-vectored files runs ONE job") {
+    val root = lakeTable()
+    Snapshots.deleteWhere(spark, root, $"id" % 10 === 3)
+    assert(Snapshots.manifest(spark, root, 2).dvs.nonEmpty)
+    var n = 0L
+    val jobs = countJobs { n = Snapshots.read(spark, root).collect().length.toLong }
+    assert(jobs <= 1, s"a vectored read ran $jobs jobs — the positions join is back?")
+    assert(n === 1800L)
+    val point = countJobs(Snapshots.readWhere(spark, root, $"id" === 13L).collect())
+    assert(point <= 1, s"a vectored point read ran $point jobs")
+  }
+
+  test("countWhere scanning boundary files runs ONE job, with and without vectors") {
+    val root = lakeTable()
+    val cond = $"id" >= 150 && $"id" < 1100
+    var n = 0L
+    val jobs = countJobs { n = Snapshots.countWhere(spark, root, cond) }
+    assert(jobs <= 1, s"countWhere ran $jobs jobs — an aggregating count is back?")
+    assert(n === 950L)
+    Snapshots.deleteWhere(spark, root, $"id" % 10 === 3)
+    val dvJobs = countJobs { n = Snapshots.countWhere(spark, root, cond) }
+    assert(dvJobs <= 1, s"countWhere over vectored files ran $dvJobs jobs")
+    assert(n === 855L)
+  }
+
+  test("merge and keyed delete of driver-resident batches run fewer jobs than their joins") {
+    val root = lakeTable()
+    val batch = Seq((5L, 1L), (300L, 2L), (2500L, 3L)).toDF("id", "x")
+    val merge = countJobs(Snapshots.merge(batch, root, "id", statsCols = Seq("id")))
+    assert(merge <= 1, s"merge ran $merge jobs (the join form ran 5)")
+    val delete = countJobs(Snapshots.delete(Seq(7L, 900L).toDF("id"), root, "id", statsCols = Seq("id")))
+    assert(delete <= 1, s"keyed delete ran $delete jobs (the join form ran 5)")
+    val vectored = countJobs(Snapshots.delete(Seq(8L, 901L).toDF("id"), root, "id",
+      statsCols = Seq("id"), mergeOnRead = true))
+    assert(vectored <= 2, s"vectored keyed delete ran $vectored jobs (the join form ran 6)")
+    val ids = Snapshots.read(spark, root).select("id", "x").as[(Long, Long)].collect().toMap
+    assert(ids.size === 1997 && ids(5L) === 1L && ids(2500L) === 3L)
+    assert(!ids.contains(7L) && !ids.contains(900L) && !ids.contains(8L) && !ids.contains(901L))
+    Snapshots.deleteWhere(spark, root, $"id" % 10 === 3)
+    val dvMerge = countJobs(Snapshots.merge(batch, root, "id", statsCols = Seq("id")))
+    assert(dvMerge <= 1, s"merge over vectored files ran $dvMerge jobs (the join form ran 6)")
+  }
 }
