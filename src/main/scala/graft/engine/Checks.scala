@@ -19,10 +19,12 @@ import org.apache.spark.sql.functions._
   * the same rows a schema-merging read would surface — so a predicate rule
   * passes it and an IS NOT NULL rule rejects it, never an analysis error.
   *
-  * Enforcement is ZERO extra passes: [[Snapshots]] attaches the rules as
-  * `Observation` metrics on the batch being written, so violation counts
-  * ride the write job itself — no second scan of the batch, at any batch
-  * size. A violating batch aborts BEFORE the manifest publishes: the staged
+  * Enforcement is ZERO extra passes: [[Snapshots]] projects each rule's
+  * violation flag ([[violated]]) next to the batch's data columns, and the
+  * writer counts the flags while it writes the data columns, so violation
+  * counts ride the write itself — no second scan of the batch, at any batch
+  * size, and no job for a batch the driver writes. A violating batch aborts
+  * BEFORE the manifest publishes: the staged
   * data directory is deleted and nothing becomes visible (the same
   * invisible-abort contract every snapshot write has), so readers never see
   * a half-admitted batch and a retry after fixing the data is a plain
@@ -189,10 +191,13 @@ object Checks {
           a.nameParts.head
       }).toSet
 
-  /** Per-rule violation-count metrics: rows where the predicate is
-    * strictly FALSE (null passes, per SQL). */
+  /** Whether a row violates `r`: its predicate is strictly FALSE (null
+    * passes, per SQL). */
+  private[engine] def violated(r: Rule): Column = !coalesce(r.cond, lit(true))
+
+  /** Per-rule violation counts over a frame. */
   private[engine] def violationCounts(rules: Seq[Rule]): Seq[Column] =
-    rules.map(r => count_if(!coalesce(r.cond, lit(true))).as(r.name))
+    rules.map(r => count_if(violated(r)).as(r.name))
 
   /** Root column names a rule set references THROUGH a struct field
     * (`meta.lang` → `meta`) — these need a TYPED null when absent, or the

@@ -70,9 +70,15 @@ object MergeClause {
   * version holds (only files from shards that recorded no size are
   * stat-ed). At lake scale (millions of objects, one object-store request
   * each) that is the difference between plan-time milliseconds and
-  * minutes. Compaction commits a rewritten file set as a NEW version:
-  * pinned readers keep their files (vacuum is the explicit, separate
-  * destruction step), and the head flips atomically.
+  * minutes. Writes are the mirror image: a batch's data files go straight
+  * to their final names through the engine's own parquet writer
+  * ([[BatchFiles]]) — no output committer, so no attempt directories, no
+  * renames, no `_SUCCESS` marker and no listing of what was written (the
+  * writer reports it) — and a batch already in driver memory (the
+  * reference's whole call shape: every verb takes an in-memory frame) is
+  * written with no Spark job at all. Compaction commits a rewritten file
+  * set as a NEW version: pinned readers keep their files (vacuum is the
+  * explicit, separate destruction step), and the head flips atomically.
   */
 object Snapshots {
 
@@ -600,56 +606,6 @@ object Snapshots {
   /** logical→physical renames (non-identity entries only). */
   private[graft] def logicalToPhysical(s: StructType): Map[String, String] =
     s.fields.iterator.map(f => f.name -> physicalOf(f)).filter(e => e._1 != e._2).toMap
-
-  /** Reference-counted session-conf pin: `pinned` holds `key` at `value`
-    * for the duration of `body`, restoring the pre-pin value only when the
-    * LAST concurrent pinner of the same (session, key) exits. A plain
-    * set/restore wrap is racy under concurrent same-session commits — one
-    * thread's finally-restore can land between another's set and its job
-    * planning; here every concurrent pinner asserts the same value, so the
-    * window never reopens mid-flight. The lock guards only the counter
-    * bookkeeping, never the (minutes-long) body. */
-  private object ConfPin {
-    // WEAK session keys (round 19): a (session, key) entry lives only for
-    // the duration of a pin, but a body that never returns normally (a
-    // killed thread) would otherwise anchor its dead SparkSession here
-    // forever in a long-lived multi-session process. During a live pin the
-    // caller's stack holds the session strongly, so an active entry can
-    // never be collected out from under its own finally-restore.
-    private val state = new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, (Option[String], String, Int)]]
-    def pinned[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
-      state.synchronized {
-        val per = Option(state.get(spark)).getOrElse {
-          val m = scala.collection.mutable.Map.empty[String, (Option[String], String, Int)]
-          state.put(spark, m); m
-        }
-        per.get(key) match {
-          case Some((prev, pinnedValue, n)) =>
-            // the soundness argument REQUIRES concurrent pinners to agree:
-            // a second pinner of a different value would otherwise run its
-            // whole body under the first one's setting, silently
-            require(pinnedValue == value,
-              s"conflicting concurrent pins of $key: '$pinnedValue' vs '$value'")
-            per(key) = (prev, pinnedValue, n + 1)
-          case None =>
-            val prev = spark.conf.getOption(key)
-            spark.conf.set(key, value)
-            per(key) = (prev, value, 1)
-        }
-      }
-      try body finally state.synchronized {
-        val per = state.get(spark) // non-null: `spark` is strongly held here
-        val (prev, pinnedValue, n) = per(key)
-        if (n > 1) per(key) = (prev, pinnedValue, n - 1)
-        else {
-          per.remove(key)
-          if (per.isEmpty) state.remove(spark)
-          prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-        }
-      }
-    }
-  }
 
   /** Read manifest v fully resolved (throws with a clear message when v was
     * never committed or has been vacuumed away). */
@@ -1338,7 +1294,14 @@ object Snapshots {
 
   /** Write one immutable batch under an unguessable commit dir; return its
     * file URIs + collected stats. Nothing references these files until a
-    * manifest publishes them. */
+    * manifest publishes them. The files go straight to their final names
+    * through the engine's own parquet writer ([[BatchFiles]]): one task per
+    * partition, no output committer, and no Spark job at all for a
+    * driver-resident batch. The file list is what the writer reported,
+    * never a listing of the commit dir (which may hold a failed task
+    * attempt's partial file). Any failure before this returns deletes the
+    * commit dir: readers never see a half-admitted batch, and a fixed retry
+    * is a plain re-run. */
   private def writeBatch(
       df: DataFrame,
       root: String,
@@ -1353,229 +1316,118 @@ object Snapshots {
       // stats under the wrong column
       statsPhysExtra: Seq[String] = Seq.empty,
       bloomPhysExtra: Seq[String] = Seq.empty): (Seq[String], Seq[ColStats], Seq[FileRows], Seq[FileBloom]) = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
     val spark = df.sparkSession
     val f = fs(spark, root)
     val commitId = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = s"${dataRoot(root)}/data/c-$commitId"
-    // table CHECK constraints ride the write job as Observation metrics —
-    // violation counts cost zero extra passes over the batch (rules see
-    // LOGICAL names, so they attach before the physical rename below). A
-    // checked column the batch omits is evaluated as null on every row
-    // (the schema-merging read semantics), never an analysis error.
+    val dataDir = f.makeQualified(new Path(s"${dataRoot(root)}/data/c-$commitId")).toString
+    // table CHECK constraints are counted in the write pass itself: each
+    // rule's violation flag rides next to the data columns and the writer
+    // sums it per slice (rules see LOGICAL names, so they evaluate before
+    // the physical rename). A checked column the batch omits is evaluated
+    // as null on every row (the schema-merging read semantics), never an
+    // analysis error.
     val (rulesGen, rules) = Checks.listWithGen(spark, root)
-    // composite-grid writes run through an RDD action (no Dataset command),
-    // which never completes an Observation — their CHECKs validate
-    // post-write against the staged files instead (below)
-    val compositeCluster = cluster.exists(_.cols.size > 1)
-    val obs =
-      if (rules.isEmpty || compositeCluster) None
-      else Some(new org.apache.spark.sql.Observation(s"graft-checks-$commitId"))
-    val dfC = obs match {
-      case Some(o) =>
-        val aug = Checks.augmentMissing(spark, df, rules,
-          Checks.tableSchema(spark, root))
-        val ms = Checks.violationCounts(rules)
-        // write only the batch's real columns; the null augmentation
-        // exists for rule evaluation alone
-        aug.observe(o, ms.head, ms.tail: _*)
-          .select(df.columns.toSeq.map(org.apache.spark.sql.functions.col): _*)
-      case None => df
-    }
+    val aug =
+      if (rules.isEmpty) df
+      else Checks.augmentMissing(spark, df, rules, Checks.tableSchema(spark, root))
     // files always store PHYSICAL column names; the batch arrives logical.
     // Stats are likewise collected and recorded under physical names — the
     // resolve-time relabel maps them back to whatever the logical name is
     // at read time.
-    val dfP =
-      if (toPhys.isEmpty || !df.columns.exists(toPhys.contains)) dfC
-      else dfC.select(df.columns.toSeq.map(c =>
-        org.apache.spark.sql.functions.col(c).as(toPhys.getOrElse(c, c))): _*)
+    val dataCols = df.columns.toSeq.map(c =>
+      col(org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIdentifier(c))
+        .as(toPhys.getOrElse(c, c)))
+    val flagCols = rules.zipWithIndex.map { case (r, i) => Checks.violated(r).as(s"__chk$i") }
+    val dfP = aug.select(dataCols ++ flagCols: _*)
+    val physSchema = StructType(dfP.schema.fields.take(dataCols.size))
     val statsP = (statsCols.map(c => toPhys.getOrElse(c, c)) ++ statsPhysExtra).distinct
+    val bloomPhysW = (bloomCols.map(c => toPhys.getOrElse(c, c)) ++ bloomPhysExtra).distinct
     // hash-clustered write: one shuffle partition per bucket, so the
-    // writer's `part-NNNNN` file index IS the bucket id (the explicit
+    // slice index in each file's name IS the bucket id (the explicit
     // partition count pins the shuffle — AQE never coalesces a
     // REPARTITION_BY_NUM, which is what keeps index == pmod(hash(col), n)).
     // Bucket purity then holds per FILE, the invariant the manifest's
     // Clustering spec asserts and storage-partitioned joins rely on.
     // A `sorted` spec additionally sorts rows inside each bucket (asc,
     // nulls first — what the scan's reported ordering asserts).
-    val bloomPhysW = (bloomCols.map(c => toPhys.getOrElse(c, c)) ++ bloomPhysExtra).distinct
-    // bloom-indexed columns also get PARQUET-INTERNAL bloom filters
-    // (adaptive sizing): the manifest's FileBloom prunes whole FILES, the
-    // in-file blooms let the reader's row-group predicate pushdown
-    // ([[RowGroupFilters]]) skip ROW GROUPS on point predicates whose
-    // stats ranges can't discriminate (high-cardinality strings in
-    // unsorted files — exactly what FileBloom columns are)
-    val gridWritten: Seq[String] =
-      if (compositeCluster) writeGridBatch(dfP, dataDir, cluster.get, bloomPhysW)
-      else Seq.empty
-    if (!compositeCluster) {
-      val dfW = cluster.fold(dfP) { c =>
-        val ks = c.cols.map(org.apache.spark.sql.functions.col)
+    // A COMPOSITE grid (round 15) shuffles on the cell-id tuple instead and
+    // writes one file per grid CELL, named `...-g<i0>-<i1>...` so
+    // [[gridOfFile]] recovers the cell from the NAME (a collision merging
+    // two cells into one task is fine: rows arrive cell-sorted and the
+    // writer splits them into separate files).
+    val gridDims = cluster.map(_.cols.size).filter(_ > 1).getOrElse(0)
+    val q = cluster.fold(dfP) { c =>
+      val ks = c.cols.map(col)
+      if (gridDims == 0) {
         val r = dfP.repartition(c.buckets, ks: _*)
         if (c.sorted) r.sortWithinPartitions(ks: _*) else r
-      }
-      val writer = bloomPhysW.foldLeft(
-        dfW.write.option("parquet.bloom.filter.adaptive.enabled", "true")) {
-        (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
-      }
-      // snapshot data files always store LTZ timestamps as standard INT64
-      // TIMESTAMP(MICROS), never legacy INT96: footer row-group stats and
-      // the footer-mining stats job are blind to INT96 (no usable min/max),
-      // so INT96 files forfeit row-group pruning, top-n thresholds, and
-      // footer-mined file stats. Session-conf pin: the parquet writer has
-      // no per-write option for this (the DSv2 writer path pins the same
-      // value in SnapshotParquetDataWriter.writerConf). Reference-counted
-      // ([[ConfPin]]) rather than a plain set/restore wrap: under the
-      // supported concurrent same-session commits, one thread's restore
-      // must not land inside another thread's set→plan window and hand it
-      // an INT96 (footer-stats-blind) file — all concurrent writes pin the
-      // SAME value, so the original only restores when the LAST one exits.
-      ConfPin.pinned(spark, "spark.sql.parquet.outputTimestampType",
-        "TIMESTAMP_MICROS") { writer.parquet(dataDir) }
-    }
-    obs.foreach { o =>
-      val got = o.get
-      val bad = rules.filter(r => got.get(r.name).exists(_.asInstanceOf[Long] > 0L))
-      if (bad.nonEmpty) {
-        // abort before anything references the staged files: readers never
-        // see a half-admitted batch, and a fixed retry is a plain re-run
-        f.delete(new Path(dataDir), true)
-        throw new IllegalArgumentException(
-          s"check constraint violation writing to $root: " + bad.map(r =>
-            s"'${r.name}' (${got(r.name)} rows, ${r.exprSql})").mkString(", "))
+      } else {
+        val ids = c.cols.zipWithIndex.map { case (cc, i) =>
+          pmod(hash(col(cc)), lit(c.buckets)).cast("int").as(s"__gb$i") }
+        val idCols = gridColNames(gridDims).map(col)
+        val parts = math.min(math.pow(c.buckets.toDouble, gridDims.toDouble), 1024.0).toInt
+        dfP.select(dfP.columns.toSeq.map(col) ++ ids: _*)
+          .repartition(parts, idCols: _*)
+          .sortWithinPartitions(idCols ++ (if (c.sorted) ks else Nil): _*)
       }
     }
-    testPostWriteHook()
-    // a rule set that CHANGED while this batch wrote (a concurrent
-    // Checks.add — the minutes-long window of a big write) was not in the
-    // observation: re-validate the staged files against the current rules
-    // before anything can publish them — one scan of this batch's files,
-    // paid only in the race. Files store physical names; rules speak
-    // logical ones.
-    val (genNow, rulesNow) = Checks.listWithGen(spark, root)
-    // validate the JOB-REPORTED files for the composite path (writeGridBatch
-    // bypasses the output-commit protocol, so the live dir may also hold a
-    // retried attempt's duplicate or a torn partial — neither is this
-    // batch's content); the native-writer path keeps the directory listing
-    // (its commit protocol already cleaned attempts)
-    val stagedSized: Seq[(String, Long)] =
-      if (compositeCluster)
-        gridWritten.map(u => u -> f.getFileStatus(new Path(u)).getLen)
-      else f.listStatus(new Path(dataDir)).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(st => st.getPath.toString -> st.getLen)
-    val stagedUris = stagedSized.map(_._1)
-    if ((genNow != rulesGen || compositeCluster) && rulesNow.nonEmpty &&
-        stagedUris.nonEmpty) {
-      val staged0 = spark.read.parquet(stagedUris: _*)
-      val toLogical = toPhys.map(_.swap)
-      val staged = staged0.select(staged0.columns.toSeq.map(c =>
-        org.apache.spark.sql.functions.col(c).as(toLogical.getOrElse(c, c))): _*)
-      Checks.findViolation(staged, rulesNow,
-          Checks.tableSchema(spark, root)).foreach { case (rname, cnt) =>
-        f.delete(new Path(dataDir), true)
-        throw new IllegalArgumentException(
-          s"check constraint violation writing to $root: '$rname' ($cnt rows, " +
-            "rule added concurrently with this write)")
-      }
-    }
-    // composite grids take the JOB-REPORTED list, never the listing: a
-    // failed task attempt's partial file must not enter the manifest (the
-    // native writer path gets this from its commit protocol; debris is
-    // unreferenced and vacuumable either way)
-    val written = stagedUris.sorted
-    // footers first: the scan pass re-reads every byte this commit just
-    // wrote — at any scale that DOUBLES commit I/O and costs a Spark job;
-    // the footers already carry exact chunk stats for the common key types
-    val (stats, rows0) = statsFromFooters(spark, written, statsP)
-      .getOrElse(collectStats(spark, Seq(dataDir), statsP))
-    // complete the per-file counts from footers if the stats pass didn't
-    // run (statsCols empty) — the bloom sizing below needs real row
-    // counts, and writeShard records them anyway
-    val rows =
-      if (rows0.map(_.file).toSet == written.map(u => new Path(u).getName).toSet) rows0
-      else {
-        val known = rows0.map(_.file).toSet
-        rows0 ++ rowsFromFooters(spark,
-          written.filterNot(u => known.contains(new Path(u).getName)))
-      }
-    // byte sizes ride along from the staging listing (free — already
-    // listed) for rows the stats/footer pass didn't size (Spark-job stats)
-    val sizeByName = stagedSized.iterator
-      .map { case (u, len) => new Path(u).getName -> len }.toMap
-    val rowsB = rows.map(r =>
-      if (r.bytes >= 0L) r else r.copy(bytes = sizeByName.getOrElse(r.file, -1L)))
-    val blooms =
-      if (bloomCols.isEmpty) Seq.empty
-      else collectBlooms(spark, Seq(dataDir), bloomCols.map(c => toPhys.getOrElse(c, c)),
-        df.schema, toPhys, rowsB)
-    (written, stats, rowsB, blooms)
-  }
-
-  /** COMPOSITE-grid batch write (round 15): one parquet file per grid
-    * CELL, flat under `dataDir`, named `part-<pid>-<uuid>-g<i0>-<i1>...`
-    * so [[gridOfFile]] recovers the cell from the NAME (unique basenames —
-    * the manifest keys all per-file metadata by basename — and no
-    * object-store renames). Rows shuffle on the id tuple (a collision
-    * merging two cells into one task is fine: the sequential writer splits
-    * them into separate files) and stream cell-sorted through one
-    * executor-side [[graft.streaming.SnapshotParquetDataWriter]] at a
-    * time; a `sorted` spec additionally sorts rows inside each cell.
-    * Returns the job-reported file URIs. */
-  private def writeGridBatch(
-      dfP: DataFrame,
-      dataDir: String,
-      c: Clustering,
-      bloomPhys: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val spark = dfP.sparkSession
-    val k = c.cols.size
-    val ids = c.cols.zipWithIndex.map { case (cc, i) =>
-      pmod(hash(col(cc)), lit(c.buckets)).cast("int").as(s"__gb$i") }
-    val idCols = gridColNames(k).map(col)
-    val parts = math.min(math.pow(c.buckets.toDouble, k.toDouble), 1024.0).toInt
-    val q0 = dfP.select(dfP.columns.map(col) ++ ids: _*)
-      .repartition(parts, idCols: _*)
-    // cells stream sequentially through one writer per task: always sort
-    // by the id tuple; a sorted spec additionally sorts inside each cell
-    val q = q0.sortWithinPartitions(
-      (idCols ++ (if (c.sorted) c.cols.map(col) else Nil)): _*)
-    val dataWidth = dfP.columns.length
-    val physSchemaJson = dfP.schema.json
-    val confEntries =
-      graft.streaming.SnapshotParquetDataWriter.writerConf(spark) ++
-        (if (bloomPhys.isEmpty) Array.empty[(String, String)]
-         else Array("parquet.bloom.filter.adaptive.enabled" -> "true") ++
-           bloomPhys.map(cc => s"parquet.bloom.filter.enabled#$cc" -> "true"))
-    val dims = k
-    q.queryExecution.toRdd.mapPartitions { it =>
-      val out = Seq.newBuilder[String]
-      val schema = org.apache.spark.sql.types.DataType.fromJson(physSchemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val proj = org.apache.spark.sql.catalyst.ProjectingInternalRow(
-        schema, 0 until dataWidth)
-      val uuid = java.util.UUID.randomUUID().toString.take(8)
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var cur: Seq[Int] = null
-      var w: graft.streaming.SnapshotParquetDataWriter = null
-      var path: String = null
-      def close(): Unit = if (w != null) { w.commit(); out += path; w = null }
-      while (it.hasNext) {
-        val row = it.next()
-        val cell = (0 until dims).map(i => row.getInt(dataWidth + i))
-        if (cell != cur) {
-          close()
-          cur = cell
-          path = f"$dataDir/part-$pid%05d-$uuid-g${cell.mkString("-")}.parquet"
-          w = new graft.streaming.SnapshotParquetDataWriter(
-            path, physSchemaJson, confEntries)
+    try {
+      val out = BatchFiles.write(q,
+        BatchFiles.Layout(dataDir, physSchema.json, physSchema.length, rules.size,
+          gridDims, spark.sessionState.conf.maxRecordsPerFile),
+        graft.streaming.SnapshotParquetDataWriter.writerConf(spark, physSchema, bloomPhysW))
+      val bad = rules.zip(out.violations).filter(_._2 > 0L)
+      if (bad.nonEmpty) throw new IllegalArgumentException(
+        s"check constraint violation writing to $root: " + bad.map { case (r, n) =>
+          s"'${r.name}' ($n rows, ${r.exprSql})" }.mkString(", "))
+      val written = out.files.map(_._1).sorted
+      testPostWriteHook()
+      // a rule set that CHANGED while this batch wrote (a concurrent
+      // Checks.add — the minutes-long window of a big write) was not
+      // counted: re-validate the written files against the current rules
+      // before anything can publish them — one scan of this batch's
+      // files, paid only in the race. Files store physical names; rules
+      // speak logical ones.
+      val (genNow, rulesNow) = Checks.listWithGen(spark, root)
+      if (genNow != rulesGen && rulesNow.nonEmpty && written.nonEmpty) {
+        val staged0 = spark.read.parquet(written: _*)
+        val toLogical = toPhys.map(_.swap)
+        val staged = staged0.select(staged0.columns.toSeq.map(c =>
+          col(c).as(toLogical.getOrElse(c, c))): _*)
+        Checks.findViolation(staged, rulesNow,
+            Checks.tableSchema(spark, root)).foreach { case (rname, cnt) =>
+          throw new IllegalArgumentException(
+            s"check constraint violation writing to $root: '$rname' ($cnt rows, " +
+              "rule added concurrently with this write)")
         }
-        proj.project(row)
-        w.write(proj)
       }
-      close()
-      out.result().iterator
-    }.collect().toSeq
+      // footers first: the scan pass re-reads every byte this commit just
+      // wrote — at any scale that DOUBLES commit I/O and costs a Spark job;
+      // the footers already carry exact chunk stats for the common key types
+      val (stats, rows0) = statsFromFooters(spark, written, statsP)
+        .getOrElse(collectStats(spark, written, statsP))
+      // complete the per-file counts from footers if the stats pass didn't
+      // run (statsCols empty) — the bloom sizing below needs real row
+      // counts, and writeShard records them anyway
+      val known = rows0.map(_.file).toSet
+      val rows = rows0 ++ rowsFromFooters(spark,
+        written.filterNot(u => known.contains(new Path(u).getName)))
+      // the scan pass records no byte sizes: stat those files
+      val byName = written.map(u => new Path(u).getName -> u).toMap
+      val rowsB = rows.map(r =>
+        if (r.bytes >= 0L) r
+        else r.copy(bytes = f.getFileStatus(new Path(byName(r.file))).getLen))
+      val blooms =
+        if (bloomCols.isEmpty) Seq.empty
+        else collectBlooms(spark, written, bloomCols.map(c => toPhys.getOrElse(c, c)),
+          df.schema, toPhys, rowsB)
+      (written, stats, rowsB, blooms)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        f.delete(new Path(dataDir), true)
+        throw e
+    }
   }
 
   /** One scan of the freshly-written files building a per-file Bloom sketch
@@ -1631,11 +1483,8 @@ object Snapshots {
 
   /** The driver's Hadoop conf as shippable entries (credentials, fs
     * settings) — executors rebuild a Configuration from them. */
-  private def hadoopEntries(spark: SparkSession): Array[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toArray
-  }
+  private def hadoopEntries(spark: SparkSession): Array[(String, String)] =
+    graft.streaming.SnapshotParquetDataWriter.entries(spark.sparkContext.hadoopConfiguration)
 
   private def footerConf(entries: Array[(String, String)]) = {
     val conf = new org.apache.hadoop.conf.Configuration(true)
@@ -2947,7 +2796,7 @@ object Snapshots {
           .toDF(DvFileCol, "__old64", "__olddel")
         val joined = marked.get.join(oldDvDf, Seq(DvFileCol), "left")
         val snapDir = s"${dataRoot(root)}/$SnapDir"
-        val confEntries = graft.streaming.SnapshotParquetDataWriter.writerConf(spark)
+        val confEntries = hadoopEntries(spark)
         val mor = mergeOnRead
         val cap = maxDvFraction
         val outcomes: Seq[(String, String)] = joined.rdd.mapPartitions { it =>

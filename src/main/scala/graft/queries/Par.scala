@@ -5,8 +5,9 @@ package graft.queries
   * build's tasks back-fill executors freed by the first one's tail). For
   * the two-table SPJ/bucketed-join setups, the two clustered commits have
   * no data dependency — each is its own root — and the snapshot layer
-  * supports concurrent same-session commits by design (ConfPin,
-  * optimistic publish). Rethrows the first failure after all complete. */
+  * supports concurrent same-session commits by design (each write carries
+  * its own writer conf and never touches the session's; publish is
+  * optimistic). Rethrows the first failure after all complete. */
 object Par {
   def apply(builds: (() => Unit)*): Unit = {
     if (builds.sizeIs <= 1) { builds.foreach(_.apply()); return }

@@ -4,14 +4,14 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.column.ParquetProperties
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.hadoop.mapred.JobConf
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOutputWriter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -130,9 +130,9 @@ private[streaming] class SnapshotReplaceWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val spark = SparkSession.active
-    SnapshotParquetWriterFactory(stagingDir,
-      SnapshotParquetDataWriter.physSchemaJson(root, rowSchema),
-      SnapshotParquetDataWriter.writerConfWithBlooms(spark, root))
+    val phys = SnapshotParquetDataWriter.physSchema(root, rowSchema)
+    SnapshotParquetWriterFactory(stagingDir, phys.json,
+      SnapshotParquetDataWriter.factoryConf(spark, root, phys, blooms = true))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -188,9 +188,9 @@ private[streaming] class SnapshotStreamingWrite(
           s"${unknown.mkString(", ")} — evolve the schema with a batch " +
           "commit first (streamed appends never evolve schemas silently)")
     }
-    SnapshotStreamingWriterFactory(stagingDir,
-      SnapshotParquetDataWriter.physSchemaJson(root, rowSchema),
-      SnapshotParquetDataWriter.writerConfWithBlooms(spark, root))
+    val phys = SnapshotParquetDataWriter.physSchema(root, rowSchema)
+    SnapshotStreamingWriterFactory(stagingDir, phys.json,
+      SnapshotParquetDataWriter.factoryConf(spark, root, phys, blooms = true))
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -255,9 +255,9 @@ private[streaming] class SnapshotUpsertStreamingWrite(
           s"${unknown.mkString(", ")} — evolve the schema with a batch " +
           "commit first (streamed writes never evolve schemas silently)")
     }
-    SnapshotStreamingWriterFactory(stagingDir,
-      SnapshotParquetDataWriter.physSchemaJson(root, rowSchema),
-      SnapshotParquetDataWriter.writerConf(spark))
+    val phys = SnapshotParquetDataWriter.physSchema(root, rowSchema)
+    SnapshotStreamingWriterFactory(stagingDir, phys.json,
+      SnapshotParquetDataWriter.factoryConf(spark, root, phys, blooms = false))
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -374,7 +374,7 @@ private[streaming] case class SnapshotStreamingWriterFactory(
 }
 
 /** Serialized to executors: staging dir + physical-name schema (json) +
-  * flattened session/hadoop conf (same pattern as the read factory). */
+  * the flattened writer conf ([[SnapshotParquetDataWriter.factoryConf]]). */
 private[streaming] case class SnapshotParquetWriterFactory(
     stagingDir: String,
     physSchemaJson: String,
@@ -392,71 +392,94 @@ private[graft] object SnapshotParquetDataWriter {
   /** The table's PHYSICAL schema for `rowSchema`'s columns (column
     * mapping applied; the `_file` metadata column — provenance plumbing,
     * never persisted data — stripped). */
-  def physSchemaJson(root: String, rowSchema: StructType): String = {
+  def physSchema(root: String, rowSchema: StructType): StructType = {
     val phys = SnapshotSource.physicalNames(root)
     StructType(rowSchema.fields
       .filterNot(_.name == SnapshotSource.FileCol)
       .map(f => StructField(phys.getOrElse(f.name, f.name), f.dataType, f.nullable)))
-      .json
   }
 
-  /** [[writerConf]] plus parquet-internal bloom filters (adaptive) on the
-    * table's declared bloom-indexed PHYSICAL columns — read O(1) from the
-    * head record ([[Snapshots.ManifestMeta.indexed]]) so files written by
-    * the DSv2 paths (streaming epochs, CoW rewrites) prune row groups on
-    * string points exactly like batch-committed ones. A head without the
-    * declaration simply writes without them (pruning weakens, never
-    * rows). */
-  def writerConfWithBlooms(spark: SparkSession, root: String): Array[(String, String)] = {
-    val headV = Snapshots.headVersion(spark, root)
+  /** [[writerConf]] over `phys`, flattened for a DSv2 write factory. With
+    * `blooms`, the table's declared bloom-indexed PHYSICAL columns — read
+    * O(1) from the head record ([[Snapshots.ManifestMeta.indexed]]) — get
+    * parquet-internal bloom filters, so files written by the DSv2 paths
+    * (streaming epochs, CoW rewrites) prune row groups on string points
+    * exactly like batch-committed ones. A head without the declaration
+    * simply writes without them (pruning weakens, never rows). */
+  def factoryConf(spark: SparkSession, root: String, phys: StructType,
+      blooms: Boolean): Array[(String, String)] = {
+    val headV = if (blooms) Snapshots.headVersion(spark, root) else 0L
     val bloomPhys =
       if (headV == 0) Seq.empty[String]
       else Snapshots.manifestMeta(spark, root, headV).indexed
         .map(_._2).getOrElse(Seq.empty)
-    writerConf(spark) ++
-      (if (bloomPhys.isEmpty) Array.empty[(String, String)]
-       else Array("parquet.bloom.filter.adaptive.enabled" -> "true") ++
-         bloomPhys.map(c => s"parquet.bloom.filter.enabled#$c" -> "true"))
+    entries(writerConf(spark, phys, bloomPhys))
   }
 
-  /** Flattened conf for executor-side parquet writing.
-    * ParquetWriteSupport + SparkToParquetSchemaConverter read several
-    * keys RAW (`.toBoolean` / `withName`, no ConfigEntry default
-    * fallback) — resolve them on the DRIVER through the session conf
-    * (which does apply defaults) and append LAST so they override any
-    * unset/garbage value in the flattened entries. */
-  def writerConf(spark: SparkSession): Array[(String, String)] = {
-    def resolved(key: String, dflt: String): (String, String) =
-      key -> spark.conf.get(key, dflt)
-    SnapshotSource.readerConfEntries(spark) ++ Array(
-      resolved(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false"),
-      // PINNED, not session-resolved: snapshot files are never INT96 (the
-      // footer-stats-blind legacy type) no matter what the session sets —
-      // the same invariant writeBatch's native path enforces with its
-      // conf wrap
-      SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key -> "TIMESTAMP_MICROS",
-      resolved(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "true"),
-      resolved(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED"),
-      resolved(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED"),
-      resolved(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false"),
-      resolved(SQLConf.CASE_SENSITIVE.key, "false"))
+  /** The Hadoop configuration `df.write.parquet` builds for `schema`:
+    * Spark's own [[ParquetFileFormat]]`.prepareWrite` over the session's
+    * Hadoop conf (codec, write support, schema, legacy-format, field-id
+    * and variant flags, no summary files), plus three changes:
+    *  - LTZ timestamps are PINNED to INT64 TIMESTAMP(MICROS), never legacy
+    *    INT96, whatever the session sets: footer row-group stats and the
+    *    footer-mining stats pass are blind to INT96 (no usable min/max), so
+    *    INT96 files would forfeit row-group pruning, top-n thresholds and
+    *    footer-mined file stats;
+    *  - the rebase modes and case sensitivity, which the write support
+    *    reads RAW where no session sets them, are resolved here through
+    *    the session conf (which applies the defaults);
+    *  - `bloomCols` (PHYSICAL names) get parquet-internal bloom filters
+    *    (adaptive sizing): the manifest's FileBloom prunes whole FILES,
+    *    these let the reader's row-group pushdown skip ROW GROUPS on
+    *    point predicates whose stats ranges cannot discriminate. */
+  def writerConf(spark: SparkSession, schema: StructType,
+      bloomCols: Seq[String] = Seq.empty): Configuration = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val conf = job.getConfiguration
+    Seq(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key -> "CORRECTED",
+        SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key -> "CORRECTED",
+        SQLConf.CASE_SENSITIVE.key -> "false")
+      .foreach { case (k, dflt) => conf.set(k, spark.conf.get(k, dflt)) }
+    conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+    if (bloomCols.nonEmpty) conf.set("parquet.bloom.filter.adaptive.enabled", "true")
+    bloomCols.foreach(c => conf.set(s"parquet.bloom.filter.enabled#$c", "true"))
+    conf
+  }
+
+  /** `conf` as key/value pairs, to ship to tasks ([[confOf]] rebuilds it). */
+  def entries(conf: Configuration): Array[(String, String)] =
+    conf.iterator().asScala.map(e => e.getKey -> e.getValue).toArray
+
+  def confOf(entries: Array[(String, String)]): Configuration = {
+    val conf = new Configuration(false)
+    entries.foreach { case (k, v) => conf.set(k, v) }
+    conf
   }
 }
 
-/** Executor-side parquet writer of InternalRows via Spark's own
-  * [[ParquetWriteSupport]] — the exact value encoding `df.write.parquet`
-  * produces (decimals, timestamps, nested arrays/maps all match), so
-  * files staged here are indistinguishable from engine-written ones.
-  * Lazy-opens on the first row: an empty task stages nothing. */
+/** The engine's one parquet data-file writer: Spark's own
+  * [[ParquetOutputWriter]] over the configuration `df.write.parquet` builds
+  * ([[SnapshotParquetDataWriter.writerConf]]), so the files it writes are
+  * indistinguishable from the DataFrame writer's (types, encodings, codec,
+  * key-value metadata) — but it writes straight to the final name it is
+  * given: no output committer, no attempt directory, no rename. It runs
+  * wherever the rows are: inside tasks (the DSv2 writes, and batch commits
+  * over distributed plans) or on driver threads (a driver-resident batch,
+  * [[graft.engine.BatchFiles]]). Opens on the first row: an empty writer
+  * leaves no file. `conf` is called once, at that open. */
 private[graft] class SnapshotParquetDataWriter(
     path: String,
-    physSchemaJson: String,
-    confEntries: Array[(String, String)])
+    schema: StructType,
+    conf: () => Configuration)
   extends DataWriter[InternalRow] {
 
-  private var writer: ParquetWriter[InternalRow] = null
+  def this(path: String, physSchemaJson: String, confEntries: Array[(String, String)]) =
+    this(path, DataType.fromJson(physSchemaJson).asInstanceOf[StructType],
+      () => SnapshotParquetDataWriter.confOf(confEntries))
+
+  private var writer: ParquetOutputWriter = null
   private var rows = 0L
-  private lazy val schema = DataType.fromJson(physSchemaJson).asInstanceOf[StructType]
   // Spark's group-based rewrite prefixes every row with an INT
   // `__row_operation` column (and, having no metadata projection to
   // trigger its own stripping task, hands rows to this writer RAW):
@@ -465,47 +488,10 @@ private[graft] class SnapshotParquetDataWriter(
   private lazy val proj = org.apache.spark.sql.catalyst.ProjectingInternalRow(
     schema, 1 to schema.length)
 
-  private def open(): Unit = {
-    val conf = new Configuration(false)
-    confEntries.foreach { case (k, v) => conf.set(k, v) } // driver-resolved keys last
-    ParquetWriteSupport.setSchema(schema, conf)
-    val codec = conf.get("spark.sql.parquet.compression.codec", "snappy")
-      .toLowerCase match {
-        case "none" | "uncompressed" => CompressionCodecName.UNCOMPRESSED
-        case "gzip" => CompressionCodecName.GZIP
-        case "zstd" => CompressionCodecName.ZSTD
-        case "lz4" | "lz4raw" | "lz4_raw" => CompressionCodecName.LZ4_RAW
-        case _ => CompressionCodecName.SNAPPY
-      }
-    // Builder API (the legacy constructor ignores per-column properties):
-    // bloom enables arrive as `parquet.bloom.filter.enabled#<col>` conf
-    // entries ([[SnapshotParquetDataWriter.writerConfWithBlooms]]) and are
-    // applied explicitly — the builder reads its own settings, not the
-    // conf's dynamic keys
-    class B(p: Path) extends ParquetWriter.Builder[InternalRow, B](p) {
-      override def self(): B = this
-      override def getWriteSupport(c: Configuration) = new ParquetWriteSupport
-    }
-    val bloomPrefix = "parquet.bloom.filter.enabled#"
-    val bloomCols = confEntries.collect {
-      case (k, "true") if k.startsWith(bloomPrefix) =>
-        k.substring(bloomPrefix.length)
-    }
-    var b = new B(new Path(path))
-      .withConf(conf)
-      .withCompressionCodec(codec)
-      .withDictionaryEncoding(true)
-      .withValidation(false)
-      .withWriterVersion(ParquetProperties.WriterVersion.PARQUET_1_0)
-    if (bloomCols.nonEmpty) b = b.withAdaptiveBloomFilterEnabled(true)
-    bloomCols.foreach(c => b = b.withBloomFilterEnabled(c, true))
-    writer = b.build()
-  }
-
   override def write(record: InternalRow): Unit = {
     import org.apache.spark.sql.catalyst.util.RowDeltaUtils
     val out =
-      if (record.numFields == schema.length) record // already bare (defensive)
+      if (record.numFields == schema.length) record // already bare
       else {
         require(record.numFields == schema.length + 1,
           s"row-level write row has ${record.numFields} fields for a " +
@@ -516,7 +502,10 @@ private[graft] class SnapshotParquetDataWriter(
         proj.project(record)
         proj
       }
-    if (writer == null) open()
+    // a per-writer JobConf copy, as Spark's task setup makes one: the
+    // caller's conf may be shared by concurrent writers
+    if (writer == null) writer = new ParquetOutputWriter(path,
+      new TaskAttemptContextImpl(new JobConf(conf()), new TaskAttemptID()))
     writer.write(out)
     rows += 1
   }
@@ -528,9 +517,10 @@ private[graft] class SnapshotParquetDataWriter(
 
   override def abort(): Unit =
     if (writer != null) {
-      writer.close()
-      val p = new Path(path)
-      p.getFileSystem(new Configuration()).delete(p, false)
+      try writer.close() finally {
+        val p = new Path(path)
+        p.getFileSystem(new Configuration()).delete(p, false)
+      }
     }
 
   override def close(): Unit = ()

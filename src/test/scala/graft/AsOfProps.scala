@@ -18,7 +18,7 @@ object AsOfProps extends Properties("AsOf") {
   // every case runs a real Spark join; 25 random timelines per direction is
   // plenty of collision coverage without minutes of wall clock
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
-    p.withMinSuccessfulTests(25)
+    PropCases(p, 25)
 
   private val spark = SparkSpec.spark
   import spark.implicits._

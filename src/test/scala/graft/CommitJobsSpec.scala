@@ -204,4 +204,21 @@ class CommitJobsSpec extends SparkSpec {
     val dvMerge = countJobs(Snapshots.merge(batch, root, "id", statsCols = Seq("id")))
     assert(dvMerge <= 1, s"merge over vectored files ran $dvMerge jobs (the join form ran 6)")
   }
+
+  test("a driver-resident append runs NO job; a distributed commit runs ONE") {
+    val root = lakeTable()
+    val batch = (3000L until 3400L).map(i => (i, i % 7)).toDF("id", "x")
+    assert(batch.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val local = countJobs(Snapshots.commit(batch, root, append = true, statsCols = Seq("id")))
+    assert(local === 0, s"a driver-resident append ran $local jobs — its write left the driver?")
+    val m = Snapshots.manifest(spark, root, Snapshots.headVersion(spark, root))
+    assert(m.rows.map(_.n).sum === 2400L)
+    assert(m.stats.count(_.col == "id") === m.files.size)
+    val wide = spark.range(4000, 6000).select($"id", ($"id" % 7).as("x"))
+    val distributed = countJobs(withAqeOff(
+      Snapshots.commit(wide, root, append = true, statsCols = Seq("id"))))
+    assert(distributed === 1, s"a distributed commit ran $distributed jobs")
+    assert(Snapshots.read(spark, root).count() === 4400L)
+  }
 }

@@ -21,7 +21,7 @@ object IncrementalProps extends Properties("Incremental") {
   // each case drives real snapshot commits + refreshes; keep the count
   // modest (the lifecycle inside each case is itself multi-step)
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
-    p.withMinSuccessfulTests(8)
+    PropCases(p, 8)
 
   private val spark = SparkSpec.spark
   import spark.implicits._

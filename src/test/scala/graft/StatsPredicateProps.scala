@@ -36,7 +36,7 @@ import graft.engine.{RowGroupFilters, Snapshots, StatsPredicate}
 object StatsPredicateProps extends Properties("StatsPredicate") {
 
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
-    p.withMinSuccessfulTests(5000)
+    PropCases(p, 5000)
 
   private val Pow53 = 9007199254740992L
 

@@ -29,7 +29,7 @@ import graft.SparkSpec
 object KeyFilterProps extends Properties("KeyFilter") {
 
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
-    p.withMinSuccessfulTests(20)
+    graft.PropCases(p, 20)
 
   private val spark = SparkSpec.spark
 
