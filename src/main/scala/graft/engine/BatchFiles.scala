@@ -33,8 +33,10 @@ import graft.streaming.SnapshotParquetDataWriter
   * its rows are cut into the slices `LocalTableScanExec` would make
   * (`min(rows, leafNodeDefaultParallelism)` contiguous ranges, so file
   * count and row placement match the task path) and written on a pool of
-  * at most one thread per driver core. Any other plan, and a local batch
-  * past [[MaxDriverBytes]], runs one task per partition.
+  * at most one thread per driver core. There is no size cap: the rows
+  * already live in driver memory, and the task path would hold them there
+  * too (`LocalTableScanExec` parallelizes the same rows, and each slice
+  * ships inside its task). Any other plan runs one task per partition.
   */
 private[engine] object BatchFiles {
 
@@ -51,20 +53,9 @@ private[engine] object BatchFiles {
     * and per CHECK rule the number of rows that violated it. */
   final case class Written(files: Seq[(String, Long)], violations: Array[Long])
 
-  /** The largest local batch written on driver threads, in the plan's
-    * estimated bytes. Past it the batch's slices run as tasks, which a
-    * cluster spreads over its executors and whose row-group buffers then
-    * sit in executor memory. Measured on a quiet 4-core local[4] host,
-    * median commit (append, two stats columns) of one local lineitem frame,
-    * driver threads against tasks: 2.5k rows (0.3 MiB estimated) 99 against
-    * 137 ms, 40k (4.4 MiB) 173 against 228, 160k (18 MiB) 693 against 933,
-    * 320k (35 MiB) 1,957 against 2,161. Past this cap the saving is under a
-    * tenth of the verb even where the tasks share the driver's cores. */
-  private val MaxDriverBytes = 32L << 20
-
   def write(q: DataFrame, layout: Layout, conf: Configuration): Written =
     q.queryExecution.optimizedPlan match {
-      case l: LocalRelation if l.stats.sizeInBytes <= MaxDriverBytes =>
+      case l: LocalRelation =>
         onDriver(l.data.toIndexedSeq, q, layout, conf)
       case _ =>
         val entries = SnapshotParquetDataWriter.entries(conf)

@@ -1405,24 +1405,21 @@ object Snapshots {
       // footers first: the scan pass re-reads every byte this commit just
       // wrote — at any scale that DOUBLES commit I/O and costs a Spark job;
       // the footers already carry exact chunk stats for the common key types
-      val (stats, rows0) = statsFromFooters(spark, written, statsP)
+      val (stats, mined) = statsFromFooters(spark, written, statsP)
         .getOrElse(collectStats(spark, written, statsP))
-      // complete the per-file counts from footers if the stats pass didn't
-      // run (statsCols empty) — the bloom sizing below needs real row
-      // counts, and writeShard records them anyway
-      val known = rows0.map(_.file).toSet
-      val rows = rows0 ++ rowsFromFooters(spark,
-        written.filterNot(u => known.contains(new Path(u).getName)))
-      // the scan pass records no byte sizes: stat those files
-      val byName = written.map(u => new Path(u).getName -> u).toMap
-      val rowsB = rows.map(r =>
-        if (r.bytes >= 0L) r
-        else r.copy(bytes = f.getFileStatus(new Path(byName(r.file))).getLen))
+      // row counts are the writer's; byte sizes come from the footer pass
+      // when it ran, else from one stat per file
+      val sizes = mined.collect { case r if r.bytes >= 0L => r.file -> r.bytes }.toMap
+      val rows = out.files.sortBy(_._1).map { case (u, n) =>
+        val name = new Path(u).getName
+        FileRows(name, n, sizes.getOrElse(name, f.getFileStatus(new Path(u)).getLen))
+      }
+      // a batch with no rows wrote no file: there is nothing to sketch
       val blooms =
-        if (bloomCols.isEmpty) Seq.empty
+        if (bloomCols.isEmpty || written.isEmpty) Seq.empty
         else collectBlooms(spark, written, bloomCols.map(c => toPhys.getOrElse(c, c)),
-          df.schema, toPhys, rowsB)
-      (written, stats, rowsB, blooms)
+          df.schema, toPhys, rows)
+      (written, stats, rows, blooms)
     } catch {
       case scala.util.control.NonFatal(e) =>
         f.delete(new Path(dataDir), true)

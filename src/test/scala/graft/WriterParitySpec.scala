@@ -181,4 +181,37 @@ class WriterParitySpec extends SparkSpec {
     assert(back.count() === 0L)
     assert(back.schema.fieldNames.toSeq === distributed.schema.fieldNames.toSeq)
   }
+
+  test("a batch with no rows publishes under bloomCols: an empty commit and an emptying delete") {
+    val root = "file:" + tmp("eng") + "/t"
+    val schema = StructType(Seq(StructField("doc", StringType), StructField("n", LongType)))
+    val v1 = Snapshots.commit(spark.createDataFrame(java.util.List.of[Row](), schema), root,
+      bloomCols = Seq("doc"))
+    assert(Snapshots.manifest(spark, root, v1).files.isEmpty)
+    // one file, then a keyed copy-on-write delete of every row it holds:
+    // the rewrite of the touched file has no survivors
+    val docs = spark.range(0, 50, 1, 1).select(format_string("doc%03d", col("id")).as("doc"),
+      col("id").as("n"))
+    val v2 = Snapshots.commit(docs, root, append = true, bloomCols = Seq("doc"))
+    assert(Snapshots.manifest(spark, root, v2).files.size === 1)
+    val v3 = Snapshots.delete(docs.select("doc"), root, "doc", bloomCols = Seq("doc"))
+    assert(v3 === v2 + 1)
+    assert(Snapshots.manifest(spark, root, v3).files.isEmpty)
+    assert(Snapshots.read(spark, root).count() === 0L)
+  }
+
+  test("the manifest records the writer's per-file row counts and the files' sizes") {
+    val root = "file:" + tmp("eng") + "/t"
+    withConf("spark.sql.files.maxRecordsPerFile" -> "300") {
+      Snapshots.commit(spark.range(0, 1000, 1, 2).toDF(), root)
+    }
+    val m = Snapshots.manifest(spark, root, Snapshots.headVersion(spark, root))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val onDisk = m.files.map { u =>
+      val p = new Path(u)
+      p.getName -> (spark.read.parquet(u).count(), fs.getFileStatus(p).getLen)
+    }.toMap
+    assert(m.rows.map(r => r.file -> (r.n, r.bytes)).toMap === onDisk)
+    assert(m.rows.map(_.n).sum === 1000L)
+  }
 }
