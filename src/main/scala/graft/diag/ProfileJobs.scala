@@ -13,14 +13,12 @@ object ProfileJobs {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "q95_histogram_quantiles")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val b0 = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.contains("SPARK_GRAFT_RAWFS"))
-      b0.config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-    else b0).getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val starts = TrieMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -150,7 +150,7 @@ private[engine] object BatchFiles {
       case t: Throwable =>
         if (w != null) scala.util.Try(w.abort())
         files.result().foreach { case (p, _) =>
-          scala.util.Try(new Path(p).getFileSystem(conf()).delete(new Path(p), false))
+          scala.util.Try(EngineFs.of(new Path(p), conf()).delete(new Path(p), false))
         }
         throw t
     }

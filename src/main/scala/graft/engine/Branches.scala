@@ -388,7 +388,7 @@ object Branches {
   def drop(spark: SparkSession, tableRoot: String, name: String): Unit = {
     require(name.matches("[A-Za-z0-9._-]+"), s"bad branch name '$name'")
     val dir = new Path(s"${Snapshots.dataRoot(tableRoot)}/_snapshots/refs/$name")
-    val f = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = EngineFs.of(spark, Snapshots.dataRoot(tableRoot))
     f.delete(dir, true)
     ()
   }

@@ -36,16 +36,13 @@ object Catalog {
   private val CatDir = "_catalog"
   private val ManifestRe = "manifest-(\\d+)\\.json".r
 
-  private def fs(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def manifestPath(catRoot: String, v: Long) =
     new Path(s"$catRoot/$CatDir/manifest-$v.json")
 
   /** Latest catalog version, 0 when none committed yet. */
   def headVersion(spark: SparkSession, catRoot: String): Long = {
     val dir = new Path(s"$catRoot/$CatDir")
-    val f = fs(spark, catRoot)
+    val f = EngineFs.of(spark, catRoot)
     if (!f.exists(dir)) 0L
     else f.listStatus(dir).toSeq
       .flatMap(st => ManifestRe.findFirstMatchIn(st.getPath.getName).map(_.group(1).toLong))
@@ -58,7 +55,7 @@ object Catalog {
     val v = if (version >= 0) version else headVersion(spark, catRoot)
     require(v > 0, s"no catalog snapshot committed at $catRoot yet")
     val p = manifestPath(catRoot, v)
-    val f = fs(spark, catRoot)
+    val f = EngineFs.of(spark, catRoot)
     require(f.exists(p), s"catalog snapshot $v does not exist at $catRoot")
     val in = f.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
@@ -75,7 +72,7 @@ object Catalog {
     * manifests only (small: name→(root, version) maps) — no table I/O. */
   def pinAsOf(spark: SparkSession, catRoot: String, tsMillis: Long): CatManifest = {
     val dir = new Path(s"$catRoot/$CatDir")
-    val f = fs(spark, catRoot)
+    val f = EngineFs.of(spark, catRoot)
     val versions =
       if (!f.exists(dir)) Seq.empty[Long]
       else f.listStatus(dir).toSeq
@@ -109,6 +106,7 @@ object Catalog {
       append: Boolean = true,
       statsCols: Map[String, Seq[String]] = Map.empty): Long = {
     require(batches.nonEmpty, "catalog commit needs at least one table batch")
+    EngineFs.install(spark.sparkContext)
     // member tables are independent roots: commit them CONCURRENTLY (the
     // snapshot layer supports concurrent same-session commits by design;
     // guide §2.6 — overlapping independent jobs back-fills each write's
@@ -173,7 +171,7 @@ object Catalog {
     * ([[Snapshots.atomicNoReplace]]): throws on filesystems where a racing
     * committer could silently overwrite a published catalog version. */
   private def tryWrite(spark: SparkSession, catRoot: String, m: CatManifest): Boolean = {
-    val f = fs(spark, catRoot)
+    val f = EngineFs.of(spark, catRoot)
     f.mkdirs(new Path(s"$catRoot/$CatDir"))
     val target = manifestPath(catRoot, m.version)
     val tmp = new Path(s"$catRoot/$CatDir/.tmp-${java.util.UUID.randomUUID()}")

@@ -65,16 +65,12 @@ object Checks {
   private def checksDir(root: String) =
     s"${Snapshots.dataRoot(root)}/_snapshots/checks"
 
-  private def fsOf(spark: SparkSession, root: String) =
-    new Path(Snapshots.dataRoot(root))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** (latest generation number, its rules) — (0, empty) when none. The
     * no-checks case is one existence probe of a dedicated directory, never
     * a listing of the table's manifest history. */
   private[engine] def listWithGen(
       spark: SparkSession, root: String): (Long, Seq[Rule]) = {
-    val f = fsOf(spark, root)
+    val f = EngineFs.of(spark, Snapshots.dataRoot(root))
     val dir = new Path(checksDir(root))
     if (!f.exists(dir)) return (0L, Seq.empty)
     val n = f.listStatus(dir).toSeq
@@ -267,7 +263,7 @@ object Checks {
   /** Optimistic create-if-absent publish of the next rules generation. */
   private def publishRules(
       spark: SparkSession, root: String, f: Seq[Rule] => Seq[Rule]): Unit = {
-    val fsys = fsOf(spark, root)
+    val fsys = EngineFs.of(spark, Snapshots.dataRoot(root))
     var done = false
     while (!done) {
       val (n, cur) = listWithGen(spark, root)

@@ -41,7 +41,7 @@ object Compact {
     require(Set("parquet", "orc").contains(format), s"compact supports parquet|orc, got $format")
     require(targetFileBytes > 0, "targetFileBytes must be > 0")
     val root = new Path(uri)
-    val filesystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val filesystem = EngineFs.of(spark, uri)
     // a streaming file-sink tree is read THROUGH its manifest; rewriting
     // files underneath it would leave the manifest pointing at deleted parts.
     // Retire the manifest first (freezing the stream) before compacting.

@@ -68,7 +68,7 @@ object ManifestFileIndex {
       val p = new Path(u)
       bytes.get(p).filter(_ >= 0L) match {
         case Some(known) => new FileStatus(known, false, 1, 0L, 0L, p)
-        case None => p.getFileSystem(conf).getFileStatus(p)
+        case None => EngineFs.of(p, conf).getFileStatus(p)
       }
     }
     new ManifestFileIndex(statuses.filter(_.getLen > 0))

@@ -18,8 +18,7 @@ object ObjectFormat {
   private val schemaFile = "_schema.json"
 
   def write(df: DataFrame, uri: String): Unit = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val fs = new Path(uri).getFileSystem(conf)
+    val fs = EngineFs.of(df.sparkSession, uri)
     fs.delete(new Path(uri), true)
     df.rdd.map(r => r.toSeq.toArray).saveAsObjectFile(uri)
     val out = fs.create(new Path(new Path(uri), schemaFile), true)
@@ -27,8 +26,7 @@ object ObjectFormat {
   }
 
   def read(spark: SparkSession, uri: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(uri).getFileSystem(conf)
+    val fs = EngineFs.of(spark, uri)
     val in = fs.open(new Path(new Path(uri), schemaFile))
     val schemaJson = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]

@@ -24,16 +24,13 @@ object S3Like {
 
   val formats: Set[String] = Set("csv", "parquet", "orc", "json", "xlsx", "object")
 
-  private def fs(spark: SparkSession, uri: String): FileSystem =
-    new Path(uri).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Key listing under a prefix with optional suffix filter (reference
     * `get_keys`, pandas_aws/s3.py:18-53: server-side Prefix + client-side
     * endswith + pagination). Hadoop's RemoteIterator does paginated listing;
     * we expose a lazy Iterator like the reference's generator. */
   def listKeys(spark: SparkSession, prefixUri: String, suffix: String = ""): Iterator[String] = {
     val p = new Path(prefixUri)
-    val filesystem = fs(spark, prefixUri)
+    val filesystem = EngineFs.of(spark, prefixUri)
     if (!filesystem.exists(p)) Iterator.empty
     else {
       val it = filesystem.listFiles(p, true)
@@ -79,6 +76,7 @@ object S3Like {
       partitionKeys: Seq[String] = Nil,
       zorderKeys: Seq[String] = Nil,
       options: Map[String, String] = Map.empty): Unit = {
+    EngineFs.install(df.sparkSession.sparkContext)
     require(parts > 0, "parts must be > 0")
     require(formats.contains(format), s"format $format not in $formats")
     compression.foreach(c => require(c == "gzip" && format == "csv",
@@ -141,7 +139,7 @@ object S3Like {
         val target = new Path(uri)
         val (stem, suffix) = stemAndSuffix(target.getName, "xlsx")
         val dir = new Path(target.getParent, stem)
-        val filesystem = fs(df.sparkSession, uri)
+        val filesystem = EngineFs.of(df.sparkSession, uri)
         clearParts(filesystem, dir, stem, suffix)
         Xlsx.writeParts(arranged, dir.toString, stem, suffix, parts)
       case "xlsx"   => Xlsx.write(arranged, outDir)
@@ -186,7 +184,7 @@ object S3Like {
   private def renameParts(
       spark: SparkSession, tmpDir: String, uri: String,
       format: String, compression: Option[String]): Unit = {
-    val filesystem = fs(spark, uri)
+    val filesystem = EngineFs.of(spark, uri)
     val gz = compression.map(_ => ".gz").getOrElse("")
     val partFiles = filesystem.listStatus(new Path(tmpDir))
       .map(_.getPath).filter(p => p.getName.startsWith("part-")).sortBy(_.getName)
@@ -294,7 +292,7 @@ object S3Like {
     * trailer) bytes of each object (the reference downloads and try-parses
     * whole objects serially). */
   private[engine] def sniffFormat(spark: SparkSession, uri: String): String = {
-    val filesystem = fs(spark, uri)
+    val filesystem = EngineFs.of(spark, uri)
     val len = filesystem.getFileStatus(new Path(uri)).getLen
     val in = filesystem.open(new Path(uri))
     val head = new Array[Byte](4)

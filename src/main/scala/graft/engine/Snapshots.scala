@@ -388,7 +388,7 @@ object Snapshots {
   def dropMetadata(spark: SparkSession, root: String): Unit = {
     require(!root.contains(RefSep),
       s"dropMetadata on branch-qualified '$root' — drop the branch instead")
-    fs(spark, root).delete(new Path(s"${dataRoot(root)}/$SnapDir"), true)
+    EngineFs.of(spark, dataRoot(root)).delete(new Path(s"${dataRoot(root)}/$SnapDir"), true)
     ()
   }
 
@@ -401,15 +401,12 @@ object Snapshots {
   /** Every manifest chain of the table: "" (main) plus each branch. */
   private[engine] def allRefs(spark: SparkSession, root: String): Seq[String] = {
     val refsDir = new Path(s"${dataRoot(root)}/$SnapDir/refs")
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     val branches =
       if (!f.exists(refsDir)) Seq.empty[String]
       else f.listStatus(refsDir).toSeq.filter(_.isDirectory).map(_.getPath.getName)
     "" +: branches.sorted
   }
-
-  private def fs(spark: SparkSession, root: String) =
-    new Path(dataRoot(root)).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def manifestPath(root: String, v: Long) =
     new Path(s"${refDir(root)}/manifest-$v.json")
@@ -417,7 +414,7 @@ object Snapshots {
   /** Latest committed version, 0 when the table has no snapshot yet. */
   def headVersion(spark: SparkSession, root: String): Long = {
     val dir = new Path(refDir(root))
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     if (!f.exists(dir)) 0L
     else
       f.listStatus(dir).toSeq
@@ -426,7 +423,7 @@ object Snapshots {
   }
 
   private[engine] def readText(spark: SparkSession, root: String, p: Path): String = {
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     val in = f.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
@@ -436,7 +433,7 @@ object Snapshots {
     * file list (tag scans, time-travel version selection, append carries). */
   def manifestMeta(spark: SparkSession, root: String, v: Long): ManifestMeta = {
     val p = manifestPath(root, v)
-    require(fs(spark, root).exists(p),
+    require(EngineFs.of(spark, dataRoot(root)).exists(p),
       s"snapshot $v does not exist at $root (vacuumed or never committed)")
     parseManifestMeta(readText(spark, root, p), p)
   }
@@ -616,11 +613,11 @@ object Snapshots {
 
   /** Whether version v's manifest is still retained (not vacuumed). */
   private[graft] def manifestExists(spark: SparkSession, root: String, v: Long): Boolean =
-    fs(spark, root).exists(manifestPath(root, v))
+    EngineFs.of(spark, dataRoot(root)).exists(manifestPath(root, v))
 
   private def retainedVersions(spark: SparkSession, root: String): Seq[Long] = {
     val dir = new Path(refDir(root))
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     if (!f.exists(dir)) Seq.empty
     else
       f.listStatus(dir).toSeq
@@ -1074,7 +1071,7 @@ object Snapshots {
     require(tag.nonEmpty, "idempotency tag must be non-empty")
     if (historyMeta(spark, root).exists(_.tag == tag)) {
       if (newFiles.nonEmpty)
-        fs(spark, root).delete(new Path(newFiles.head).getParent, true)
+        EngineFs.of(spark, dataRoot(root)).delete(new Path(newFiles.head).getParent, true)
       return None
     }
     val headV = headVersion(spark, root)
@@ -1170,7 +1167,7 @@ object Snapshots {
       val staged = staged0.select(staged0.columns.toSeq.map(c =>
         org.apache.spark.sql.functions.col(c).as(toLogical.getOrElse(c, c))): _*)
       Checks.findViolation(staged, rules, Some(logical)).foreach { case (rname, cnt) =>
-        fs(spark, root).delete(new Path(newFiles.head).getParent, true)
+        EngineFs.of(spark, dataRoot(root)).delete(new Path(newFiles.head).getParent, true)
         throw new IllegalArgumentException(
           s"check constraint violation rewriting $root: '$rname' ($cnt rows)")
       }
@@ -1230,7 +1227,7 @@ object Snapshots {
       "convertInPlace adopts a plain directory as a table's MAIN chain — fork a branch after")
     require(headVersion(spark, root) == 0,
       s"$root already has a snapshot history — convertInPlace adopts plain directories only")
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     def walk(p: Path): Seq[String] =
       f.listStatus(p).toSeq.flatMap { st =>
         val name = st.getPath.getName
@@ -1318,7 +1315,7 @@ object Snapshots {
       bloomPhysExtra: Seq[String] = Seq.empty): (Seq[String], Seq[ColStats], Seq[FileRows], Seq[FileBloom]) = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
     val spark = df.sparkSession
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     val commitId = java.util.UUID.randomUUID().toString.take(8)
     val dataDir = f.makeQualified(new Path(s"${dataRoot(root)}/data/c-$commitId")).toString
     // table CHECK constraints are counted in the write pass itself: each
@@ -1903,7 +1900,7 @@ object Snapshots {
       knownRows: Seq[FileRows] = Seq.empty,
       blooms: Seq[FileBloom] = Seq.empty,
       dvs: Seq[FileDv] = Seq.empty): ShardRef = {
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     f.mkdirs(new Path(s"${dataRoot(root)}/$SnapDir"))
     val known = knownRows.map(_.file).toSet
     val missing = files.filterNot(u => known.contains(new Path(u).getName))
@@ -2819,7 +2816,7 @@ object Snapshots {
             val conf = new org.apache.hadoop.conf.Configuration(false)
             confEntries.foreach { case (k, v) => conf.set(k, v) }
             val p = new Path(s"$snapDir/$name")
-            val os = p.getFileSystem(conf).create(p, false)
+            val os = EngineFs.of(p, conf).create(p, false)
             try os.write(renderShard(Seq.empty, Seq.empty, Seq.empty,
               Seq.empty, es).getBytes("UTF-8"))
             finally os.close()
@@ -4297,7 +4294,7 @@ object Snapshots {
       root: String,
       dropM: Seq[ManifestMeta],
       keepM: Seq[ManifestMeta]): Unit = {
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     // shards are shared across versions by reference — resolve each ONCE by
     // name (the history() stance); per-version manifest() calls would re-read
     // shared shards once per referencing version, O(versions × shards) small
@@ -4366,7 +4363,7 @@ object Snapshots {
     * eligible. Returns the number of files deleted; empty per-commit
     * directories are removed afterwards. */
   def vacuumOrphans(spark: SparkSession, root: String, graceMs: Long = 3600000L): Int = {
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     val dir = dataRoot(root)
     val dataDir = new Path(s"$dir/data")
     if (!f.exists(dataDir)) return 0
@@ -4418,7 +4415,7 @@ object Snapshots {
     * comes from the FileSystem (not the raw URI, whose scheme may be
     * absent). */
   private def tryWriteManifest(spark: SparkSession, root: String, m: ManifestMeta): Boolean = {
-    val f = fs(spark, root)
+    val f = EngineFs.of(spark, dataRoot(root))
     f.mkdirs(new Path(refDir(root)))
     val target = manifestPath(root, m.version)
     val tmp = new Path(s"${refDir(root)}/.tmp-${java.util.UUID.randomUUID()}")

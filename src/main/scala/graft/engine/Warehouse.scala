@@ -78,6 +78,7 @@ object Warehouse {
       columnTypes: Map[String, String] = Map.empty,
       columnConstraints: Map[String, String] = Map.empty,
       includeDateInsert: Boolean = false): Unit = {
+    EngineFs.install(spark.sparkContext)
     val parsable = df.schema.fields.flatMap(f =>
       SparkTypeNames.get(SchemaMap.toSqlType(f.dataType)).map(f.name -> _)).toMap
     spark.sql(SchemaMap.createTableDdl(df, table, parsable ++ columnTypes, columnConstraints,
@@ -95,6 +96,7 @@ object Warehouse {
       parts: Int = 0,
       dropFirst: Boolean = false,
       dateInsert: Option[java.sql.Timestamp] = None): Unit = {
+    EngineFs.install(spark.sparkContext)
     val normed = SchemaMap.normalizeColumns(df)
     val audited = dateInsert.fold(normed)(t => normed.withColumn("date_insert", lit(t)))
     if (dropFirst) spark.sql(s"DROP TABLE IF EXISTS ${SchemaMap.ident(table)}")
@@ -131,6 +133,7 @@ object Warehouse {
       updates: DataFrame,
       target: String,
       keys: Seq[String]): Unit = {
+    EngineFs.install(spark.sparkContext)
     require(keys.nonEmpty, "comparison_key must be non-empty")
     val tgt = SchemaMap.ident(target)
     val normed = SchemaMap.normalizeColumns(updates)

@@ -82,7 +82,7 @@ object Xlsx {
     * object) the moment row cap+1 streams in, rather than pre-counting. */
   def write(df: DataFrame, uri: String): Unit = {
     import scala.jdk.CollectionConverters._
-    val fs = new Path(uri).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = EngineFs.of(df.sparkSession, uri)
     val out = fs.create(new Path(uri), true)
     var ok = false
     try {
@@ -111,7 +111,7 @@ object Xlsx {
     val n = df.count()
     require(n <= parts.toLong * maxRows,
       s"xlsx export capped at $maxRows rows per part — use parquet/csv for large data")
-    val fs = new Path(dirUri).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = EngineFs.of(df.sparkSession, dirUri)
     val base = n / parts
     val extra = (n % parts).toInt
     val it = df.toLocalIterator().asScala
@@ -222,7 +222,7 @@ object Xlsx {
   /** Read one xlsx file into a DataFrame. Column types are inferred per
     * column (long → double → boolean → string), like pandas read_excel. */
   def read(spark: SparkSession, uri: String): DataFrame = {
-    val fs = new Path(uri).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = EngineFs.of(spark, uri)
     val in = fs.open(new Path(uri))
     val (header, cells) = try parseSheet(in) finally in.close()
     val inferred = header.indices.map { c =>

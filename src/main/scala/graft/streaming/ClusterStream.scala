@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.engine.EngineFs
 import graft.operators.Components
 
 /** Streaming dedup-cluster maintenance — the streaming-pipeline form of
@@ -54,7 +55,7 @@ object ClusterStream {
       batch: DataFrame, a: String, b: String, labelsDir: String): Unit = {
     val spark = batch.sparkSession
     val target = new Path(labelsDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = EngineFs.of(spark, labelsDir)
     val merged =
       if (fs.exists(target))
         Components.merge(spark.read.parquet(labelsDir), batch, a, b)

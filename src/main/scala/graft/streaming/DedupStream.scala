@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.engine.EngineFs
 import graft.functions.TextOps
 import graft.operators.MinHashLSH
 
@@ -70,7 +71,7 @@ object DedupStream {
     val fresh = MinHashLSH.bandKeys(MinHashLSH.signatures(sh)).localCheckpoint(true)
 
     val indexPath = new Path(indexDir)
-    val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = EngineFs.of(spark, indexDir)
     val old =
       if (fs.exists(indexPath))
         // partition-discovered `batch` column; exclude this trigger's own

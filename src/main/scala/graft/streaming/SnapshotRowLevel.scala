@@ -16,7 +16,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.engine.Snapshots
+import graft.engine.{EngineFs, Snapshots}
 
 /** GROUP-BASED (copy-on-write) row-level operations — what turns SQL
   * `UPDATE`, `MERGE INTO`, and rewriting `DELETE` into engine commits on
@@ -149,9 +149,8 @@ private[streaming] class SnapshotReplaceWrite(
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val p = new Path(stagingDir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(p, true) // staged files are unreferenced — plain cleanup
+    // staged files are unreferenced — plain cleanup
+    EngineFs.of(spark, stagingDir).delete(new Path(stagingDir), true)
   }
 }
 
@@ -204,8 +203,7 @@ private[streaming] class SnapshotStreamingWrite(
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val f = new Path(stagingDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = EngineFs.of(spark, stagingDir)
     messages.foreach {
       case m: SnapshotFileCommit if m.path != null =>
         f.delete(new Path(m.path), false)
@@ -265,8 +263,7 @@ private[streaming] class SnapshotUpsertStreamingWrite(
     val newFiles = messages.collect {
       case m: SnapshotFileCommit if m.path != null => m.path
     }.toSeq.sorted
-    val fsys = new Path(stagingDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fsys = EngineFs.of(spark, stagingDir)
     if (newFiles.isEmpty) { // an empty trigger applies nothing — and must
       fsys.delete(new Path(stagingDir), true) // not strand its staging dir
       return
@@ -350,8 +347,7 @@ private[streaming] class SnapshotUpsertStreamingWrite(
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val f = new Path(stagingDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = EngineFs.of(spark, stagingDir)
     // unlike the APPEND path (whose staging dir becomes live table data on
     // commit), upsert-staged input never outlives the epoch: the whole dir
     // is safe to drop, so long-running streams accumulate no debris
@@ -434,6 +430,7 @@ private[graft] object SnapshotParquetDataWriter {
     *    point predicates whose stats ranges cannot discriminate. */
   def writerConf(spark: SparkSession, schema: StructType,
       bloomCols: Seq[String] = Seq.empty): Configuration = {
+    EngineFs.install(spark.sparkContext) // before the session conf is copied
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val conf = job.getConfiguration
@@ -519,7 +516,7 @@ private[graft] class SnapshotParquetDataWriter(
     if (writer != null) {
       try writer.close() finally {
         val p = new Path(path)
-        p.getFileSystem(new Configuration()).delete(p, false)
+        EngineFs.of(p, conf()).delete(p, false)
       }
     }
 

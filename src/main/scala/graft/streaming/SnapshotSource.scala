@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.engine.{Snapshots, StatsPredicate}
+import graft.engine.{EngineFs, Snapshots, StatsPredicate}
 
 /** DataSource-V2 TABLE over a snapshot table — batch AND streaming reads
   * through one provider, so the manifest index stops being an API-only
@@ -1797,8 +1797,7 @@ private[streaming] object SnapshotFilePartition {
       }.toArray
     val maxBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    lazy val fs = new Path(withDv.head._1)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    lazy val fs = EngineFs.of(spark, withDv.head._1)
     withDv.flatMap { case (uri, dv) =>
       val len = fs.getFileStatus(new Path(uri)).getLen
       if (len <= maxBytes)
@@ -1941,7 +1940,7 @@ private[streaming] object SnapshotVectorized {
     val path = new Path(uri)
     val len =
       if (length >= 0) length
-      else path.getFileSystem(conf).getFileStatus(path).getLen - start
+      else EngineFs.of(path, conf).getFileStatus(path).getLen - start
     // mapred.FileSplit (extends the mapreduce one): Spark's reader base
     // casts the split to the legacy class internally
     val split = new org.apache.hadoop.mapred.FileSplit(

@@ -6,16 +6,18 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
-import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileSystem, Path}
 
-import graft.engine.{Catalog, CommitArbiter, Snapshots}
+import graft.engine.{Catalog, CommitArbiter, NioRawLocalFileSystem, Snapshots}
 
 /** A simulated object store: local bytes behind a scheme whose `rename`
   * REPLACES an existing destination (RawLocalFileSystem maps to rename(2) /
   * copy — the S3A/GCS connector shape, where rename is copy-then-delete
   * check-then-act) and whose only safe publish primitive is the store's
-  * conditional create. Registered as `s3sim://` via fs.s3sim.impl. */
-class SimObjectStoreFS extends RawLocalFileSystem {
+  * conditional create. Registered as `s3sim://` via fs.s3sim.impl. It is
+  * the engine's raw local FS under another scheme, so it starts no `chmod`
+  * process per create either. */
+class SimObjectStoreFS extends NioRawLocalFileSystem {
   override def getScheme: String = "s3sim"
   override def getUri: java.net.URI = java.net.URI.create("s3sim:///")
 }

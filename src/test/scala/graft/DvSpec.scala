@@ -244,6 +244,9 @@ class DvSpec extends SparkSpec {
     val root = tmp()
     Snapshots.commit(spark.range(0, 10).select($"id"), root)
     Snapshots.commit(spark.range(10, 20).select($"id"), root, append = true)
+    // v2 is stamped before its manifest is written; a publish can finish
+    // within that millisecond, so the cutoff must come strictly later
+    Thread.sleep(20)
     val midpoint = System.currentTimeMillis()
     Thread.sleep(20)
     Snapshots.commit(spark.range(20, 30).select($"id"), root, append = true)
